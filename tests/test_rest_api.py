@@ -1,5 +1,5 @@
 """REST API source (A4) over a REAL local HTTP server — proves the
-http_transport + mapInPandas fan-out path end to end (the container has
+http_transport + mapInArrow fan-out path end to end (the container has
 no external network; stdlib http.server stands in for the product API,
 SURVEY §7 Phase 4)."""
 
@@ -11,6 +11,7 @@ import threading
 import urllib.parse
 
 import pytest
+from pyspark.sql import functions as F
 
 from upc_sku_data_loader_spark.sources.rest_api import (
     fake_transport,
@@ -77,6 +78,17 @@ def test_fetch_products_over_real_http(spark):
     finally:
         server.shutdown()
         server.server_close()
+
+
+def test_fetch_products_fans_out_over_partitions(spark):
+    """100 pages land on min(n_pages, defaultParallelism) partitions; a
+    plain groupBy of the small page shuffle let AQE coalesce them into one."""
+    worklist = spark.createDataFrame([(f"{i:012d}",) for i in range(1000)], "upc string")
+    got = fetch_products(worklist, page_size=10).select(
+        "upc", F.spark_partition_id().alias("pid")
+    ).collect()
+    assert sorted(r["upc"] for r in got) == [f"{i:012d}" for i in range(1000)]
+    assert len({r["pid"] for r in got}) == min(100, spark.sparkContext.defaultParallelism)
 
 
 def test_token_bucket_rate_and_burst():

@@ -9,21 +9,30 @@ deterministic fake transport the WHOLE flow is a pure function of the
 worklist, so the registry exposes it as a hash-checked query: the oracle
 reproduces normalize + delta + payload + upsert in plain SQL.
 
+Jobs: (1) one aggregate builds and persists the keyed worklist (one row
+per normalized key: its raw-row count and whether the target already
+holds it) and returns the three audit counts; (2) the fetch + upsert
+stage reads the delta from that table, pages it, and runs the fetch and
+upsert kernels in one Python worker per page partition, capped at
+``max_connections``.  AQE splits each action into a job per shuffle
+stage.
+
 Scale: each stage is shuffle-bounded — normalize is map-only, the
-anti-join shuffles on the 13-digit key (broadcastable when the existing-
-key set is small), fetch parallelism = page count, the upsert fan-in is
-capped by ``max_connections``.  Nothing collects to the driver except
-the final audit counts.
+keyed worklist is one shuffle on the 13-digit key (worklist and existing
+keys together, so duplicate existing keys cost nothing), the upsert
+fan-in is capped by ``max_connections``.  Nothing collects to the driver
+except the audit counts.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 from ..functions.upc import upc_normalize
-from ..sources.db import ConnFactory, db_sink_upsert
-from ..sources.rest_api import Transport, fake_transport, fetch_products
+from ..sources.db import ConnFactory, _writer, upsert_sql
+from ..sources.rest_api import PRODUCT_SCHEMA, Transport, _fetcher, _pages, fake_transport
 
 
 def load_upcs(
@@ -41,40 +50,40 @@ def load_upcs(
 ) -> dict[str, int]:
     """Run the full load; returns audit counts (the reference's load
     accounting — SURVEY §3.2 step 5)."""
-    normalized = worklist.select(
-        upc_normalize(F.col(upc_col), width=13).alias("upc")
-    ).filter(F.length("upc") == 13)
-
-    deduped = normalized.dropDuplicates(["upc"])  # overlapping pages/batches
-    # cache: the delta worklist feeds both the audit count and the fetch;
-    # it is keys-only, so even a 100 TB load's delta fits executor storage
-    delta = deduped.join(
-        existing_keys.select(F.col("upc").alias("upc")), on="upc", how="left_anti"
-    ).persist()
-
-    products = fetch_products(
-        delta,
-        upc_col="upc",
-        page_size=page_size,
-        base_url=base_url,
-        transport=transport,
-        auth_token=auth_token,
+    raw = worklist.select(
+        upc_normalize(F.col(upc_col), width=13).alias("upc"),
+        F.lit(1).alias("rows"),
+        F.lit(False).alias("seen"),
     )
-
-    n_worklist = worklist.count()
-    n_delta = delta.count()
-    db_sink_upsert(
-        products,
-        conn_factory=conn_factory,
-        table=table,
-        key_cols=["upc"],
-        dialect=dialect,
-        max_connections=max_connections,
+    target = existing_keys.select("upc", F.lit(0).alias("rows"), F.lit(True).alias("seen"))
+    # one shuffle on the key: the target's keys ride along with rows=0, so
+    # their duplicates collapse and keys the worklist lacks drop out;
+    # keys-only, so even a 100 TB load's keyed worklist fits executor storage
+    keyed = (
+        raw.unionByName(target)
+        .groupBy("upc")
+        .agg(F.sum("rows").alias("rows"), F.max("seen").alias("seen"))
+        .filter(F.col("rows") > 0)
+        .persist()
     )
-    audit = {
-        "worklist_rows": n_worklist,
+    try:
+        valid = F.length("upc") == 13
+        n_worklist, n_keys, n_seen = keyed.agg(
+            F.sum("rows"), F.count_if(valid), F.count_if(valid & F.col("seen"))
+        ).first()
+        n_delta = n_keys - n_seen
+        delta = keyed.filter(valid & ~F.col("seen"))
+
+        fetch = _fetcher(base_url, transport, auth_token)
+        cols = DataType.fromDDL(PRODUCT_SCHEMA).fieldNames()
+        write = _writer(conn_factory, upsert_sql(dialect, table, cols, ["upc"]))
+        _pages(delta, "upc", page_size, n_delta).coalesce(max_connections).mapInArrow(
+            lambda pages: write(fetch(pages)), "rows long"
+        ).collect()
+    finally:
+        keyed.unpersist()
+    return {
+        "worklist_rows": n_worklist or 0,
         "delta_rows": n_delta,
-        "skipped_existing": deduped.count() - n_delta,
+        "skipped_existing": n_seen,
     }
-    delta.unpersist()
-    return audit

@@ -180,7 +180,7 @@ def a4_rest_api_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Worklist → paginated fetch (fake deterministic API) → typed rows.
 
     The oracle recomputes the API's pure payload function in SQL, so the
-    full pipeline — page assignment, mapInPandas fan-out, JSON parse,
+    full pipeline — page assignment, mapInArrow fan-out, JSON parse,
     schema projection — is value-hash-checked end to end.
     """
     worklist = (

@@ -3,10 +3,12 @@ empty tree §0.1; [D] BASELINE.json:7 "DataFrame write to JDBC sink").
 
 The reference's load step is "insert rows into MySQL, upsert by UPC".
 Spark has no MERGE mode on ``df.write.jdbc``, so the idempotent upsert
-is a ``foreachPartition`` writer executing batched
+is an Arrow writer kernel (``mapInArrow``) executing batched
 ``INSERT … ON CONFLICT/ON DUPLICATE KEY UPDATE`` through any DB-API
-driver.  This machine has no MySQL server and no JDBC jar (SURVEY §7
-Phase 4 risk), so:
+driver; it binds the same Python values a collected ``Row`` holds, and
+uses only ``cursor()``, ``executemany``, ``commit()`` and ``close()``.
+This machine has no MySQL server and no JDBC jar (SURVEY §7 Phase 4
+risk), so:
 
 - the **upsert writer** is dialect-pluggable and fully exercised against
   sqlite (stdlib) — same code path a mysql-connector would take;
@@ -25,10 +27,17 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator
 from typing import Any
 
-from pyspark.sql import DataFrame, Row, SparkSession
+import pyarrow as pa
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 #: connection_factory() -> DB-API connection (e.g. functools.partial(sqlite3.connect, path))
 ConnFactory = Callable[[], Any]
+
+#: rows per ``executemany`` + commit
+BATCH_SIZE = 1000
 
 
 def upsert_sql(dialect: str, table: str, cols: list[str], key_cols: list[str]) -> str:
@@ -61,13 +70,53 @@ def upsert_sql(dialect: str, table: str, cols: list[str], key_cols: list[str]) -
     raise ValueError(f"unknown dialect {dialect!r}")
 
 
+def _py_rows(batch: pa.RecordBatch) -> list[tuple]:
+    """The batch's rows as the Python values a collected ``Row`` holds:
+    None for NULL, and zone-aware timestamps as naive local wall time."""
+    cols = []
+    for col in batch.columns:
+        values = col.to_pylist()
+        if pa.types.is_timestamp(col.type) and col.type.tz is not None:
+            values = [v if v is None else v.astimezone().replace(tzinfo=None) for v in values]
+        cols.append(values)
+    return list(zip(*cols))
+
+
+def _writer(
+    conn_factory: ConnFactory, sql: str, batch_size: int = BATCH_SIZE
+) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
+    """Per-partition upsert kernel: executes ``sql`` over all the Arrow
+    batches, ``batch_size`` rows per ``executemany`` + commit, on one
+    connection; it emits no rows."""
+
+    def write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        pending: list[tuple] = []
+        conn = conn_factory()
+        try:
+            cur = conn.cursor()
+            for batch in batches:
+                pending.extend(_py_rows(batch))
+                while len(pending) >= batch_size:
+                    cur.executemany(sql, pending[:batch_size])
+                    conn.commit()
+                    del pending[:batch_size]
+            if pending:
+                cur.executemany(sql, pending)
+                conn.commit()
+        finally:
+            conn.close()
+        return iter(())
+
+    return write
+
+
 def db_sink_upsert(
     df: DataFrame,
     conn_factory: ConnFactory,
     table: str,
     key_cols: list[str],
     dialect: str = "sqlite",
-    batch_size: int = 1000,
+    batch_size: int = BATCH_SIZE,
     max_connections: int = 8,
 ) -> None:
     """A7: idempotent upsert of ``df`` keyed by ``key_cols``.
@@ -75,27 +124,8 @@ def db_sink_upsert(
     Safe under Spark task retries (re-running a partition rewrites the
     same final state).  ``max_connections`` caps DB fan-in.
     """
-    cols = df.columns
-    sql = upsert_sql(dialect, table, cols, key_cols)
-
-    def write_partition(rows: Iterator[Row]) -> None:
-        batch: list[tuple] = []
-        conn = conn_factory()
-        try:
-            cur = conn.cursor()
-            for row in rows:
-                batch.append(tuple(row[c] for c in cols))
-                if len(batch) >= batch_size:
-                    cur.executemany(sql, batch)
-                    conn.commit()
-                    batch.clear()
-            if batch:
-                cur.executemany(sql, batch)
-                conn.commit()
-        finally:
-            conn.close()
-
-    df.coalesce(max_connections).foreachPartition(write_partition)
+    write = _writer(conn_factory, upsert_sql(dialect, table, df.columns, key_cols), batch_size)
+    df.coalesce(max_connections).mapInArrow(write, "rows long").collect()
 
 
 def db_source(
@@ -103,9 +133,11 @@ def db_source(
 ) -> DataFrame:
     """A5 (DB-API fallback): read a query result into a DataFrame.
 
-    Driver-side fetch → ``createDataFrame`` — right for small worklists
-    and existing-key snapshots.  For large tables on a cluster, use
-    ``jdbc_source`` (partitioned parallel read) instead.
+    Driver-side fetch → an Arrow table typed by the DDL ``schema`` →
+    ``createDataFrame`` (a local relation; no Python worker starts) —
+    right for small worklists and existing-key snapshots.  For large
+    tables on a cluster, use ``jdbc_source`` (partitioned parallel read)
+    instead.
     """
     conn = conn_factory()
     try:
@@ -114,7 +146,10 @@ def db_source(
         rows = cur.fetchall()
     finally:
         conn.close()
-    return spark.createDataFrame(rows, schema=schema)
+    arrow_schema = to_arrow_schema(DataType.fromDDL(schema))
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    arrays = [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)]
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow_schema))
 
 
 def jdbc_source(

@@ -8,10 +8,13 @@ Spark-native shape:
      assignment shuffles instead of globally sorting (a window
      row_number over the whole worklist would funnel 100 TB through
      one partition);
-  2. ``mapInPandas`` fans the pages out across executor partitions —
-     each Python worker fetches its pages through a pluggable
-     ``transport`` and yields parsed records as Arrow batches;
-  3. the payload schema is pinned at the edge (SURVEY §1.1).
+  2. ``repartition(n_parts, "page_id")`` spreads the pages over
+     ``n_parts = min(n_pages, defaultParallelism)`` partitions, and the
+     page ``groupBy`` reuses that partitioning;
+  3. ``mapInArrow`` runs the fetch kernel on each partition — it fetches
+     its pages through a pluggable ``transport`` and yields parsed
+     records as Arrow batches;
+  4. the payload schema is pinned at the edge (SURVEY §1.1).
 
 Transport is injectable:
 - ``http_transport`` (stdlib urllib; retry with exponential backoff,
@@ -21,12 +24,12 @@ Transport is injectable:
   payload is a pure function of the UPC, so the whole pipeline is
   hash-checkable against a SQL oracle.
 
-Scale notes: pages-per-partition controls fetch parallelism
-(``repartition(n_workers)`` before the map); the auth token is fetched
-once driver-side and shipped in the closure (refresh-on-401 happens
-inside the worker); per-partition rate limiting via a token bucket in
-the transport keeps a 1000-executor fleet under the API's global
-budget.
+Scale notes: fetch parallelism is the explicit ``n_parts`` above (a plain
+``groupBy`` shuffle of page lists is small, and AQE would coalesce it
+into one partition); the auth token is fetched once driver-side and
+shipped in the closure (refresh-on-401 happens inside the worker); each
+fetch partition runs its own token bucket, so the global request budget
+is ``n_parts × rate_limit_per_s``.
 """
 
 from __future__ import annotations
@@ -39,10 +42,12 @@ import urllib.parse
 import urllib.request
 from collections.abc import Callable, Iterator
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 #: transport(url, headers) -> response body
 Transport = Callable[[str, dict[str, str]], str]
@@ -141,6 +146,52 @@ def http_transport(
     raise RuntimeError(f"GET {url} failed after {max_retries} retries") from last_err
 
 
+def _pages(worklist: DataFrame, upc_col: str, page_size: int, n: int) -> DataFrame:
+    """The ``n``-row worklist as (page_id, upcs) pages of about
+    ``page_size`` UPCs, spread over ``min(n_pages, defaultParallelism)``
+    partitions."""
+    n_pages = max(1, math.ceil(n / page_size))
+    n_parts = min(n_pages, worklist.sparkSession.sparkContext.defaultParallelism)
+    return (
+        worklist.select(F.col(upc_col).alias("upc"))
+        .withColumn("page_id", F.pmod(F.xxhash64("upc"), F.lit(n_pages)))
+        # an explicit count: AQE never coalesces it, and the groupBy below
+        # reuses it without a second exchange
+        .repartition(n_parts, "page_id")
+        .groupBy("page_id")
+        .agg(F.sort_array(F.collect_list("upc")).alias("upcs"))
+    )
+
+
+def _fetcher(
+    base_url: str,
+    transport: Transport,
+    auth_token: str | None,
+    rate_limit_per_s: float | None = None,
+    rate_burst: int = 4,
+) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
+    """Per-partition fetch kernel: batches of pages in, one Arrow batch of
+    PRODUCT_SCHEMA records out per non-empty page.  Built on the driver."""
+    schema = to_arrow_schema(DataType.fromDDL(PRODUCT_SCHEMA))
+
+    def fetch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        headers = {"Authorization": f"Bearer {auth_token}"} if auth_token else {}
+        bucket = (
+            TokenBucket(rate_limit_per_s, rate_burst) if rate_limit_per_s else None
+        )
+        for batch in batches:
+            for upcs in batch.column("upcs").to_pylist():
+                if bucket is not None:
+                    bucket.acquire()
+                url = f"{base_url}?upcs={','.join(upcs)}"
+                body = transport(url, headers)
+                records = [json.loads(line) for line in body.splitlines() if line]
+                if records:
+                    yield pa.RecordBatch.from_pylist(records, schema=schema)
+
+    return fetch
+
+
 def fetch_products(
     worklist: DataFrame,
     upc_col: str = "upc",
@@ -157,32 +208,8 @@ def fetch_products(
     One count() action sizes the page space; page membership is a pure
     hash of the UPC so the grouping is a normal shuffle (no global sort).
     ``rate_limit_per_s`` throttles each fetch partition with a token
-    bucket (global budget ≈ partitions × rate).
+    bucket (global budget = fetch partitions × rate).
     """
-    n = worklist.count()
-    n_pages = max(1, math.ceil(n / page_size))
-    pages = (
-        worklist.select(F.col(upc_col).alias("upc"))
-        .withColumn("page_id", F.pmod(F.xxhash64("upc"), F.lit(n_pages)))
-        .groupBy("page_id")
-        .agg(F.sort_array(F.collect_list("upc")).alias("upcs"))
-    )
-
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        headers = {"Authorization": f"Bearer {auth_token}"} if auth_token else {}
-        bucket = (
-            TokenBucket(rate_limit_per_s, rate_burst) if rate_limit_per_s else None
-        )
-        for pdf in batches:
-            for upcs in pdf["upcs"]:
-                if bucket is not None:
-                    bucket.acquire()
-                url = f"{base_url}?upcs={','.join(upcs)}"
-                body = transport(url, headers)
-                records = [json.loads(line) for line in body.splitlines() if line]
-                if records:
-                    yield pd.DataFrame.from_records(records)[
-                        ["upc", "sku", "brand", "price", "in_stock"]
-                    ]
-
-    return pages.mapInPandas(fetch, PRODUCT_SCHEMA)
+    fetch = _fetcher(base_url, transport, auth_token, rate_limit_per_s, rate_burst)
+    pages = _pages(worklist, upc_col, page_size, worklist.count())
+    return pages.mapInArrow(fetch, PRODUCT_SCHEMA)

@@ -4,6 +4,7 @@ MinHash-vs-exact-Jaccard agreement (SURVEY §5.3.3)."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -173,6 +174,45 @@ def test_dedup_clusters_driver_and_distributed_paths_agree(spark, monkeypatch):
         for r in D.dedup_clusters(pairs).collect()
     }
     assert fast == slow and len(fast) == 10
+
+
+@pytest.mark.parametrize("name", ["k2_dedup_near_minhash", "k73_incremental_dedup"])
+def test_verify_kernel_and_unfiltered_verify_agree(spark, sf_dir, monkeypatch, name):
+    """The CSR-prefiltered verify and the unfiltered exact verify above
+    its gate must emit identical rows (zero the gate to force the
+    fallback)."""
+    from upc_sku_data_loader_spark import plans  # noqa: F401
+    from upc_sku_data_loader_spark.operators import dedup as D
+    from upc_sku_data_loader_spark.registry import QUERIES
+
+    kernel = {tuple(r) for r in QUERIES[name](spark, sf_dir).collect()}
+    monkeypatch.setattr(D, "_VERIFY_KERNEL_MAX_DOCS", 0)
+    fallback = {tuple(r) for r in QUERIES[name](spark, sf_dir).collect()}
+    assert kernel == fallback and len(kernel) > 0
+
+
+def test_pair_intersect_counts_empty_b_segments(spark):
+    """Docs with an empty ``hs`` count 0 hits as the b side — mid-group,
+    as a group's trailing segment, and in a batch where every b-side
+    segment is empty."""
+    from upc_sku_data_loader_spark.operators import dedup as D
+
+    hs = {1: [10, 11, 12], 2: [], 3: [10, 12], 4: [], 5: [11]}
+    docs = spark.createDataFrame(list(hs.items()), "doc_id long, hs array<long>")
+
+    def expected(pairs):
+        return {
+            (a, b, len(set(hs[a]) & set(hs[b])), len(hs[a]), len(hs[b]))
+            for a, b in pairs
+        }
+
+    for pairs in (
+        [(1, 2), (1, 3), (1, 4), (3, 2), (3, 4), (5, 2), (5, 3)],
+        [(1, 2), (1, 4), (3, 2), (5, 4)],  # every b-side segment empty
+    ):
+        df = spark.createDataFrame(pairs, "a long, b long")
+        got = {tuple(r) for r in D._pair_intersect_counts(spark, df, docs).collect()}
+        assert got == expected(pairs)
 
 
 # --- k14b md5-simhash ---------------------------------------------------------

@@ -1,15 +1,11 @@
-"""Pin the window-rotation machinery: the pinned round-7/8/9/10 plans in
-``__spark_entry__`` and the ledger-driven planner in tools/window_plan.py
-(the round-8+ rotation strategy the r5 verdict endorsed).
+"""Pin the driver window: ``_PRIORITY`` in ``__spark_entry__`` is the
+ledger-driven planner's output (tools/window_plan.py) over the ledger
+frozen at ``WINDOW_ROUND - 1``.
 
-ROUND-IDEMPOTENCY CONTRACT (r8 verdict item 1): every assertion about a
-past round's planner output evaluates against a ledger FROZEN to the
-rounds that existed when that plan was pinned (``load_ledger(max_round=
-N-1)`` for a round-N pin).  The driver deposits a new CORRECTNESS_r{N}
-.json after every session; an unfrozen ledger made three r8-era pins go
-red the moment CORRECTNESS_r08.json landed.  These tests must stay green
-on a tree containing ANY number of future-round ledger files (proven by
-test_pins_survive_synthetic_future_round below).
+ROUND-IDEMPOTENCY CONTRACT: the driver deposits a new CORRECTNESS_r{N}
+.json after every session, so the pin reads a FROZEN ledger
+(``load_ledger(max_round=...)``) and must stay green on a tree holding
+any number of future-round ledger files.
 """
 
 from __future__ import annotations
@@ -27,193 +23,56 @@ from tools.window_plan import WINDOW, load_ledger, plan  # noqa: E402
 from upc_sku_data_loader_spark.registry import ORACLES, QUERIES  # noqa: E402
 
 
-def test_pinned_plans_partition_the_registry():
-    """r1-r6 windowed + r7 window + r8 spill + rows-only trio must cover
-    all 339 names exactly once (no gap, no overlap).  The r1-r6 group is
-    the names whose ledger entry ORIGINATED in rounds 1-6 (frozen via
-    max_round=6), not whose live latest-check round is <=6 — re-checks in
-    later rounds must not move a name out of its historical group."""
-    r1_r6 = set(load_ledger(max_round=6))
-    groups = [
-        r1_r6,
-        set(entrymod.ROUND7_PLAN),
-        set(entrymod.ROUND8_SPILL),
-        set(entrymod.ROWS_ONLY),
-    ]
-    union = set().union(*groups)
-    assert union == set(QUERIES), (
-        f"gap: {sorted(set(QUERIES) - union)}; extra: {sorted(union - set(QUERIES))}"
-    )
-    assert sum(len(g) for g in groups) == len(QUERIES), "overlap between groups"
-    assert entrymod._PRIORITY == entrymod.ROUND11_PLAN  # r11 rotation shipped verbatim
-    assert len(entrymod.ROUND7_PLAN) == WINDOW
-    assert len(entrymod.ROUND8_SPILL) == 3
-    # rows-only trio is exactly the un-oracled set
-    assert set(entrymod.ROWS_ONLY) == set(QUERIES) - set(ORACLES)
-
-
-def test_planner_round7_is_the_pinned_plan():
-    assert plan(7, load_ledger(max_round=6)) == entrymod.ROUND7_PLAN
-
-
-def test_pinned_round8_plan_matches_planner():
-    """ROUND8_PLAN is the planner's round-8 output over the ledger as it
-    stood after round 7 (CORRECTNESS_r07 landed 50/50 green on
-    ROUND7_PLAN).  Frozen at max_round=7 so later driver deposits can
-    never shift this historical pin."""
-    ledger = load_ledger(max_round=7)
-    assert plan(8, ledger) == entrymod.ROUND8_PLAN
-    assert entrymod.ROUND8_PLAN[:3] == entrymod.ROUND8_SPILL
-    assert len(set(entrymod.ROUND8_PLAN)) == WINDOW
-    assert all(n in ORACLES for n in entrymod.ROUND8_PLAN)
-
-
-def test_pinned_round9_plan_matches_planner():
-    """ROUND9_PLAN is the planner's round-9 output over the ledger as it
-    stood after round 8 (CORRECTNESS_r08 landed 50/50 green on
-    ROUND8_PLAN).  Frozen at max_round=8."""
-    ledger = load_ledger(max_round=8)
-    assert plan(9, ledger) == entrymod.ROUND9_PLAN
-    assert len(set(entrymod.ROUND9_PLAN)) == WINDOW
-    assert all(n in ORACLES for n in entrymod.ROUND9_PLAN)
-
-
-def test_pinned_round10_plan_matches_planner_under_green_r9():
-    """ROUND10_PLAN is the planner's round-10 output UNDER THE ASSUMPTION
-    that CORRECTNESS_r09 lands 50/50 green on ROUND9_PLAN (the shipped
-    window).  Any ROUND9_PLAN name missing a >=9 ledger entry is padded
-    green PER-NAME (a partially recorded round previously made this
-    assertion fail confusingly instead of pointing at the stale pin);
-    a recorded r9 RED is never overwritten — it correctly breaks the
-    pin, which must then be regenerated (reds outrank re-checks)."""
-    ledger = load_ledger(max_round=9)
-    for n in entrymod.ROUND9_PLAN:
-        if n not in ledger or ledger[n][0] < 9:
-            ledger[n] = (9, True)
-    assert plan(10, ledger) == entrymod.ROUND10_PLAN
-    assert len(set(entrymod.ROUND10_PLAN)) == WINDOW
-    assert all(n in ORACLES for n in entrymod.ROUND10_PLAN)
-
-
-def test_pinned_round11_plan_matches_planner_under_green_r9_r10():
-    """ROUND11_PLAN is the planner's round-11 output UNDER THE ASSUMPTION
-    that CORRECTNESS_r09 and CORRECTNESS_r10 land 50/50 green on the
-    shipped ROUND9_PLAN / ROUND10_PLAN.  Missing future results are
-    padded green PER-NAME (any plan name without a >=9 / >=10 entry),
-    so a partially recorded round can't make this fail confusingly; a
-    recorded red is never overwritten — it correctly breaks the pin,
-    which must then be regenerated (reds outrank re-checks)."""
-    ledger = load_ledger(max_round=10)
-    for n in entrymod.ROUND9_PLAN:
-        if n not in ledger or ledger[n][0] < 9:
-            ledger[n] = (9, True)
-    for n in entrymod.ROUND10_PLAN:
-        if n not in ledger or ledger[n][0] < 10:
-            ledger[n] = (10, True)
-    assert plan(11, ledger) == entrymod.ROUND11_PLAN
-    assert len(set(entrymod.ROUND11_PLAN)) == WINDOW
-    assert all(n in ORACLES for n in entrymod.ROUND11_PLAN)
-
-
-def test_pinned_round12_plan_matches_planner_under_green_r10_r11():
-    """ROUND12_PLAN is the planner's round-12 output UNDER THE ASSUMPTION
-    that CORRECTNESS_r10 and CORRECTNESS_r11 land 50/50 green on the
-    shipped ROUND10_PLAN / ROUND11_PLAN.  Missing future results are
-    padded green PER-NAME (any plan name without a >=10 / >=11 entry);
-    a recorded red is never overwritten — it correctly breaks the pin,
-    which must then be regenerated (reds outrank re-checks)."""
-    ledger = load_ledger(max_round=11)
-    for n in entrymod.ROUND10_PLAN:
-        if n not in ledger or ledger[n][0] < 10:
-            ledger[n] = (10, True)
-    for n in entrymod.ROUND11_PLAN:
-        if n not in ledger or ledger[n][0] < 11:
-            ledger[n] = (11, True)
-    assert plan(12, ledger) == entrymod.ROUND12_PLAN
-    assert len(set(entrymod.ROUND12_PLAN)) == WINDOW
-    assert all(n in ORACLES for n in entrymod.ROUND12_PLAN)
-
-
-def test_pinned_round13_plan_matches_planner_under_green_r10_r11_r12():
-    """ROUND13_PLAN is the planner's round-13 output UNDER THE ASSUMPTION
-    that CORRECTNESS_r10/r11/r12 land 50/50 green on the shipped
-    ROUND10_PLAN / ROUND11_PLAN / ROUND12_PLAN.  Missing future results
-    are padded green PER-NAME (any plan name without a >=10/>=11/>=12
-    entry); a recorded red is never overwritten — it correctly breaks the
-    pin, which must then be regenerated (reds outrank re-checks)."""
-    ledger = load_ledger(max_round=12)
-    for rnd, plan_names in (
-        (10, entrymod.ROUND10_PLAN),
-        (11, entrymod.ROUND11_PLAN),
-        (12, entrymod.ROUND12_PLAN),
-    ):
-        for n in plan_names:
-            if n not in ledger or ledger[n][0] < rnd:
-                ledger[n] = (rnd, True)
-    assert plan(13, ledger) == entrymod.ROUND13_PLAN
-    assert len(set(entrymod.ROUND13_PLAN)) == WINDOW
-    assert all(n in ORACLES for n in entrymod.ROUND13_PLAN)
-
-
-def test_planner_round8_shape():
-    """Round-8 window over the frozen post-r7 ledger: 50 unique
-    hash-checkable names, spill trio first, never-windowed/red before any
-    green re-check."""
-    ledger = load_ledger(max_round=7)
-    window = plan(8, ledger)
-    assert len(window) == WINDOW
+def test_pinned_window_is_the_planner_output():
+    window = plan(load_ledger(max_round=entrymod.WINDOW_ROUND - 1))
+    assert window == entrymod._PRIORITY
     assert len(set(window)) == WINDOW
-    assert window[:3] == entrymod.ROUND8_SPILL
     assert all(n in ORACLES for n in window)  # never a rows-only slot
-    # a green name may only appear after every never-windowed name
-    greens = [n for n in window if n in ledger and ledger[n][1]]
-    nevers = [n for n in window if n not in ledger and n not in entrymod.ROUND8_SPILL]
-    if greens and nevers:
-        assert max(window.index(n) for n in nevers) < min(window.index(n) for n in greens)
 
 
 def test_pins_survive_synthetic_future_round(tmp_path):
-    """Regression for the r8 red: the historical pins must hold on a tree
-    that ALREADY contains future-round ledger files (the state every
-    judged tree is actually in).  Copy the real ledger, deposit a
-    synthetic far-future round that flips every round-9-window name red,
-    and re-evaluate every frozen pin against the polluted tree."""
+    """A far-future round that flips the pinned window red must not move
+    the frozen result, while the unfrozen load does see it."""
     for path in sorted(REPO.glob("CORRECTNESS_r*.json")):
         shutil.copy(path, tmp_path / path.name)
     fake = {
         n: {"rows_match": True, "schema_match": True, "hash_match": False}
-        for n in entrymod.ROUND9_PLAN
+        for n in entrymod._PRIORITY
     }
     (tmp_path / "CORRECTNESS_r99.json").write_text(json.dumps(fake))
 
-    # frozen loads ignore the future file entirely
-    assert load_ledger(tmp_path, max_round=6) == load_ledger(max_round=6)
-    assert load_ledger(tmp_path, max_round=7) == load_ledger(max_round=7)
-    assert load_ledger(tmp_path, max_round=8) == load_ledger(max_round=8)
-
-    # every historical pin still holds against the polluted tree
-    assert plan(7, load_ledger(tmp_path, max_round=6)) == entrymod.ROUND7_PLAN
-    assert plan(8, load_ledger(tmp_path, max_round=7)) == entrymod.ROUND8_PLAN
-    assert plan(9, load_ledger(tmp_path, max_round=8)) == entrymod.ROUND9_PLAN
-
-    # and the unfrozen load DOES see the future round (sanity: the freeze
-    # is what protects the pins, not the loader ignoring files)
+    frozen = entrymod.WINDOW_ROUND - 1
+    assert load_ledger(tmp_path, max_round=frozen) == load_ledger(max_round=frozen)
+    assert plan(load_ledger(tmp_path, max_round=frozen)) == entrymod._PRIORITY
     live = load_ledger(tmp_path)
-    assert all(live[n] == (99, False) for n in entrymod.ROUND9_PLAN)
+    assert all(live[n] == (99, False) for n in entrymod._PRIORITY)
+
+
+def _synthetic_ledger() -> tuple[list[str], dict[str, tuple[int, bool]]]:
+    eligible = [n for n in QUERIES if n in ORACLES]
+    return eligible, {n: (1 + (i % 5), True) for i, n in enumerate(eligible)}
+
+
+def test_never_windowed_precede_greens():
+    eligible, ledger = _synthetic_ledger()
+    never = eligible[-3:]
+    for n in never:
+        del ledger[n]
+    window = plan(ledger)
+    assert window[:3] == sorted(never)  # alphabetical
+    assert all(ledger[n][1] for n in window[3:])
 
 
 def test_planner_recheck_order_is_oldest_green_first():
-    """With a synthetic full ledger, re-checks must come oldest-round-first
-    and a red name must outrank every green."""
-    eligible = [n for n in QUERIES if n in ORACLES]
-    ledger = {n: (1 + (i % 5), True) for i, n in enumerate(eligible)}
-    red = eligible[-1]
-    ledger[red] = (5, False)
-    window = plan(8, ledger)
-    # exact expected prefix: live spill trio (ledger-red spill names, in
-    # pinned order), then the red name — nothing else may precede a red
-    spill_live = [n for n in entrymod.ROUND8_SPILL if not ledger[n][1]]
-    expected_prefix = spill_live + ([red] if red not in spill_live else [])
-    assert window[: len(expected_prefix)] == expected_prefix
-    rounds = [ledger[n][0] for n in window if n != red and ledger[n][1]]
-    assert rounds == sorted(rounds), "green re-checks must be oldest-first"
+    """Reds outrank every green; green re-checks come oldest round first,
+    alphabetical within a round."""
+    eligible, ledger = _synthetic_ledger()
+    reds = [eligible[len(eligible) // 2], eligible[-1]]
+    for n in reds:
+        ledger[n] = (5, False)
+    window = plan(ledger)
+    assert window[:2] == reds  # registry order
+    greens = window[2:]
+    assert len(window) == WINDOW
+    assert greens == sorted(greens, key=lambda n: (ledger[n][0], n))
+    assert ledger[greens[0]][0] == 1

@@ -33,9 +33,8 @@ def main() -> int:
             f"{group}: n={len(names)}  sum_min {sb:.1f}s -> {sa:.1f}s "
             f"({sa / sb:.2f}x)" if sb else f"{group}: n=0"
         )
-    rows = sorted(common, key=lambda n: before[n] - after[n])
     print("\nbiggest regressions (after - before):")
-    for n in rows[:1] and sorted(common, key=lambda n: after[n] - before[n], reverse=True)[:10]:
+    for n in sorted(common, key=lambda n: after[n] - before[n], reverse=True)[:10]:
         print(f"  {n:40s} {before[n]:7.2f} -> {after[n]:7.2f}")
     print("\nbiggest improvements:")
     for n in sorted(common, key=lambda n: before[n] - after[n], reverse=True)[:10]:

@@ -1,23 +1,20 @@
-"""Compute the next round's driver verification window from the ledger.
+"""Compute the next driver verification window from the ledger.
 
 The grading driver hash-checks the first 50 entries of ``queries()``
-each round (CORRECTNESS_r{N}.json holds exactly those names).  Rounds
-1-7 rotate so every hash-checkable registry entry is windowed at least
-once; from round 8 on the window is maintenance: spill trio first, then
-any currently-red names, then re-checks of whichever names' latest
-driver-green is OLDEST, so the "green in latest check" property stays
-fresh across the whole 339-entry registry instead of aging out.
+(each CORRECTNESS_r{N}.json holds exactly those names).  The window is
+derived from the recorded CORRECTNESS_r*.json ledger alone: currently-red
+names first, then never-windowed names (alphabetical), then re-checks of
+the names whose latest driver-green is OLDEST, so the "green in latest
+check" property stays fresh across the whole registry.  Rows-only
+entries (no oracle) are never eligible.
 
-This tool derives that ordering mechanically from the recorded
-CORRECTNESS_r*.json files plus the pinned plans in ``__spark_entry__``
-(ROUND7_PLAN / ROUND8_SPILL), so a future round's rotation is a
-copy-paste of this tool's output into ``_PRIORITY`` rather than a
-hand-derivation.
+Rotating the window is a copy-paste of this tool's output into
+``_PRIORITY`` and ``WINDOW_ROUND`` in ``__spark_entry__.py``, followed by
+``python tools/driver_fetch_replay.py``.
 
 Usage:
     python tools/window_plan.py --audit        # ledger summary only
-    python tools/window_plan.py --round 8      # print the round-8 window
-    python tools/window_plan.py                # next unrecorded round
+    python tools/window_plan.py                # print the next window
 """
 
 from __future__ import annotations
@@ -31,7 +28,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-import __spark_entry__ as entrymod  # noqa: E402
+from upc_sku_data_loader_spark import plans  # noqa: F401,E402  (populates registry)
 from upc_sku_data_loader_spark.registry import ORACLES, QUERIES  # noqa: E402
 
 WINDOW = 50
@@ -42,11 +39,9 @@ def load_ledger(
 ) -> dict[str, tuple[int, bool]]:
     """name -> (latest windowed round, green in that latest check).
 
-    ``max_round`` freezes the ledger to rounds <= N.  Historical pin tests
-    MUST pass it (rounds < the pinned round): the live tree gains a new
-    CORRECTNESS_r{N}.json after every driver run, so an unfrozen ledger
-    makes any assertion about a past round's planner output go stale the
-    moment the next round's results land (the r8 verdict's one red).
+    ``max_round`` freezes the ledger to rounds <= N: the tree gains a new
+    CORRECTNESS_r{N}.json after every driver run, so an assertion about
+    the pinned window must read the ledger as it stood when it was pinned.
     """
     ledger: dict[str, tuple[int, bool]] = {}
     for path in sorted(repo.glob("CORRECTNESS_r*.json")):
@@ -70,36 +65,21 @@ def load_ledger(
     return ledger
 
 
-def plan(round_no: int, ledger: dict[str, tuple[int, bool]]) -> list[str]:
-    """The window for `round_no`, given a ledger recorded through round_no-1."""
-    eligible = [n for n in QUERIES if n in ORACLES]  # rows-only never eligible
-    if round_no <= 6:
-        raise SystemExit(
-            f"round {round_no} windows were hand-pinned; this tool plans round 7+"
-        )
-    if round_no == 7:
-        return list(entrymod.ROUND7_PLAN)
-
+def plan(ledger: dict[str, tuple[int, bool]]) -> list[str]:
+    """The next window: reds, never-windowed, then oldest-green re-checks."""
+    eligible = [n for n in QUERIES if n in ORACLES]
     reds = [n for n in eligible if n in ledger and not ledger[n][1]]
-    never = [n for n in eligible if n not in ledger]
-    spill = [n for n in entrymod.ROUND8_SPILL if n not in ledger or not ledger[n][1]]
+    never = sorted(n for n in eligible if n not in ledger)
     # oldest driver-green first; alphabetical within a round for determinism
     greens = sorted(
         (n for n in eligible if n in ledger and ledger[n][1]),
         key=lambda n: (ledger[n][0], n),
     )
-    window: list[str] = []
-    for name in spill + reds + sorted(never) + greens:
-        if name not in window:
-            window.append(name)
-        if len(window) == WINDOW:
-            break
-    return window
+    return (reds + never + greens)[:WINDOW]
 
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--round", type=int, default=None)
     ap.add_argument("--audit", action="store_true")
     args = ap.parse_args()
 
@@ -124,9 +104,9 @@ def main() -> int:
             print(f"#   latest-green in r{rnd}: {by_round[rnd]} names")
         return 0
 
-    round_no = args.round if args.round is not None else (max(recorded) + 1 if recorded else 7)
-    window = plan(round_no, ledger)
-    print(f"# round-{round_no} window ({len(window)} names) — paste into _PRIORITY:")
+    window = plan(ledger)
+    print(f"# next window ({len(window)} names) — paste into __spark_entry__.py:")
+    print(f"WINDOW_ROUND = {max(recorded, default=0) + 1}")
     print("_PRIORITY = [")
     for i in range(0, len(window), 3):
         print("    " + ", ".join(f'"{n}"' for n in window[i : i + 3]) + ",")

@@ -585,7 +585,7 @@ def _pair_intersect_counts(
     kernel as a shared helper: broadcast the corpus's pre-hashed
     shingle CSR, stream pairs sorted by ``a``, build each ``a`` row's
     boolean vocab LUT once and count every paired ``b`` row in one
-    ragged gather + reduceat (no per-row Python).  ``dedup=True`` drops
+    ragged gather + bincount (no per-row Python).  ``dedup=True`` drops
     duplicate (a, b) pairs — they arrive consecutive after the sort —
     so callers can skip a dedicated distinct Exchange (k18's pattern,
     including the batch-boundary carry).  Caller gates on CSR bytes;
@@ -642,7 +642,12 @@ def _pair_intersect_counts(
                     - np.repeat(offs, seg)
                     + np.repeat(starts, seg)
                 )
-                inter[s0:s1] = np.add.reduceat(lut[ind[pos]], offs)
+                # bincount, not reduceat: reduceat yields x[offs[i]] for an
+                # empty b segment (and IndexError when a trailing one is)
+                seg_id = np.repeat(np.arange(len(seg)), seg)
+                inter[s0:s1] = np.bincount(
+                    seg_id[lut[ind[pos]]], minlength=len(seg)
+                )
                 lut[arow] = False
             yield pd.DataFrame(
                 {

@@ -1048,7 +1048,7 @@ def k43_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     overflow (mass ≤ total rank mass ≈ 1e12, ×17 ≪ 2^63).  Above the
     gate the distributed loop runs unchanged off the same checkpoint —
     the right plan at 100 TB.  Both paths pinned equal by a
-    gate-zeroing pytest (tests/test_training_kernels.py).  Measured
+    gate-zeroing pytest (tests/test_training.py).  Measured
     (noop min-of-5, sf0.1, interleaved): 6.74 s loop → 4.53 s
     checkpointed loop → 1.94 s driver kernel."""
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")

@@ -1,6 +1,7 @@
 """load_upcs (the reference's whole flow): exact audit counts, final
 table state, and no persisted blocks left behind — on success and when
-the transport raises."""
+the transport raises; at most two Spark jobs per call; and no connection
+or request when there is nothing to load."""
 
 from __future__ import annotations
 
@@ -12,7 +13,7 @@ import urllib.parse
 import pytest
 
 from upc_sku_data_loader_spark.pipelines.etl import load_upcs
-from upc_sku_data_loader_spark.sources.db import db_source
+from upc_sku_data_loader_spark.sources.db import db_sink_upsert, db_source
 from upc_sku_data_loader_spark.sources.rest_api import fake_transport
 
 WORKLIST = [
@@ -26,6 +27,7 @@ WORKLIST = [
     "5555-66667777",
 ]
 OMITTED = "0999988887777"
+KEYS = ["0000000001234", "0000123456789", OMITTED, "0111122223333", "0555566667777"]
 LOADED = ["0000000001234", "0000123456789", "0111122223333", "0555566667777"]
 
 
@@ -100,3 +102,59 @@ def test_load_upcs_unpersists_when_the_transport_raises(spark, target):
     with pytest.raises(Exception, match="product API down"):
         load_upcs(worklist, existing, factory, transport=failing)
     assert _resident(spark) <= before
+
+
+def test_load_upcs_runs_at_most_two_jobs(spark, target):
+    """One shuffle and one kernel: the shuffle's map stage and the
+    kernel's collect are the only jobs a DataFrame worklist starts."""
+    sc = spark.sparkContext
+    factory = functools.partial(sqlite3.connect, target, timeout=60.0)
+    worklist = spark.createDataFrame([(u,) for u in WORKLIST], "upc_raw string")
+    existing = spark.createDataFrame([], "upc string")
+    group = "test_load_upcs_runs_at_most_two_jobs"
+    sc.setJobGroup(group, "load_upcs")
+    try:
+        audit = load_upcs(worklist, existing, factory, page_size=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert audit == {"worklist_rows": 8, "delta_rows": 5, "skipped_existing": 0}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+
+
+@pytest.mark.parametrize(
+    "rows, existing, audit",
+    [
+        (WORKLIST, KEYS, {"worklist_rows": 8, "delta_rows": 0, "skipped_existing": 5}),
+        ([], KEYS, {"worklist_rows": 0, "delta_rows": 0, "skipped_existing": 0}),
+        ([], [], {"worklist_rows": 0, "delta_rows": 0, "skipped_existing": 0}),
+        ([None] * 3, [], {"worklist_rows": 3, "delta_rows": 0, "skipped_existing": 0}),
+    ],
+    ids=["all-existing", "empty-worklist", "empty-shuffle", "null-upcs"],
+)
+def test_nothing_to_load_opens_no_connection(spark, target, rows, existing, audit):
+    """An empty delta makes no request, and every partition's writer,
+    having nothing to upsert, opens no connection."""
+    sc = spark.sparkContext
+    conns, requests = sc.accumulator(0), sc.accumulator(0)
+
+    def factory():
+        conns.add(1)
+        return sqlite3.connect(target, timeout=60.0)
+
+    def counting(url, headers=None):
+        requests.add(1)
+        return fake_transport(url, headers)
+
+    con = sqlite3.connect(target)
+    con.executemany(
+        "INSERT INTO products VALUES (?, 'SEED', 'SEED', 0.0, 0)", [(k,) for k in existing]
+    )
+    con.commit()
+    con.close()
+    before = _products(target)
+    worklist = spark.createDataFrame([(u,) for u in rows], "upc_raw string")
+    keys = spark.createDataFrame([(k,) for k in existing], "upc string")
+    assert load_upcs(worklist, keys, factory, page_size=2, transport=counting) == audit
+    db_sink_upsert(spark.createDataFrame([], "upc string"), factory, "products", ["upc"])
+    assert (conns.value, requests.value) == (0, 0)
+    assert _products(target) == before

@@ -81,8 +81,9 @@ def test_fetch_products_over_real_http(spark):
 
 
 def test_fetch_products_fans_out_over_partitions(spark):
-    """100 pages land on min(n_pages, defaultParallelism) partitions; a
-    plain groupBy of the small page shuffle let AQE coalesce them into one."""
+    """The fetch runs on every one of the worklist's defaultParallelism
+    hash partitions (at most 100 here, one per page); a shuffle AQE may
+    coalesce would fold this small worklist into one partition."""
     worklist = spark.createDataFrame([(f"{i:012d}",) for i in range(1000)], "upc string")
     got = fetch_products(worklist, page_size=10).select(
         "upc", F.spark_partition_id().alias("pid")

@@ -25,6 +25,7 @@ from ..functions.multimodal import (
     with_binary_payload,
 )
 from ..operators.dedup import (
+    _pair_intersect_counts,
     dedup_clusters,
     shingle_base,
     simhash,
@@ -1122,11 +1123,11 @@ def _k18_build(
     # array through pair-keyed joins — per-pair array_intersect alone
     # measured ~200 s there (it allocates the intersection array when
     # only its SIZE is needed).  Instead the rep gram sets are packed
-    # once into a dense-id CSR (vocab is np.unique of the gram hashes)
-    # and broadcast (~60 MB at 50k reps); a mapInPandas kernel streams
-    # the 16-byte pairs sorted by `a`, builds a boolean vocab LUT per
+    # once into a dense-id CSR and broadcast (~60 MB at 50k reps); the
+    # shared kernel (operators/dedup._pair_intersect_counts) streams the
+    # 16-byte pairs sorted by `a`, builds a boolean vocab LUT per
     # `a`-group, and counts hits for all its `b` rows in one ragged
-    # gather + reduceat (no per-row Python work — the k3 lesson).  Only
+    # gather + bincount (no per-row Python work — the k3 lesson).  Only
     # integer intersect sizes come back; the jaccard division, the ≥t
     # filter and the 6-dp round stay in Spark SQL so the arithmetic is
     # bit-identical to the pure-SQL path below.
@@ -1152,78 +1153,8 @@ def _k18_build(
     # undercounted peak memory by up to ~50% near the ceiling)
     csr_bytes = 2 * (5 * n_gram_occ + 32 * n_reps)
     if n_reps <= _K18_KERNEL_MAX_REPS and csr_bytes <= _K18_KERNEL_MAX_BYTES:
-        import numpy as np
-        import pandas as pd
-
-        tbl = g.select("doc_id", "grams").toArrow()
-        doc_ids = tbl["doc_id"].to_numpy()
-        lists = tbl["grams"].combine_chunks()
-        flat = lists.flatten().to_numpy()
-        offsets = lists.offsets.to_numpy().astype(np.int64)
-        indptr = offsets - offsets[0]  # flatten() re-bases a sliced array
-        vocab, dense = np.unique(flat, return_inverse=True)
-        indices = dense.astype(np.uint32)
-        perm = np.argsort(doc_ids)
-        ids_sorted = doc_ids[perm]
-        bc = spark.sparkContext.broadcast(
-            (ids_sorted, perm.astype(np.int64), indptr, indices, len(vocab))
-        )
-
-        def intersect_sizes(batches):
-            ids_s, pm, ip, ind, nvocab = bc.value
-            lut = np.zeros(nvocab, dtype=bool)
-            prev_a = prev_b = None  # last pair of the previous batch
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                a = pdf["a"].to_numpy()
-                b = pdf["b"].to_numpy()
-                # input arrives sorted by (a, b) within the partition, so
-                # duplicate witnesses of a pair are consecutive; drop them
-                # here instead of a dedicated 67.9M-row distinct shuffle
-                keep = np.r_[True, (a[1:] != a[:-1]) | (b[1:] != b[:-1])]
-                if prev_a is not None and a[0] == prev_a and b[0] == prev_b:
-                    keep[0] = False
-                prev_a, prev_b = int(a[-1]), int(b[-1])
-                if not keep.all():
-                    a, b = a[keep], b[keep]
-                if not len(a):
-                    continue
-                ra = pm[np.searchsorted(ids_s, a)]
-                rb = pm[np.searchsorted(ids_s, b)]
-                inter = np.zeros(len(a), dtype=np.int64)
-                bounds = np.flatnonzero(np.r_[True, a[1:] != a[:-1], True])
-                for gi in range(len(bounds) - 1):
-                    s0, s1 = int(bounds[gi]), int(bounds[gi + 1])
-                    arow = ind[ip[ra[s0]] : ip[ra[s0] + 1]]
-                    lut[arow] = True
-                    rbs = rb[s0:s1]
-                    starts = ip[rbs]
-                    seg = ip[rbs + 1] - starts
-                    offs = np.cumsum(seg) - seg
-                    pos = (
-                        np.arange(int(seg.sum()), dtype=np.int64)
-                        - np.repeat(offs, seg)
-                        + np.repeat(starts, seg)
-                    )
-                    inter[s0:s1] = np.add.reduceat(lut[ind[pos]], offs)
-                    lut[arow] = False
-                yield pd.DataFrame(
-                    {
-                        "a": a,
-                        "b": b,
-                        "inter": inter,
-                        "sza": ip[ra + 1] - ip[ra],
-                        "szb": ip[rb + 1] - ip[rb],
-                    }
-                )
-
-        stats = (
-            cands.repartition(spark.sparkContext.defaultParallelism, "a")
-            .sortWithinPartitions("a", "b")
-            .mapInPandas(
-                intersect_sizes, "a long, b long, inter long, sza long, szb long"
-            )
+        stats = _pair_intersect_counts(
+            spark, cands, g.select("doc_id", F.col("grams").alias("hs")), dedup=True
         )
         inter = F.col("inter").cast("double")
         union = (F.col("sza") + F.col("szb")).cast("double") - inter

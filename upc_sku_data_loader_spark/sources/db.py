@@ -82,29 +82,43 @@ def _py_rows(batch: pa.RecordBatch) -> list[tuple]:
     return list(zip(*cols))
 
 
+def _row_chunks(
+    batches: Iterator[pa.RecordBatch], size: int | None
+) -> Iterator[list[tuple]]:
+    """The batches' rows (as :func:`_py_rows`) in lists of ``size`` (all
+    in one list when ``size`` is None); the last may be shorter, and no
+    list is empty."""
+    pending: list[tuple] = []
+    for batch in batches:
+        pending.extend(_py_rows(batch))
+        while size is not None and len(pending) >= size:
+            yield pending[:size]
+            del pending[:size]
+    if pending:
+        yield pending
+
+
 def _writer(
-    conn_factory: ConnFactory, sql: str, batch_size: int = BATCH_SIZE
+    conn_factory: ConnFactory, sql: str, batch_size: int | None = BATCH_SIZE
 ) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
     """Per-partition upsert kernel: executes ``sql`` over all the Arrow
-    batches, ``batch_size`` rows per ``executemany`` + commit, on one
-    connection; it emits no rows."""
+    batches, ``batch_size`` rows per ``executemany`` + commit (the whole
+    partition in one when ``batch_size`` is None), on one
+    connection opened at the first row to write, so a partition with
+    nothing to upsert opens none; it emits no rows."""
 
     def write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pending: list[tuple] = []
-        conn = conn_factory()
+        conn = None
         try:
-            cur = conn.cursor()
-            for batch in batches:
-                pending.extend(_py_rows(batch))
-                while len(pending) >= batch_size:
-                    cur.executemany(sql, pending[:batch_size])
-                    conn.commit()
-                    del pending[:batch_size]
-            if pending:
-                cur.executemany(sql, pending)
+            for rows in _row_chunks(batches, batch_size):
+                if conn is None:
+                    conn = conn_factory()
+                    cur = conn.cursor()
+                cur.executemany(sql, rows)
                 conn.commit()
         finally:
-            conn.close()
+            if conn is not None:
+                conn.close()
         return iter(())
 
     return write

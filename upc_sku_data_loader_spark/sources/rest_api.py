@@ -3,14 +3,14 @@
 auth + retry/backoff; reference file:line n/a — empty tree §0.1).
 
 Spark-native shape:
-  1. the UPC worklist is a DataFrame; assign page ids with
-     ``pmod(xxhash64(upc), n_pages)`` — a deterministic hash, so page
-     assignment shuffles instead of globally sorting (a window
-     row_number over the whole worklist would funnel 100 TB through
-     one partition);
-  2. ``repartition(n_parts, "page_id")`` spreads the pages over
-     ``n_parts = min(n_pages, defaultParallelism)`` partitions, and the
-     page ``groupBy`` reuses that partitioning;
+  1. the UPC worklist is a DataFrame, hash-partitioned on the UPC over
+     ``n_parts = defaultParallelism`` partitions (an explicit count, so
+     AQE never coalesces it) — no count job and no global sort (a
+     window row_number over the whole worklist would funnel 100 TB
+     through one partition);
+  2. each partition sorts its own UPCs and chunks them into pages of
+     ``page_size`` (``_sorted_pages``), so a worklist of ``n`` UPCs
+     makes at most ``ceil(n / page_size) + n_parts - 1`` requests;
   3. ``mapInArrow`` runs the fetch kernel on each partition — it fetches
      its pages through a pluggable ``transport`` and yields parsed
      records as Arrow batches;
@@ -24,9 +24,9 @@ Transport is injectable:
   payload is a pure function of the UPC, so the whole pipeline is
   hash-checkable against a SQL oracle.
 
-Scale notes: fetch parallelism is the explicit ``n_parts`` above (a plain
-``groupBy`` shuffle of page lists is small, and AQE would coalesce it
-into one partition); the auth token is fetched once driver-side and
+Scale notes: fetch parallelism is the explicit ``n_parts`` above; the
+paging needs no shuffle of its own, since a partition's pages are built
+inside its kernel; the auth token is fetched once driver-side and
 shipped in the closure (refresh-on-401 happens inside the worker); each
 fetch partition runs its own token bucket, so the global request budget
 is ``n_parts × rate_limit_per_s``.
@@ -35,14 +35,14 @@ is ``n_parts × rate_limit_per_s``.
 from __future__ import annotations
 
 import json
-import math
 import time
 import urllib.error
 import urllib.parse
 import urllib.request
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -146,21 +146,15 @@ def http_transport(
     raise RuntimeError(f"GET {url} failed after {max_retries} retries") from last_err
 
 
-def _pages(worklist: DataFrame, upc_col: str, page_size: int, n: int) -> DataFrame:
-    """The ``n``-row worklist as (page_id, upcs) pages of about
-    ``page_size`` UPCs, spread over ``min(n_pages, defaultParallelism)``
-    partitions."""
-    n_pages = max(1, math.ceil(n / page_size))
-    n_parts = min(n_pages, worklist.sparkSession.sparkContext.defaultParallelism)
-    return (
-        worklist.select(F.col(upc_col).alias("upc"))
-        .withColumn("page_id", F.pmod(F.xxhash64("upc"), F.lit(n_pages)))
-        # an explicit count: AQE never coalesces it, and the groupBy below
-        # reuses it without a second exchange
-        .repartition(n_parts, "page_id")
-        .groupBy("page_id")
-        .agg(F.sort_array(F.collect_list("upc")).alias("upcs"))
-    )
+def _sorted_pages(keys: list[pa.Array], page_size: int) -> Iterator[list[str]]:
+    """One partition's non-NULL UPCs, sorted, as pages of ``page_size``
+    (the last page may be shorter)."""
+    if not keys:
+        return
+    upcs = pa.chunked_array(keys).drop_null()
+    upcs = upcs.take(pc.sort_indices(upcs)).to_pylist()
+    for i in range(0, len(upcs), page_size):
+        yield upcs[i : i + page_size]
 
 
 def _fetcher(
@@ -169,25 +163,25 @@ def _fetcher(
     auth_token: str | None,
     rate_limit_per_s: float | None = None,
     rate_burst: int = 4,
-) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
-    """Per-partition fetch kernel: batches of pages in, one Arrow batch of
-    PRODUCT_SCHEMA records out per non-empty page.  Built on the driver."""
+) -> Callable[[Iterable[list[str]]], Iterator[pa.RecordBatch]]:
+    """Per-partition fetch kernel: pages of UPCs in, one Arrow batch of
+    PRODUCT_SCHEMA records out per non-empty response.  Built on the
+    driver."""
     schema = to_arrow_schema(DataType.fromDDL(PRODUCT_SCHEMA))
 
-    def fetch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def fetch(pages: Iterable[list[str]]) -> Iterator[pa.RecordBatch]:
         headers = {"Authorization": f"Bearer {auth_token}"} if auth_token else {}
         bucket = (
             TokenBucket(rate_limit_per_s, rate_burst) if rate_limit_per_s else None
         )
-        for batch in batches:
-            for upcs in batch.column("upcs").to_pylist():
-                if bucket is not None:
-                    bucket.acquire()
-                url = f"{base_url}?upcs={','.join(upcs)}"
-                body = transport(url, headers)
-                records = [json.loads(line) for line in body.splitlines() if line]
-                if records:
-                    yield pa.RecordBatch.from_pylist(records, schema=schema)
+        for upcs in pages:
+            if bucket is not None:
+                bucket.acquire()
+            url = f"{base_url}?upcs={','.join(upcs)}"
+            body = transport(url, headers)
+            records = [json.loads(line) for line in body.splitlines() if line]
+            if records:
+                yield pa.RecordBatch.from_pylist(records, schema=schema)
 
     return fetch
 
@@ -205,11 +199,20 @@ def fetch_products(
     """worklist[upc] → typed product DataFrame via paginated fetch.
 
     Returns columns: upc, sku, brand, price, in_stock (PRODUCT_SCHEMA).
-    One count() action sizes the page space; page membership is a pure
-    hash of the UPC so the grouping is a normal shuffle (no global sort).
-    ``rate_limit_per_s`` throttles each fetch partition with a token
-    bucket (global budget = fetch partitions × rate).
+    Lazy: no job starts until the result is used.  The worklist is
+    hash-partitioned on the UPC over ``defaultParallelism`` partitions,
+    and each partition fetches its own sorted pages, so a load of ``n``
+    UPCs makes at most ``ceil(n / page_size) + partitions - 1``
+    requests.  ``rate_limit_per_s`` throttles each fetch partition with
+    a token bucket (global budget = fetch partitions × rate).
     """
     fetch = _fetcher(base_url, transport, auth_token, rate_limit_per_s, rate_burst)
-    pages = _pages(worklist, upc_col, page_size, worklist.count())
-    return pages.mapInArrow(fetch, PRODUCT_SCHEMA)
+    n_parts = worklist.sparkSession.sparkContext.defaultParallelism
+    return (
+        worklist.select(F.col(upc_col).alias("upc"))
+        .repartition(n_parts, "upc")
+        .mapInArrow(
+            lambda batches: fetch(_sorted_pages([b.column(0) for b in batches], page_size)),
+            PRODUCT_SCHEMA,
+        )
+    )

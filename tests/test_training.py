@@ -350,26 +350,6 @@ def test_k43_pagerank_conserves_mass(spark, sf_dir):
     assert all(r["pr"] >= floor * 0.999 for r in rows)
 
 
-def test_k43_driver_and_distributed_paths_agree(spark, sf_dir, monkeypatch):
-    """r11: the edge-count-gated driver power-iteration kernel and the
-    distributed join loop must emit identical (node, pr) rows — the
-    integer fixed-point recurrence is reduction-order-free, so the two
-    paths are exactly equal, not just close (the dedup_clusters
-    gate-zeroing pattern)."""
-    from upc_sku_data_loader_spark.plans import training as T
-
-    fast = {
-        (r["node"], r["pr"])
-        for r in QUERIES["k43_graph_pagerank"](spark, sf_dir).collect()
-    }
-    monkeypatch.setattr(T, "_PR_DRIVER_MAX_EDGES", 0)
-    slow = {
-        (r["node"], r["pr"])
-        for r in QUERIES["k43_graph_pagerank"](spark, sf_dir).collect()
-    }
-    assert fast == slow and len(fast) > 0
-
-
 # --- k47 farthest-point coreset -----------------------------------------------
 
 

@@ -168,7 +168,7 @@ def test_dedup_clusters_driver_and_distributed_paths_agree(spark, monkeypatch):
         (r["doc_id"], r["cluster_keeper"])
         for r in D.dedup_clusters(pairs).collect()
     }
-    monkeypatch.setattr(D, "_CC_DRIVER_MAX_EDGES", 0)
+    monkeypatch.setattr(D, "_DRIVER_MAX_EDGES", 0)
     slow = {
         (r["doc_id"], r["cluster_keeper"])
         for r in D.dedup_clusters(pairs).collect()
@@ -176,19 +176,40 @@ def test_dedup_clusters_driver_and_distributed_paths_agree(spark, monkeypatch):
     assert fast == slow and len(fast) == 10
 
 
-@pytest.mark.parametrize("name", ["k2_dedup_near_minhash", "k73_incremental_dedup"])
-def test_verify_kernel_and_unfiltered_verify_agree(spark, sf_dir, monkeypatch, name):
-    """The CSR-prefiltered verify and the unfiltered exact verify above
-    its gate must emit identical rows (zero the gate to force the
-    fallback)."""
-    from upc_sku_data_loader_spark import plans  # noqa: F401
-    from upc_sku_data_loader_spark.operators import dedup as D
+_DEDUP = "upc_sku_data_loader_spark.operators.dedup"
+
+#: (module, gate constant, registry query that reaches the gate)
+_GATES = [
+    (_DEDUP, "_CSR_KERNEL_MAX_ROWS", "k2_dedup_near_minhash"),
+    (_DEDUP, "_CSR_KERNEL_MAX_ROWS", "k73_incremental_dedup"),
+    (_DEDUP, "_CSR_KERNEL_MAX_ROWS", "k18_ngram_jaccard"),
+    (_DEDUP, "_DRIVER_MAX_EDGES", "k20_dedup_clusters"),
+    (_DEDUP, "_DRIVER_MAX_EDGES", "k43_graph_pagerank"),
+    (
+        "upc_sku_data_loader_spark.plans.joins",
+        "_C1_BROADCAST_MAX_ORDERS",
+        "c1_join_inner_equi",
+    ),
+]
+
+
+@pytest.mark.parametrize("module, gate, name", _GATES, ids=[q for *_, q in _GATES])
+def test_zero_gate_matches_default_path(spark, sf_dir, monkeypatch, module, gate, name):
+    """Every size-gated driver fast path and the path beyond its gate
+    emit the same rows: zeroing the gate constant forces the other side
+    (the CSR kernel's distributed verify, the distributed edge loops,
+    c1's shuffle join).  Rows compare as a multiset, so a duplicate on
+    either side fails too."""
+    import importlib
+    from collections import Counter
+
+    from upc_sku_data_loader_spark import plans  # noqa: F401  (registry)
     from upc_sku_data_loader_spark.registry import QUERIES
 
-    kernel = {tuple(r) for r in QUERIES[name](spark, sf_dir).collect()}
-    monkeypatch.setattr(D, "_VERIFY_KERNEL_MAX_DOCS", 0)
-    fallback = {tuple(r) for r in QUERIES[name](spark, sf_dir).collect()}
-    assert kernel == fallback and len(kernel) > 0
+    fast = Counter(tuple(r) for r in QUERIES[name](spark, sf_dir).collect())
+    monkeypatch.setattr(importlib.import_module(module), gate, 0)
+    slow = Counter(tuple(r) for r in QUERIES[name](spark, sf_dir).collect())
+    assert fast == slow and fast  # non-vacuous at the test fixture
 
 
 def test_pair_intersect_counts_empty_b_segments(spark):
@@ -292,24 +313,6 @@ def test_k18_matches_brute_force_with_dup_clusters(spark, tmp_path):
     assert all(v == 1.0 for (a, b), v in want.items() if {a, b} <= {1, 2, 3})
 
 
-def test_k18_kernel_and_sql_fallback_agree(spark, sf_dir, monkeypatch):
-    """The broadcast-CSR kernel and the array_intersect fallback must be
-    value-identical (jaccard math stays in SQL on both paths)."""
-    from upc_sku_data_loader_spark import plans  # noqa: F401
-    from upc_sku_data_loader_spark.plans import llm
-    from upc_sku_data_loader_spark.registry import QUERIES
-
-    kernel = sorted(
-        tuple(r) for r in QUERIES["k18_ngram_jaccard"](spark, sf_dir).collect()
-    )
-    monkeypatch.setattr(llm, "_K18_KERNEL_MAX_REPS", 0)
-    fallback = sorted(
-        tuple(r) for r in QUERIES["k18_ngram_jaccard"](spark, sf_dir).collect()
-    )
-    assert kernel == fallback
-    assert kernel  # non-vacuous at sf0.001
-
-
 def test_k18_expansion_reapplies_directional_length_filter(spark, tmp_path, monkeypatch):
     """Truncation makes the oracle's length filter direction-dependent —
     n=(15,10): 10 ∈ [trunc(10.4999...)=10, trunc(21.4)] passes, but
@@ -323,7 +326,7 @@ def test_k18_expansion_reapplies_directional_length_filter(spark, tmp_path, monk
     every candidate pair has jaccard exactly 1.0 and only the length
     filter decides membership."""
     from upc_sku_data_loader_spark import plans  # noqa: F401
-    from upc_sku_data_loader_spark.plans import llm
+    from upc_sku_data_loader_spark.operators import dedup as D
     from upc_sku_data_loader_spark.registry import QUERIES
 
     rows = [
@@ -343,8 +346,8 @@ def test_k18_expansion_reapplies_directional_length_filter(spark, tmp_path, monk
     want = _k18_brute_force([(i, s, len(s)) for i, s in rows])
     assert (2, 4) in want and (5, 6) in want  # miss side must be found
     assert (1, 2) not in want and (6, 7) not in want  # ghost side must not
-    for max_reps in (llm._K18_KERNEL_MAX_REPS, 0):  # kernel, then fallback
-        monkeypatch.setattr(llm, "_K18_KERNEL_MAX_REPS", max_reps)
+    for max_rows in (D._CSR_KERNEL_MAX_ROWS, 0):  # kernel, then fallback
+        monkeypatch.setattr(D, "_CSR_KERNEL_MAX_ROWS", max_rows)
         got = {
             (r["a"], r["b"]): r["jaccard"]
             for r in QUERIES["k18_ngram_jaccard"](spark, str(tmp_path)).collect()

@@ -110,13 +110,6 @@ def l1_norm_sql(expr: str) -> str:
     return f"list_sum(list_transform(CAST({expr} AS DOUBLE[]), x -> abs(x)))"
 
 
-def dot_sql(a: str, b: str) -> str:
-    return (
-        f"list_sum(list_transform(list_zip(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[])),"
-        " p -> p[1] * p[2]))"
-    )
-
-
 def cosine_sql(a: str, b: str) -> str:
     """DuckDB twin of :func:`cosine` — same 0.0 zero-norm convention
     (DuckDB's bare list_cosine_similarity returns -1.0 there)."""

@@ -21,7 +21,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import os
 import weakref
 
 from pyspark.sql import Column, DataFrame, Window
@@ -35,9 +34,7 @@ def unpersist_with(owner: DataFrame, *cached: DataFrame) -> None:
     library call leaks no cached blocks for the session's life while the
     plan stays LAZY.  A caller that keeps derived children but drops the
     parent merely loses the cache — children recompute, correctness
-    unaffected.  (Canonical home of plans/llm.py's `_unpersist_with`,
-    moved here in r10 so the dedup pipelines outside llm.py can share
-    the same cache-ownership discipline.)"""
+    unaffected."""
 
     def _cleanup(refs: tuple[DataFrame, ...] = cached) -> None:
         for df in refs:
@@ -539,9 +536,9 @@ def verify_jaccard_from_base(
     j > t - 5e-7), so no true pair is pruned — the survivors (≈ the
     true pair count) then pay the exact STRING-array verify, keeping
     output values bit-identical to the unfiltered path.  Above the
-    byte/doc gate the prefilter is skipped and the exact verify runs
-    over all candidates, unchanged — the 100 TB path (the CSR is
-    corpus-sized there; k18's per-rep gate reasoning applies).
+    CSR gate (:func:`_pair_intersect_counts` returns ``None``) the
+    prefilter is skipped and the exact verify runs over all candidates,
+    unchanged — the 100 TB path, where the CSR is corpus-sized.
 
     ``candidates_distinct=False`` declares that the incoming pair
     stream may carry duplicates: the kernel dedups consecutive pairs
@@ -551,24 +548,13 @@ def verify_jaccard_from_base(
     fallback applies ``.distinct()`` itself — either way the verify
     output is duplicate-free exactly as if the caller had
     distinct-ed."""
-    spark = base.sparkSession
-    n_docs, n_occ = base.select(
-        F.count(F.lit(1)), F.coalesce(F.sum(F.size("hs")), F.lit(0))
-    ).first()
-    # 4 B/uint32 occurrence + 8 B/int64 vocab entry + 1 B LUT (vocab <=
-    # occurrences, so 13x bounds all three) + 32 B/doc of ids/perm/
-    # indptr, x2 transient doubling during np.unique (k18's estimate)
-    csr_bytes = 2 * (13 * n_occ + 32 * n_docs)
-    if (
-        n_docs <= _VERIFY_KERNEL_MAX_DOCS
-        and csr_bytes <= _VERIFY_KERNEL_MAX_BYTES
-    ):
-        stats = _pair_intersect_counts(
-            spark,
-            candidates,
-            base.select("doc_id", "hs"),
-            dedup=not candidates_distinct,
-        )
+    stats = _pair_intersect_counts(
+        base.sparkSession,
+        candidates,
+        base.select("doc_id", "hs"),
+        dedup=not candidates_distinct,
+    )
+    if stats is not None:
         ih = F.col("inter").cast("double")
         jh = ih / ((F.col("sza") + F.col("szb")).cast("double") - ih)
         surv = stats.filter(jh >= F.lit(threshold - 1e-6)).select("a", "b")
@@ -577,9 +563,18 @@ def verify_jaccard_from_base(
     return _verify_join(surv, base.select("doc_id", "sh_set"), threshold)
 
 
+#: CSR-fit gate of :func:`_pair_intersect_counts`: the (doc_id, hs)
+#: relation is collected and broadcast only when it has at most this
+#: many rows AND its estimated driver footprint fits the byte ceiling.
+#: Driver memory scales with the hash occurrences, not the row count, so
+#: the byte bound is the one that binds on long documents.
+_CSR_KERNEL_MAX_ROWS = 2_000_000
+_CSR_KERNEL_MAX_BYTES = 512 * 2**20
+
+
 def _pair_intersect_counts(
     spark, pairs: DataFrame, docs_hs: DataFrame, dedup: bool = False
-) -> DataFrame:
+) -> DataFrame | None:
     """(a, b, inter, sza, szb) for each candidate pair, where ``inter``
     counts b-side hash elements marked by a's LUT row — the k18 CSR
     kernel as a shared helper: broadcast the corpus's pre-hashed
@@ -588,11 +583,24 @@ def _pair_intersect_counts(
     ragged gather + bincount (no per-row Python).  ``dedup=True`` drops
     duplicate (a, b) pairs — they arrive consecutive after the sort —
     so callers can skip a dedicated distinct Exchange (k18's pattern,
-    including the batch-boundary carry).  Caller gates on CSR bytes;
-    see :func:`verify_jaccard_from_base`."""
+    including the batch-boundary carry).
+
+    Returns ``None`` when ``docs_hs`` does not fit the CSR gate
+    (``_CSR_KERNEL_MAX_ROWS`` / ``_CSR_KERNEL_MAX_BYTES``); the caller
+    then runs its distributed fallback.  One aggregate job sizes the
+    CSR before anything is collected."""
     import numpy as np
     import pandas as pd
 
+    n_rows, n_occ = docs_hs.select(
+        F.count(F.lit(1)), F.coalesce(F.sum(F.size("hs")), F.lit(0))
+    ).first()
+    # 4 B/uint32 occurrence + 8 B/int64 vocab entry + 1 B LUT (vocab <=
+    # occurrences, so 13x bounds all three) + 32 B/row of ids/perm/
+    # indptr, x2 transient doubling during np.unique
+    csr_bytes = 2 * (13 * n_occ + 32 * n_rows)
+    if n_rows > _CSR_KERNEL_MAX_ROWS or csr_bytes > _CSR_KERNEL_MAX_BYTES:
+        return None
     tbl = docs_hs.toArrow()
     doc_ids = tbl["doc_id"].to_numpy()
     lists = tbl["hs"].combine_chunks()
@@ -685,22 +693,12 @@ def _verify_join(
     )
 
 
-#: Driver union-find gate for dedup_clusters: symmetrized edge rows at
-#: or below this run on the driver (2M edges ≈ 32 MB of longs — well
-#: inside maxResultSize); above it the distributed min-label loop runs.
-_CC_DRIVER_MAX_EDGES = int(
-    os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX_EDGES", "2000000")
-)
-
-#: Verify-prefilter kernel gate (verify_jaccard_from_base): the shingle
-#: CSR is collected and broadcast only when the corpus fits these —
-#: same class as k18's _K18_KERNEL_MAX_* gates.
-_VERIFY_KERNEL_MAX_DOCS = int(
-    os.environ.get("SPARK_GRAFT_VERIFY_KERNEL_MAX_DOCS", "2000000")
-)
-_VERIFY_KERNEL_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_VERIFY_KERNEL_MAX_BYTES", str(512 * 1024**2))
-)
+#: Driver-kernel gate for symmetrized edge lists (dedup_clusters'
+#: union-find here, k43's power iteration in plans/training.py): edge
+#: rows at or below this are collected to the driver (2M edges ≈ 32 MB
+#: of int64 Arrow buffers — well inside maxResultSize); above it the
+#: distributed loop runs.
+_DRIVER_MAX_EDGES = 2_000_000
 
 
 def _union_find_clusters(spark, edge_pairs) -> DataFrame:
@@ -786,20 +784,19 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 15) -> DataFrame:
     job-launch + planning latency (2 joins + an eager checkpoint + a
     convergence count per round).  When the SYMMETRIZED edge count
     (known for free — the eager checkpoint already materialized it) is
-    within ``_CC_DRIVER_MAX_EDGES``, resolve the components with a
+    within ``_DRIVER_MAX_EDGES``, resolve the components with a
     driver-side union-find instead: O(E α(E)) over ≤ a few-MB of longs
-    — the same bytes-gated driver-kernel class as k18's CSR verify
-    (gate env-tunable, distributed loop unchanged beyond the gate and
-    pinned equal by tests/test_vectors_dedup.py).  At 100 TB the pair
-    graph of a near-dup-dense corpus exceeds the gate and the loop
-    runs exactly as before.
+    (distributed loop unchanged beyond the gate; both sides pinned
+    equal by the gate-zeroing tests in tests/test_vectors_dedup.py).
+    At 100 TB the pair graph of a near-dup-dense corpus exceeds the
+    gate and the loop runs exactly as before.
     """
     e = pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
     edges = e.unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).localCheckpoint(eager=True)
-    if edges.count() <= _CC_DRIVER_MAX_EDGES:
-        # gated: ≤ _CC_DRIVER_MAX_EDGES (u, v) longs.  toArrow() keeps
+    if edges.count() <= _DRIVER_MAX_EDGES:
+        # gated: ≤ _DRIVER_MAX_EDGES (u, v) longs.  toArrow() keeps
         # the transfer columnar — 2M edges ≈ 32 MB of int64 buffers,
         # where collect()'s Row objects cost hundreds of MB (r10
         # ADVICE).  tolist() yields plain Python ints for the dict-

@@ -38,7 +38,6 @@ global window re-ranks with the same key.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from pathlib import Path
 
 import numpy as np
 import pandas as pd
@@ -46,7 +45,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import load, parquet_rowcount
 from ..functions.vectors import finite_vec
 
 
@@ -242,37 +241,13 @@ def _chunk_topk(
     return tuple(np.concatenate(cols) for cols in zip(*outs))  # type: ignore[return-value]
 
 
-def _emb_rowcount(spark: SparkSession, sf_dir: str) -> int:
-    """RAW row count of the embeddings table from the parquet footers —
-    a driver-side metadata read, no Spark job.  Even a metadata-only
-    ``count()`` pays full job scheduling (~0.2–0.4 s per plan at bench
-    scale, and once per knn/dedup plan build); the footer read is ~1 ms
-    and scales with file count, not rows.  Handles both the single-file
-    fixture layout and Spark-written directories; any failure (remote
-    FS, exotic layout) falls back to the Spark count."""
-    import pyarrow.parquet as pq
-
-    root = Path(f"{sf_dir}/embeddings.parquet")
-    try:
-        if root.is_dir():
-            return sum(
-                pq.read_metadata(p).num_rows for p in root.rglob("*.parquet")
-            )
-        return pq.read_metadata(root).num_rows
-    except Exception:
-        return _raw_vecs(spark, sf_dir).count()
-
-
 def _pick_strategy(strategy: str, spark: SparkSession, sf_dir: str) -> str:
     if strategy == "auto":
         # The RAW footer count is a conservative stand-in for the
         # post-finiteness count (raw >= finite), so "auto" never
         # broadcasts a side the threshold would have rejected.
-        return (
-            "broadcast"
-            if _emb_rowcount(spark, sf_dir) <= BROADCAST_MAX_ROWS
-            else "blocked"
-        )
+        n = parquet_rowcount(spark, sf_dir, "embeddings")
+        return "broadcast" if n <= BROADCAST_MAX_ROWS else "blocked"
     if strategy not in ("broadcast", "blocked"):
         raise ValueError(f"unknown similarity strategy {strategy!r}")
     return strategy
@@ -309,7 +284,9 @@ def _knn_broadcast(
 ) -> DataFrame:
     ids, mat = embedding_matrix(spark, sf_dir)
     bc = spark.sparkContext.broadcast((ids, mat))
-    queries = _fan_out(queries, est_rows=_emb_rowcount(spark, sf_dir))
+    queries = _fan_out(
+        queries, est_rows=parquet_rowcount(spark, sf_dir, "embeddings")
+    )
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         all_ids, all_mat = bc.value
@@ -517,7 +494,8 @@ def dedup_embedding(
                     }
                 )
 
-        return _fan_out(vecs, est_rows=_emb_rowcount(spark, sf_dir)).mapInPandas(
+        n = parquet_rowcount(spark, sf_dir, "embeddings")
+        return _fan_out(vecs, est_rows=n).mapInPandas(
             compute, "vec_id bigint, dup_of bigint, is_keeper boolean"
         )
 

@@ -118,7 +118,7 @@ def k2_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     caches: list[DataFrame] = []
     result = verified_near_dup_pairs(d, caches, shingle_k=3, threshold=0.5)
-    _unpersist_with(result, *caches)
+    unpersist_with(result, *caches)
     return result
 
 
@@ -810,24 +810,6 @@ def k17b_dedup_embedding_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- K18: character-n-gram Jaccard near-dup pairs ------------------------------
 
-#: Verify-strategy switch: at most this many REPRESENTATIVES (post
-#: exact-dup clustering, the thing actually collected) AND a CSR whose
-#: estimated broadcast footprint fits the byte ceiling → collect the rep
-#: gram sets into a broadcast CSR and count intersections in a numpy
-#: kernel; otherwise → plain keyed joins + array_intersect (tests pin
-#: both paths to identical output by monkeypatching the rep cap to 0).
-#: Driver memory scales with the gram footprint, not the doc count
-#: (~60 MB at 50k reps extrapolates to ~2.4 GB at 2M), so the gate is
-#: byte-based, not row-based.
-_K18_KERNEL_MAX_REPS = 2_000_000
-_K18_KERNEL_MAX_BYTES = 512 * 2**20
-
-
-# Canonical cache-ownership helper now lives in operators/dedup.py
-# (r10); kept under the old name for this module's many call sites.
-_unpersist_with = unpersist_with
-
-
 # Completes the dedup ladder (exact K1 → MinHash-LSH K2 → SimHash K14 →
 # token-Jaccard K9 → embedding K17) with the char-granularity tier that
 # catches near-dups token splitting misses (whitespace/punct edits).
@@ -934,7 +916,7 @@ def k18_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cache ownership (r8 verdict nit): the plan persists two relations
     (the clustered docs and the prefix index); their lifetime is bound
     to the returned DataFrame via a weakref finalizer
-    (`_unpersist_with`), so a direct library call leaves no cached
+    (`unpersist_with`), so a direct library call leaves no cached
     blocks behind once the caller drops the result — no reliance on a
     harness-level ``clearCache()``.
     """
@@ -945,7 +927,7 @@ def k18_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         for df in caches:  # plan construction failed: free eagerly
             df.unpersist()
         raise
-    _unpersist_with(result, *caches)
+    unpersist_with(result, *caches)
     return result
 
 
@@ -1118,7 +1100,7 @@ def _k18_build(
     # exact verify on the surviving representative candidates.  Two
     # strategies, k17's broadcast→blocked auto-switch idiom:
     #
-    # small reps (≤2M): the candidate stream at adversarial dup density
+    # CSR within the gate: the candidate stream at adversarial dup density
     # (67.9M pairs at the 10× replica) must not drag a ~2.3 KB gram
     # array through pair-keyed joins — per-pair array_intersect alone
     # measured ~200 s there (it allocates the intersection array when
@@ -1132,30 +1114,19 @@ def _k18_build(
     # filter and the 6-dp round stay in Spark SQL so the arithmetic is
     # bit-identical to the pure-SQL path below.
     #
-    # large reps: the CSR outgrows a broadcast, fall back to plain
-    # keyed joins + array_intersect (correct at any scale, just not the
-    # fast path).
+    # CSR too big (the kernel returns None): plain keyed joins +
+    # array_intersect (correct at any scale, just not the fast path).
     #
-    # Gate on what is actually collected: the representative count and
-    # the CSR's estimated bytes (4 B/uint32 gram occurrence + ~32 B/rep
-    # of int64 ids/perm/indptr), NOT the raw doc count — at adversarial
-    # dup density reps << docs and the kernel stays cheap, while a
-    # long-document corpus can blow the broadcast well under any row
-    # cap.  One aggregate job over the persisted clustered relation;
-    # both strategies reuse the cache so nothing is computed twice.
-    n_reps, n_gram_occ = g.select(
-        F.count(F.lit(1)), F.coalesce(F.sum(F.size("grams")), F.lit(0))
-    ).first()
-    # 4 B/uint32 gram occurrence + 1 B/vocab-entry bool LUT per task
-    # (vocab <= gram occurrences, so 5x bounds both) + 32 B/rep of
-    # int64 ids/perm/indptr, then x2 for the transient doubling during
-    # np.unique/astype on the driver (r8 ADVICE: the old 4x estimate
-    # undercounted peak memory by up to ~50% near the ceiling)
-    csr_bytes = 2 * (5 * n_gram_occ + 32 * n_reps)
-    if n_reps <= _K18_KERNEL_MAX_REPS and csr_bytes <= _K18_KERNEL_MAX_BYTES:
-        stats = _pair_intersect_counts(
-            spark, cands, g.select("doc_id", F.col("grams").alias("hs")), dedup=True
-        )
+    # The kernel's gate sizes what is actually collected — the
+    # representatives and their gram occurrences, NOT the raw doc
+    # count: at adversarial dup density reps << docs and the kernel
+    # stays cheap, while a long-document corpus can blow the broadcast
+    # well under any row cap.  Both strategies reuse the persisted
+    # clustered relation so nothing is computed twice.
+    stats = _pair_intersect_counts(
+        spark, cands, g.select("doc_id", F.col("grams").alias("hs")), dedup=True
+    )
+    if stats is not None:
         inter = F.col("inter").cast("double")
         union = (F.col("sza") + F.col("szb")).cast("double") - inter
         jac = inter / union
@@ -2255,7 +2226,7 @@ def k73_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "max_jaccard",
         )
     )
-    _unpersist_with(result, *caches)
+    unpersist_with(result, *caches)
     return result
 
 

@@ -32,14 +32,13 @@ turn a cleaned document corpus into model-ready data:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..functions import vectors as V
 from ..functions.exprs import dsum, dsum_sql
+from ..operators import dedup as D
 from ..operators.dedup import dedup_clusters, unpersist_with
 from ..registry import query
 
@@ -956,15 +955,6 @@ def k42_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PR_ITERS = 3  # fixed unrolled iterations, mirrored CTE-for-CTE in the oracle
 _PR_OFF = 1_000_000  # supplier node-id offset keeps the bipartite ids disjoint
 
-#: Driver power-iteration gate for k43: symmetrized edge counts at or
-#: below this run the fixed-point iteration as a numpy kernel on the
-#: driver (2M edges ≈ 32 MB of int64 Arrow buffers); above it the
-#: distributed join loop runs — the same bytes-gated driver-kernel
-#: class as operators/dedup._CC_DRIVER_MAX_EDGES.
-_PR_DRIVER_MAX_EDGES = int(
-    os.environ.get("SPARK_GRAFT_PR_DRIVER_MAX_EDGES", "2000000")
-)
-
 _PR_SCALE = 1_000_000_000_000  # fixed-point pico-rank units
 
 _PR_STEP_SQL = """
@@ -1039,16 +1029,16 @@ def k43_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     across the count and the 3 unrolled iterations, and checkpointing
     truncates the deeply nested iteration plan (§3.3: planning time on
     a tree that re-expands the join per iteration) — and when the
-    SYMMETRIZED edge count fits ``_PR_DRIVER_MAX_EDGES`` (default 2M
-    edges ≈ 32 MB of int64 via Arrow, env-tunable) the fixed-point
-    power iteration runs as a numpy kernel on the driver: bincount
+    SYMMETRIZED edge count fits ``operators/dedup._DRIVER_MAX_EDGES``
+    (2M edges ≈ 32 MB of int64 via Arrow) the fixed-point power
+    iteration runs as a numpy kernel on the driver: bincount
     degrees, ``np.add.at`` integer mass sums, the same ``div``
     recurrences.  All values are non-negative so trunc-div (Spark),
     floor-div (numpy) and DuckDB ``//`` agree exactly; int64 cannot
     overflow (mass ≤ total rank mass ≈ 1e12, ×17 ≪ 2^63).  Above the
     gate the distributed loop runs unchanged off the same checkpoint —
     the right plan at 100 TB.  Both paths pinned equal by a
-    gate-zeroing pytest (tests/test_training.py).  Measured
+    gate-zeroing pytest (tests/test_vectors_dedup.py).  Measured
     (noop min-of-5, sf0.1, interleaved): 6.74 s loop → 4.53 s
     checkpointed loop → 1.94 s driver kernel."""
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -1063,7 +1053,8 @@ def k43_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     n_pairs = pairs.count()  # the checkpoint already materialized this
-    if 2 * n_pairs <= _PR_DRIVER_MAX_EDGES:
+    # read through the module: dedup_clusters shares this gate
+    if 2 * n_pairs <= D._DRIVER_MAX_EDGES:
         out = _pagerank_driver(spark, pairs)
         pairs.unpersist()
         return out
@@ -1102,7 +1093,7 @@ def k43_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pagerank_driver(spark: SparkSession, pairs: DataFrame) -> DataFrame:
     """Driver-side fixed-point power iteration over the collected
-    (c, s) pair table (gated by the caller: ≤ _PR_DRIVER_MAX_EDGES
+    (c, s) pair table (gated by the caller: ≤ dedup._DRIVER_MAX_EDGES
     symmetrized edges ≈ 32 MB of int64 Arrow buffers).  Bit-identical
     to the distributed loop: same integer recurrences, every quantity
     non-negative so numpy floor-div equals Spark trunc-div, and the

@@ -19,7 +19,6 @@ checkpoint directory gives exactly-once with idempotent sinks.
 from __future__ import annotations
 
 import math
-import os
 from contextlib import contextmanager
 from typing import Iterator
 
@@ -44,10 +43,8 @@ from ..session import ensure_runtime_configs
 #: source and caps it at the session's configured shuffle partitions
 #: (the cluster-tuned authority at real scale — the gate only prevents
 #: OVERsharding tiny state, it never overrides an operator that needs
-#: more).  Parameterised for production via env.
-_STREAM_ROWS_PER_STATE_PART = int(
-    os.environ.get("SPARK_GRAFT_STREAM_ROWS_PER_STATE_PART", "50000")
-)
+#: more).
+_STREAM_ROWS_PER_STATE_PART = 50_000
 
 
 @contextmanager

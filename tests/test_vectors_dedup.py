@@ -14,6 +14,7 @@ from upc_sku_data_loader_spark.operators.dedup import (
     minhash_signatures,
     verify_jaccard,
 )
+from upc_sku_data_loader_spark.session import Held
 
 
 def test_vector_kernels_match_numpy(spark):
@@ -106,7 +107,7 @@ def test_dedup_clusters_transitive_closure(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6)] + chain, "a long, b long"
     )
-    got = {r["doc_id"]: r["cluster_keeper"] for r in dedup_clusters(pairs).collect()}
+    got = {r["doc_id"]: r["cluster_keeper"] for r in dedup_clusters(pairs, Held()).collect()}
     assert {k: got[k] for k in (1, 2, 3)} == {1: 1, 2: 1, 3: 1}
     assert got[5] == 5 and got[6] == 5
     assert all(got[i] == 10 for i in range(10, 19))
@@ -147,7 +148,7 @@ def test_dedup_clusters_matches_union_find_on_random_graphs(spark):
         got = {
             r["doc_id"]: r["cluster_keeper"]
             for r in dedup_clusters(
-                spark.createDataFrame(edges, "a long, b long")
+                spark.createDataFrame(edges, "a long, b long"), Held()
             ).collect()
         }
         assert got == expected
@@ -166,12 +167,12 @@ def test_dedup_clusters_driver_and_distributed_paths_agree(spark, monkeypatch):
     )
     fast = {
         (r["doc_id"], r["cluster_keeper"])
-        for r in D.dedup_clusters(pairs).collect()
+        for r in D.dedup_clusters(pairs, Held()).collect()
     }
     monkeypatch.setattr(D, "_DRIVER_MAX_EDGES", 0)
     slow = {
         (r["doc_id"], r["cluster_keeper"])
-        for r in D.dedup_clusters(pairs).collect()
+        for r in D.dedup_clusters(pairs, Held()).collect()
     }
     assert fast == slow and len(fast) == 10
 

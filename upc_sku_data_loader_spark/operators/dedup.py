@@ -21,34 +21,15 @@ Scale notes:
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def unpersist_with(owner: DataFrame, *cached: DataFrame) -> None:
-    """Tie the lifetime of `cached` relations to `owner`: unpersist them
-    when the returned plan is garbage-collected (CPython refcounting
-    fires this as soon as the caller drops the result), so a direct
-    library call leaks no cached blocks for the session's life while the
-    plan stays LAZY.  A caller that keeps derived children but drops the
-    parent merely loses the cache — children recompute, correctness
-    unaffected."""
-
-    def _cleanup(refs: tuple[DataFrame, ...] = cached) -> None:
-        for df in refs:
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # session already stopped — nothing left to free
-
-    weakref.finalize(owner, _cleanup)
+from ..session import Held
 
 
 def shingle_base(
     docs: DataFrame,
-    caches: list[DataFrame],
+    held: Held,
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -87,18 +68,16 @@ def shingle_base(
     cols = [F.col(id_col).alias("doc_id"), sh_set.alias("sh_set")]
     for name, expr in (extra or {}).items():
         cols.append(expr.alias(name))
-    base = (
-        docs.select(*cols)
-        .withColumn("hs", F.transform("sh_set", lambda s: F.xxhash64(s)))
-        .persist()
+    return held.persist(
+        docs.select(*cols).withColumn(
+            "hs", F.transform("sh_set", lambda s: F.xxhash64(s))
+        )
     )
-    caches.append(base)
-    return base
 
 
 def verified_near_dup_pairs(
     docs: DataFrame,
-    caches: list[DataFrame],
+    held: Held,
     *,
     shingle_k: int = 3,
     threshold: float = 0.5,
@@ -110,10 +89,9 @@ def verified_near_dup_pairs(
 ) -> DataFrame:
     """The full k2-contract near-dup pair pipeline (MinHash-LSH
     candidates ∪ exact-recall prefix candidates, distinct-ed, exact
-    shingle-Jaccard verified) with the r10 cache discipline: the
-    candidate set is persist()-ed and appended to `caches`, and the
-    caller ties its lifetime to the returned plan via
-    :func:`unpersist_with`.
+    shingle-Jaccard verified).  The shingle base it persists goes into
+    the caller's ``held`` (session.Held), so the query that returns the
+    plan owns its lifetime.
 
     Why the persist matters (measured at sf0.1, r10): without it the
     planner costs the verify joins from the candidate subtree's wild
@@ -132,7 +110,7 @@ def verified_near_dup_pairs(
     base cached, the signature is one projection over cached ``hs``
     and the banding's ``element_at(mh, i)`` references simplify to one
     use of each array_min, so nothing re-evaluates.  The r10
-    union-level ``.distinct().persist()`` is gone too (the k18 move):
+    union-level distinct + persist is gone too (the k18 move):
     the candidate stream is consumed exactly once by the verify, whose
     kernel path dedups consecutive pairs after its own (a)-keyed
     repartition+sort — so the union skips both the 309k-row distinct
@@ -142,9 +120,7 @@ def verified_near_dup_pairs(
     above the kernel gate the pair multiset is deduplicated exactly as
     before (A/Bs in OPTIMIZATION_r11.md)."""
     if base is None:
-        base = shingle_base(
-            docs, caches, shingle_k=shingle_k
-        )
+        base = shingle_base(docs, held, shingle_k=shingle_k)
     sigs = minhash_signatures_from_base(base, n_hashes=n_hashes)
     cands = lsh_candidate_pairs(
         sigs,
@@ -753,7 +729,7 @@ def _union_find_clusters(spark, edge_pairs) -> DataFrame:
     )
 
 
-def dedup_clusters(pairs: DataFrame, max_iters: int = 15) -> DataFrame:
+def dedup_clusters(pairs: DataFrame, held: Held, max_iters: int = 15) -> DataFrame:
     """Resolve near-dup pairs into connected components: every member of
     a component maps to the component's lowest doc id (the canonical
     keeper).  This is the step after LSH candidate verification — pair
@@ -771,11 +747,13 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 15) -> DataFrame:
     RuntimeError if max_iters rounds still left labels moving (silent
     non-convergence would emit two different keepers for one component).
 
-    Iterative-plan discipline: each round's labels are
-    ``localCheckpoint``-ed.  persist() alone caches data but the logical
-    plan still deepens every round (Catalyst analysis cost grows until
-    the driver OOMs around ~10 rounds); checkpointing truncates lineage
-    so every round plans against a flat cached relation.
+    Iterative-plan discipline: each round's labels are checkpointed
+    through ``held``.  persist() alone caches data but the logical plan
+    still deepens every round (Catalyst analysis cost grows until the
+    driver OOMs around ~10 rounds); checkpointing truncates lineage so
+    every round plans against a flat cached relation.  Each superseded
+    round is freed as soon as the next one is materialized; the final
+    labels stay held, because the returned plan reads them.
 
     Small-graph fast path (r10, guide §1.2: per-round overhead is the
     wall, not the data): near-dup pair graphs are true-dup-density
@@ -792,9 +770,9 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 15) -> DataFrame:
     gate and the loop runs exactly as before.
     """
     e = pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
-    edges = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=True)
+    edges = held.checkpoint(
+        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    )
     if edges.count() <= _DRIVER_MAX_EDGES:
         # gated: ≤ _DRIVER_MAX_EDGES (u, v) longs.  toArrow() keeps
         # the transfer columnar — 2M edges ≈ 32 MB of int64 buffers,
@@ -802,7 +780,7 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 15) -> DataFrame:
         # ADVICE).  tolist() yields plain Python ints for the dict-
         # based union-find.
         tbl = edges.toArrow()
-        edges.unpersist()
+        held.free(edges)
         return _union_find_clusters(
             pairs.sparkSession,
             zip(
@@ -810,11 +788,10 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 15) -> DataFrame:
                 tbl["v"].to_numpy().tolist(),
             ),
         )
-    labels = (
+    labels = held.checkpoint(
         edges.select(F.col("u").alias("doc_id"))
         .distinct()
         .withColumn("label", F.col("doc_id"))
-        .localCheckpoint(eager=True)
     )
     converged = False
     for _ in range(max_iters):
@@ -833,15 +810,13 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 15) -> DataFrame:
         hop = stepped.select(
             F.col("doc_id").alias("h_id"), F.col("label").alias("h_label")
         )
-        new_labels = (
-            stepped.join(hop, stepped.label == hop.h_id, "left")
-            .select(
+        new_labels = held.checkpoint(
+            stepped.join(hop, stepped.label == hop.h_id, "left").select(
                 "doc_id",
                 F.least(
                     F.col("label"), F.coalesce("h_label", F.col("label"))
                 ).alias("label"),
             )
-            .localCheckpoint(eager=True)
         )
         changed = (
             new_labels.alias("n")
@@ -849,20 +824,18 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 15) -> DataFrame:
             .filter(F.col("n.label") != F.col("o.label"))
             .count()
         )
-        labels.unpersist()
+        held.free(labels)
         labels = new_labels
         if changed == 0:
             converged = True
             break
-    edges.unpersist()
+    held.free(edges)
     if not converged:
-        labels.unpersist()
         raise RuntimeError(
             f"dedup_clusters did not converge within {max_iters} rounds "
             "(component diameter > 2^max_iters is pathological input)"
         )
-    result = labels.select("doc_id", F.col("label").alias("cluster_keeper"))
-    return result
+    return labels.select("doc_id", F.col("label").alias("cluster_keeper"))
 
 
 def simhash(

@@ -29,11 +29,11 @@ from ..operators.dedup import (
     dedup_clusters,
     shingle_base,
     simhash,
-    unpersist_with,
     verified_near_dup_pairs,
 )
 from ..operators.similarity import ann_ivf, dedup_embedding, knn_join, topk_pairs
 from ..registry import query
+from ..session import Held, holding
 
 # --- K1: exact content-hash dedup (corpus with injected duplicates) -----------
 
@@ -100,7 +100,8 @@ K2_ORACLE = """
 
 
 @query("k2_dedup_near_minhash", oracle=K2_ORACLE)
-def k2_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+@holding
+def k2_dedup_near_minhash(spark: SparkSession, sf_dir: str, held: Held) -> DataFrame:
     # cap disabled: the oracle is exact all-pairs Jaccard with no cap, so
     # the hash-checked contract must not drop oversized buckets (the cap
     # is a scale knob for uncontracted pipelines; its behavior is pinned
@@ -116,10 +117,7 @@ def k2_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pipeline a second time (16.8 s → 3.9 s at sf0.1, see
     # OPTIMIZATION_r10.md).
     d = load(spark, sf_dir, "documents")
-    caches: list[DataFrame] = []
-    result = verified_near_dup_pairs(d, caches, shingle_k=3, threshold=0.5)
-    unpersist_with(result, *caches)
-    return result
+    return verified_near_dup_pairs(d, held, shingle_k=3, threshold=0.5)
 
 
 # --- K3: global top-k most-similar embedding pairs (numpy fast path vs
@@ -866,7 +864,8 @@ def k17b_dedup_embedding_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
              - len(list_intersect(a.grams, b.grams))) >= 0.7
     """,
 )
-def k18_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+@holding
+def k18_ngram_jaccard(spark: SparkSession, sf_dir: str, held: Held) -> DataFrame:
     """Char-10-gram set-similarity self-join (threshold 0.7) via the
     prefix-filter + positional-filter family (PPJoin, Xiao et al. 2008
     — public algorithm), exact-verified on the survivors.
@@ -913,30 +912,10 @@ def k18_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     set at t=0.7 is shingle-width-stable (25 pairs at sf0.01 for both
     5 and 10).
 
-    Cache ownership (r8 verdict nit): the plan persists two relations
-    (the clustered docs and the prefix index); their lifetime is bound
-    to the returned DataFrame via a weakref finalizer
-    (`unpersist_with`), so a direct library call leaves no cached
-    blocks behind once the caller drops the result — no reliance on a
-    harness-level ``clearCache()``.
+    The plan persists two relations (the clustered docs and the prefix
+    index) through ``held``: they live as long as the returned
+    DataFrame, and a failed build frees them at once (session.holding).
     """
-    caches: list[DataFrame] = []
-    try:
-        result = _k18_build(spark, sf_dir, caches)
-    except BaseException:
-        for df in caches:  # plan construction failed: free eagerly
-            df.unpersist()
-        raise
-    unpersist_with(result, *caches)
-    return result
-
-
-def _k18_build(
-    spark: SparkSession, sf_dir: str, caches: list[DataFrame]
-) -> DataFrame:
-    """PPJoin plan body for k18_ngram_jaccard (scale design documented
-    there); appends each persisted relation to `caches` so the wrapper
-    can tie their lifetime to the returned plan."""
     # NULL-text docs form no grams and join no pairs (operators/dedup.py
     # convention; fuzz sweep: transform-over-NULL otherwise clusters
     # every contentless doc into one jaccard-1.0 clique)
@@ -1011,13 +990,11 @@ def _k18_build(
     # (inverted index, df stats, both join sides, both verify sides) and
     # the char-gram extraction is the single most expensive map — without
     # it Spark re-extracts per branch (measured ~50 s/pass at 10×)
-    docs = (
+    docs = held.persist(
         docs.withColumn(
             "rep", F.min("doc_id").over(Window.partitionBy("grams", "n_chars"))
         )
-        .persist()
     )
-    caches.append(docs)
     # n_chars rides along so the oracle's DIRECTIONAL length filter can be
     # re-applied per expanded pair (members of one cluster all share the
     # rep's exact n_chars — it is part of the cluster key)
@@ -1040,14 +1017,11 @@ def _k18_build(
     # and AQE does not reliably reuse the exchange under the window +
     # join mix (0 ReusedExchange observed) — without it the df-ranking
     # window runs twice.  ~175 MB at the 10× replica.
-    prefix = (
+    prefix = held.persist(
         ranked.filter(
             F.col("pos") <= F.col("sz") - F.ceil(F.lit(t) * F.col("sz")) + 1
-        )
-        .select("doc_id", "n_chars", "sz", "df", "gr", "pos")
-        .persist()
+        ).select("doc_id", "n_chars", "sz", "df", "gr", "pos")
     )
-    caches.append(prefix)
     x, y = prefix.alias("x"), prefix.alias("y")
     # length filter inside the join, SYMMETRIZED (OR of both directions):
     # the oracle's TRUNC filter is directional (evaluated with a = the
@@ -1294,20 +1268,16 @@ def k19_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY id
     """,
 )
-def k20_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+@holding
+def k20_dedup_clusters(spark: SparkSession, sf_dir: str, held: Held) -> DataFrame:
     # cap disabled for the same oracle-contract reason as k2;
     # exact-recall union (k2 note): boundary pairs escape banding.
-    # r10: same persisted-candidate pipeline as k2 — dedup_clusters
-    # consumes the pair set eagerly (localCheckpoint per CC round), so
-    # the caches are freed right here instead of plan-bound.
+    # r10: same persisted-candidate pipeline as k2.  The shingle base
+    # and dedup_clusters' final label round stay held until the result
+    # is dropped (the distributed path's result reads that round).
     d = load(spark, sf_dir, "documents")
-    caches: list[DataFrame] = []
-    try:
-        pairs = verified_near_dup_pairs(d, caches, shingle_k=3, threshold=0.5)
-        return dedup_clusters(pairs)
-    finally:
-        for c in caches:
-            c.unpersist()
+    pairs = verified_near_dup_pairs(d, held, shingle_k=3, threshold=0.5)
+    return dedup_clusters(pairs, held)
 
 
 # --- K21/K22: reproducible splitting & sampling --------------------------------
@@ -2153,7 +2123,8 @@ def k15d_multimodal_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN near nr ON nr.doc_id = n.doc_id
     """,
 )
-def k73_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+@holding
+def k73_incremental_dedup(spark: SparkSession, sf_dir: str, held: Held) -> DataFrame:
     """Incremental (cross-corpus) dedup: the production shape where a
     NEW crawl batch is deduplicated AGAINST the already-accepted corpus
     rather than within itself — every incremental pretraining refresh
@@ -2183,9 +2154,8 @@ def k73_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # filter reproduces.  Hash family stays md5 — n_exact is OUTPUT
     # (the oracle counts md5 matches), unlike the engine-internal
     # candidate hashes.
-    caches: list[DataFrame] = []
     base = shingle_base(
-        d, caches, shingle_k=3, extra={"hx": F.md5(F.col("text"))}
+        d, held, shingle_k=3, extra={"hx": F.md5(F.col("text"))}
     )
     corpus_counts = (
         base.filter(F.col("doc_id") % 2 == 0)
@@ -2201,7 +2171,7 @@ def k73_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact-recall union (k2 note): boundary pairs escape banding;
     # r10: persisted-candidate pipeline shared with k2/k20/k62
     verified = verified_near_dup_pairs(
-        d, caches, shingle_k=3, threshold=0.5, base=base
+        d, held, shingle_k=3, threshold=0.5, base=base
     )
     cross = verified.filter((F.col("a") % 2) != (F.col("b") % 2)).select(
         F.when(F.col("a") % 2 == 1, F.col("a")).otherwise(F.col("b")).alias("doc_id"),
@@ -2211,7 +2181,7 @@ def k73_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_near"),
         F.max("jaccard").alias("max_jaccard"),
     )
-    result = (
+    return (
         newb.select("doc_id")
         .join(exact, "doc_id", "left")
         .join(near, "doc_id", "left")
@@ -2226,8 +2196,6 @@ def k73_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "max_jaccard",
         )
     )
-    unpersist_with(result, *caches)
-    return result
 
 
 # --- K80: Zipf-law fit of the corpus term-frequency distribution --------------

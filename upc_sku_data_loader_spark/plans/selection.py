@@ -39,6 +39,7 @@ from pyspark.sql.window import Window
 from ..catalog import load
 from ..operators.dedup import dedup_clusters, verified_near_dup_pairs
 from ..registry import query
+from ..session import Held, holding
 from .llm import K2_ORACLE
 
 # Integer type-token ratio: micro-units via integer division, so both
@@ -92,7 +93,8 @@ _TTR_MICRO_SQL = (
     FROM m
     """,
 )
-def k62_cluster_best_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
+@holding
+def k62_cluster_best_keeper(spark: SparkSession, sf_dir: str, held: Held) -> DataFrame:
     """Near-dup cluster resolution with a QUALITY keeper policy: each
     connected component of the verified near-dup graph (k2's
     MinHash-LSH pipeline, t=0.5) elects the member with the highest
@@ -113,17 +115,12 @@ def k62_cluster_best_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     # exact-recall union (llm.py k2 note): boundary pairs escape
     # banding; r10: persisted-candidate pipeline shared with k2/k20/k73.
-    # dedup_clusters consumes the pairs eagerly (localCheckpoint per CC
-    # round), so the caches are freed right here instead of plan-bound.
-    caches: list[DataFrame] = []
-    try:
-        pairs = verified_near_dup_pairs(d, caches, shingle_k=3, threshold=0.5)
-        clusters = dedup_clusters(pairs).withColumnRenamed(
-            "cluster_keeper", "cluster_id"
-        )
-    finally:
-        for c in caches:
-            c.unpersist()
+    # Its shingle base and dedup_clusters' final label round stay held
+    # until the result is dropped (the distributed path reads that round).
+    pairs = verified_near_dup_pairs(d, held, shingle_k=3, threshold=0.5)
+    clusters = dedup_clusters(pairs, held).withColumnRenamed(
+        "cluster_keeper", "cluster_id"
+    )
     quality = d.select(
         "doc_id",
         # 1000000L: size() is INT and a megadoc's distinct-token count

@@ -958,8 +958,8 @@ def etl4_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     o_orderpriority; batch 2 overwrites just URGENT/HIGH with a
     restated subset (every third order, doubled price).  The read-back
     proves partition isolation: NOT-overwritten partitions still serve
-    batch-1 rows byte-for-byte.  The conf is set per-write and restored
-    (session default stays static)."""
+    batch-1 rows byte-for-byte.  The mode is a per-write option, so the
+    session conf is never touched (its default stays static)."""
     path = _scratch(sf_dir, "orders_by_priority")
     shutil.rmtree(path, ignore_errors=True)
     o = load(spark, sf_dir, "orders").select(
@@ -975,13 +975,9 @@ def etl4_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("o_totalprice", F.col("o_totalprice") * 2.0)
         .withColumn("batch_id", F.lit(2))
     )
-    conf = "spark.sql.sources.partitionOverwriteMode"
-    old = spark.conf.get(conf)
-    spark.conf.set(conf, "dynamic")
-    try:
-        delta.write.partitionBy("o_orderpriority").mode("overwrite").parquet(path)
-    finally:
-        spark.conf.set(conf, old)
+    delta.write.partitionBy("o_orderpriority").mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).parquet(path)
     # explicit schema: an empty base write has no files to infer from
     back = spark.read.schema(base.schema).parquet(path)
     return back.select(

@@ -262,10 +262,10 @@ def s7_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     declaratively: first power of ten whose exceed-count drops below
     100 — proving the loop's exit condition against an engine with no
     scripting support.  Powers of ten are exact in binary doubles
-    through 1e22, so thr is bit-identical on both paths.
+    through 1e22, so thr is bit-identical on both paths.  Scripting
+    (``spark.sql.scripting.enabled``) is on by default in Spark 4.1.
     """
     register_views(spark, sf_dir)
-    spark.conf.set("spark.sql.scripting.enabled", "true")
     return spark.sql(_S7_SCRIPT)
 
 

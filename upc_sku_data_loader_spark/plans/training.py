@@ -39,8 +39,9 @@ from ..catalog import load
 from ..functions import vectors as V
 from ..functions.exprs import dsum, dsum_sql
 from ..operators import dedup as D
-from ..operators.dedup import dedup_clusters, unpersist_with
+from ..operators.dedup import dedup_clusters
 from ..registry import query
+from ..session import Held, holding
 
 PACK_LEN = 256  # tokens per packed context window (k32)
 CHUNK = 10  # tokens per dedup chunk (k36)
@@ -407,7 +408,8 @@ def k36_chunk_dedup_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM comp
     """,
 )
-def k37_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+@holding
+def k37_dedup_clusters(spark: SparkSession, sf_dir: str, held: Held) -> DataFrame:
     """Near-duplicate clusters: connected components over the pair
     graph (word-3-shingle Jaccard ≥ 0.5, same-language blocking), the
     step that converts pairwise near-dup hits into canonical groups
@@ -460,8 +462,9 @@ def k37_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fixpoint would emit wrong components.  dedup_clusters only labels
     # docs that appear in an edge; singletons rejoin as their own
     # component via the left join + coalesce.
-    clustered = dedup_clusters(edges.select(F.col("da").alias("a"),
-                                            F.col("db").alias("b")))
+    clustered = dedup_clusters(
+        edges.select(F.col("da").alias("a"), F.col("db").alias("b")), held
+    )
     labels = (
         docs.select("doc_id")
         .join(clustered, "doc_id", "left")
@@ -886,7 +889,8 @@ _KM_UPDATE_SQL = """
     SELECT vec_id, cluster FROM a2
     """,
 )
-def k42_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
+@holding
+def k42_kmeans(spark: SparkSession, sf_dir: str, held: Held) -> DataFrame:
     """Distributed k-means (Lloyd): the clustering backbone behind
     SemDeDup-style curation and IVF index builds, run for a FIXED
     two iterations so a DuckDB twin can unroll the identical
@@ -912,20 +916,18 @@ def k42_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # centroid-update action and by the final assignment — 3 full
     # scan+cast+finite-filter passes without it (r11, guide §5;
     # measured interleaved noop min-of-5 at sf0.1: 1.78 → 1.56 s).
-    # Small by construction (n_vecs × d doubles); lifetime plan-bound
-    # via unpersist_with below.
-    e = (
+    # Small by construction (n_vecs × d doubles); held until the result
+    # is dropped.
+    e = held.persist(
         load(spark, sf_dir, "embeddings")
         .filter(V.finite_vec("embedding"))
         .select("vec_id", V.as_double(F.col("embedding")).alias("v"))
-        .persist()
     )
     cents = [
         (int(r["vec_id"]), [float(x) for x in r["v"]])
         for r in e.orderBy("vec_id").limit(_KM_K).collect()
     ]
     if not cents:  # empty table: a zero-element literal array is VOID
-        e.unpersist()
         return spark.createDataFrame([], "vec_id bigint, cluster int")
     assigned = _km_assign(e, cents)
     for _ in range(_KM_ITERS - 1):
@@ -945,9 +947,7 @@ def k42_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
             for r in cent_df.collect()
         ]
         assigned = _km_assign(e, cents)
-    result = assigned.select("vec_id", "cluster")
-    unpersist_with(result, e)
-    return result
+    return assigned.select("vec_id", "cluster")
 
 
 # --- K43: PageRank as a corpus-quality prior (unrolled power iteration) -------
@@ -995,7 +995,8 @@ _PR_STEP_SQL = """
     SELECT node, CAST(pri AS DOUBLE) / {_PR_SCALE} AS pr FROM it3
     """,
 )
-def k43_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+@holding
+def k43_graph_pagerank(spark: SparkSession, sf_dir: str, held: Held) -> DataFrame:
     """PageRank over the customer–supplier interaction graph — the
     link-graph quality prior a web-corpus pipeline computes over the
     crawl's host graph (Common Crawl publishes exactly this ranking)
@@ -1043,20 +1044,19 @@ def k43_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed loop → 1.94 s driver kernel."""
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
+    pairs = held.checkpoint(
         o.join(li, o["o_orderkey"] == li["l_orderkey"])
         .select(
             F.col("o_custkey").alias("c"),
             (F.col("l_suppkey") + F.lit(_PR_OFF)).alias("s"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n_pairs = pairs.count()  # the checkpoint already materialized this
     # read through the module: dedup_clusters shares this gate
     if 2 * n_pairs <= D._DRIVER_MAX_EDGES:
         out = _pagerank_driver(spark, pairs)
-        pairs.unpersist()
+        held.free(pairs)
         return out
     edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionByName(
         pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
@@ -1084,11 +1084,9 @@ def k43_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + F.expr("(coalesce(mass, 0) * 17) div 20")
             ).cast("long").alias("pri"),
         )
-    result = ranks.select(
+    return ranks.select(
         "node", (F.col("pri") / F.lit(float(_PR_SCALE))).alias("pr")
     )
-    unpersist_with(result, pairs)
-    return result
 
 
 def _pagerank_driver(spark: SparkSession, pairs: DataFrame) -> DataFrame:
@@ -1181,7 +1179,8 @@ _FPS_SQL_DIST = (
     FROM assign a
     """,
 )
-def k47_coreset_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
+@holding
+def k47_coreset_fps(spark: SparkSession, sf_dir: str, held: Held) -> DataFrame:
     """k-center greedy (farthest-point / Gonzalez) coreset selection
     over the embedding table — the diversity-sampling backbone used for
     coreset-based data pruning: pick 4 centers (seed = min vec_id, then
@@ -1216,13 +1215,11 @@ def k47_coreset_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     first = seed[0]
     centers = [(0, first["vec_id"], first["v"])]
-    cur = (
-        e.filter(F.col("vec_id") != first["vec_id"])
-        .withColumn(
+    cur = held.checkpoint(
+        e.filter(F.col("vec_id") != first["vec_id"]).withColumn(
             "dmin",
             _km_sqdist(F.col("v"), F.array([F.lit(x) for x in first["v"]])),
         )
-        .localCheckpoint(eager=True)
     )
     for cid in (1, 2, 3):
         rows = cur.orderBy(F.desc("dmin"), F.asc("vec_id")).limit(1).collect()
@@ -1231,9 +1228,8 @@ def k47_coreset_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
         top = rows[0]
         centers.append((cid, top["vec_id"], top["v"]))
         if cid < 3:  # the post-final-pick state is never read
-            cur = (
-                cur.filter(F.col("vec_id") != top["vec_id"])
-                .withColumn(
+            prev, cur = cur, held.checkpoint(
+                cur.filter(F.col("vec_id") != top["vec_id"]).withColumn(
                     "dmin",
                     F.least(
                         F.col("dmin"),
@@ -1242,8 +1238,9 @@ def k47_coreset_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
                         ),
                     ),
                 )
-                .localCheckpoint(eager=True)
             )
+            held.free(prev)
+    held.free(cur)  # the result below reads only e
     center_ids = {vid for _, vid, _ in centers}
     best = F.array_min(
         F.array(
@@ -1777,12 +1774,11 @@ def _bpe_pair_counts(state: DataFrame) -> DataFrame:
 
 
 def _bpe_learn(
-    spark: SparkSession, sf_dir: str
-) -> tuple[list[tuple], DataFrame, DataFrame]:
+    spark: SparkSession, sf_dir: str, held: Held
+) -> tuple[list[tuple], DataFrame]:
     """Run the merge-learning loop; returns the chosen merges (as
-    (stage, l, r, cnt, 1) rows), the post-merge vocabulary state
-    (w, f, seq), and the PERSISTED base state the caller must tie to
-    its returned plan (``unpersist_with(result, base)``)."""
+    (stage, l, r, cnt, 1) rows) and the post-merge vocabulary state
+    (w, f, seq), which reads a base state persisted through ``held``."""
     wf = (
         load(spark, sf_dir, "documents")
         .select(F.explode(F.split("text", " ")).alias("w"))
@@ -1795,15 +1791,15 @@ def _bpe_learn(
     # explode → word-count groupBy from scratch (4 full corpus passes
     # for 3 merges; 3.5 s noop at sf0.1).  The vocabulary state is
     # DISTINCT-WORD-sized, so persist the base state once; each round
-    # replans as i replace-projections over the cached relation.  The
-    # caller owns the cache through the returned state's lifetime.
-    state = wf.withColumn(
-        "seq",
-        F.concat(
-            F.lit("|"), F.array_join(F.split("w", ""), "||"), F.lit("|")
-        ),
-    ).persist()
-    base = state
+    # replans as i replace-projections over the cached relation.
+    state = held.persist(
+        wf.withColumn(
+            "seq",
+            F.concat(
+                F.lit("|"), F.array_join(F.split("w", ""), "||"), F.lit("|")
+            ),
+        )
+    )
     merges = []
     for i in range(1, _BPE_MERGES + 1):
         rows = (
@@ -1821,11 +1817,12 @@ def _bpe_learn(
         state = state.withColumn(
             "seq", F.replace("seq", F.lit(pat), F.lit(rep))
         )
-    return merges, state, base
+    return merges, state
 
 
 @query("k68_bpe_merges", oracle=_bpe_oracle())
-def k68_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
+@holding
+def k68_bpe_merges(spark: SparkSession, sf_dir: str, held: Held) -> DataFrame:
     """Learn the first 3 BPE merges over the corpus vocabulary
     (Sennrich et al. 2016) and report them plus the top-10 remaining
     pair counts — the tokenizer-training step every LLM data pipeline
@@ -1841,7 +1838,7 @@ def k68_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     a production 32k-merge run would batch this loop with
     localCheckpoint lineage truncation exactly as k42 does.
     """
-    merges, state, bpe_base = _bpe_learn(spark, sf_dir)
+    merges, state = _bpe_learn(spark, sf_dir, held)
     merge_df = spark.createDataFrame(
         merges, "stage int, sym_left string, sym_right string, "
         "pair_count bigint, rk int"
@@ -1866,9 +1863,7 @@ def k68_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rk",
         )
     )
-    result = merge_df.unionByName(final)
-    unpersist_with(result, bpe_base)
-    return result
+    return merge_df.unionByName(final)
 
 
 # --- K69: BPE encoding of the corpus with the learned merges ------------------
@@ -1897,7 +1892,8 @@ def _bpe_encode_oracle() -> str:
 
 
 @query("k69_bpe_encode", oracle=_bpe_encode_oracle())
-def k69_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
+@holding
+def k69_bpe_encode(spark: SparkSession, sf_dir: str, held: Held) -> DataFrame:
     """Tokenizer APPLICATION: encode every document with the 3-merge
     BPE vocabulary k68 learned, reporting per-doc word count, BPE
     token count, and integer-micro tokens-per-word (the fertility
@@ -1912,7 +1908,7 @@ def k69_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-scale shuffle is the per-doc agg.  Fertility is integer
     micro-units (`div` ≡ `//`), no floats anywhere.
     """
-    _, state, bpe_base = _bpe_learn(spark, sf_dir)
+    _, state = _bpe_learn(spark, sf_dir, held)
     wn = state.select(
         "w",
         F.size(
@@ -1922,7 +1918,7 @@ def k69_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     wtok = load(spark, sf_dir, "documents").select(
         "doc_id", F.explode(F.split("text", " ")).alias("w")
     )
-    result = (
+    return (
         wtok.join(F.broadcast(wn), "w")
         .groupBy("doc_id")
         .agg(
@@ -1938,8 +1934,6 @@ def k69_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    unpersist_with(result, bpe_base)
-    return result
 
 
 # --- K76: BPE round-trip proof (decode(encode(w)) == w, corpus-wide) ----------
@@ -1969,7 +1963,8 @@ def _bpe_roundtrip_oracle() -> str:
 
 
 @query("k76_bpe_roundtrip", oracle=_bpe_roundtrip_oracle())
-def k76_bpe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+@holding
+def k76_bpe_roundtrip(spark: SparkSession, sf_dir: str, held: Held) -> DataFrame:
     """Tokenizer LOSSLESSNESS proof: decode every word's learned BPE
     symbol sequence (strip the boundary markers, drop the separators)
     and verify it reproduces the original word, aggregated per
@@ -1983,7 +1978,7 @@ def k76_bpe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived vocabularies agree symbol-for-symbol AND the encoding is
     invertible.  Shape: identical to k69 — bounded vocab loop, one
     broadcast join over the word stream, one per-doc agg."""
-    _, state, bpe_base = _bpe_learn(spark, sf_dir)
+    _, state = _bpe_learn(spark, sf_dir, held)
     decoded = state.select(
         "w",
         F.expr(
@@ -1996,7 +1991,7 @@ def k76_bpe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = F.sum(
         F.when(F.col("w_decoded") == F.col("w"), 1).otherwise(0)
     ).alias("n_roundtrip_exact")
-    result = (
+    return (
         wtok.join(F.broadcast(decoded), "w")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_words"), exact)
@@ -2007,8 +2002,6 @@ def k76_bpe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n_words") == F.col("n_roundtrip_exact")).alias("lossless"),
         )
     )
-    unpersist_with(result, bpe_base)
-    return result
 
 
 # --- K86: trigram stupid-backoff scorer ---------------------------------------

@@ -18,9 +18,12 @@ Scale notes (100 TB design point):
 
 from __future__ import annotations
 
+import functools
 import os
+import weakref
+from collections.abc import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Runtime (non-static) SQL configs every engine session needs.
 RUNTIME_CONFIGS: dict[str, str] = {
@@ -99,3 +102,71 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     return ensure_runtime_configs(spark)
+
+
+class Held:
+    """The one owner of every cache and checkpoint a query builds.
+
+    ``persist`` and ``checkpoint`` materialize a relation and record how
+    to free it; ``free`` releases relations nothing reads any more.
+    Whatever is still held when a :func:`holding` query returns lives as
+    long as the returned DataFrame.
+
+    Contract: run the returned DataFrame, or keep it referenced while a
+    plan derived from it runs; a freed checkpoint cannot be recomputed
+    (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND).  Operators take the caller's
+    ``Held`` and never bind it: only the query knows what it returns.
+    """
+
+    def __init__(self) -> None:
+        self._held: list[tuple[DataFrame, Callable[[], object]]] = []
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        df = df.persist()
+        self._held.append((df, df.unpersist))
+        return df
+
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        # df.unpersist() leaves a localCheckpoint's blocks resident: they
+        # belong to the RDD under the plan's LogicalRDD leaf.
+        df = df.localCheckpoint(eager=True)
+        rdd = df._jdf.queryExecution().logical().rdd()
+        self._held.append((df, lambda: rdd.unpersist(False)))
+        return df
+
+    def free(self, *dfs: DataFrame) -> None:
+        keep = []
+        for df, unpersist in self._held:
+            if not any(df is d for d in dfs):
+                keep.append((df, unpersist))
+                continue
+            try:
+                unpersist()
+            except Exception:
+                pass  # session already stopped: nothing left to free
+        self._held = keep
+
+    def _free_all(self) -> None:
+        self.free(*(df for df, _ in self._held))
+
+
+def holding(
+    fn: Callable[[SparkSession, str, Held], DataFrame],
+) -> Callable[[SparkSession, str], DataFrame]:
+    """Registry-query decorator: run ``fn(spark, sf_dir, held)`` and free
+    everything still held once the caller drops the returned DataFrame
+    (CPython refcounting fires the finalizer at once).  A build that
+    raises frees everything before the error propagates."""
+
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        held = Held()
+        try:
+            result = fn(spark, sf_dir, held)
+        except BaseException:
+            held._free_all()
+            raise
+        weakref.finalize(result, held._free_all)
+        return result
+
+    return run

@@ -56,6 +56,30 @@ def test_parity_slice(spark, sf_dir, name):
     assert result["status"] in ("PASS", "ROWS_ONLY"), result
 
 
+def test_rowcount_failure_names_the_extra_row(spark, sf_dir, monkeypatch):
+    """A FAIL_ROWCOUNT detail gives both counts and the first canonical
+    row each side has that the other lacks."""
+    from upc_sku_data_loader_spark.registry import ORACLES, QUERIES
+
+    monkeypatch.setitem(
+        QUERIES,
+        "zz_rowcount_probe",
+        lambda s, _sf: s.createDataFrame(
+            [(1, "a"), (2, "b"), (2, "b"), (3, "c")], "k long, v string"
+        ),
+    )
+    monkeypatch.setitem(
+        ORACLES,
+        "zz_rowcount_probe",
+        "SELECT CAST(k AS BIGINT) AS k, v FROM (VALUES (1, 'a'), (2, 'b'), (3, 'c')) t(k, v)",
+    )
+    result = compare_one("zz_rowcount_probe", spark, duck_connect(sf_dir), sf_dir)
+    assert result["status"] == "FAIL_ROWCOUNT"
+    assert "spark=4 rows, duck=3 rows" in result["detail"]
+    assert "first spark-only row: ('2', 'b')" in result["detail"]
+    assert "first duck-only row : <none>" in result["detail"]
+
+
 def test_driver_window_composition():
     """The driver verifies only the first ~50 queries() entries (r1
     finding); pin the current round's window so a refactor can't silently

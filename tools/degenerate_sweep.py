@@ -77,7 +77,7 @@ sys.path.insert(0, str(REPO))
 from upc_sku_data_loader_spark import plans  # noqa: F401,E402
 from upc_sku_data_loader_spark.registry import QUERIES  # noqa: E402
 from upc_sku_data_loader_spark.session import get_spark  # noqa: E402
-from tools.parity import compare_one, duck_connect  # noqa: E402
+from tools.parity import duck_connect, sweep  # noqa: E402
 
 TS = lambda day, h=0: pa.scalar(  # noqa: E731
     __import__("datetime").datetime(2024, 1, day, h), type=pa.timestamp("us")
@@ -577,25 +577,7 @@ def main() -> int:
         sf_dir = build(REPO / ".scratch" / "degenerate")
     spark = get_spark(app_name="degenerate_sweep")
     spark.sparkContext.setLogLevel("ERROR")
-    con = duck_connect(sf_dir)
-    tallies: dict[str, int] = {}
-    bad: list[tuple[str, str, str]] = []
-    for i, name in enumerate(names, 1):
-        try:
-            r = compare_one(name, spark, con, sf_dir)
-        except Exception as e:  # noqa: BLE001
-            r = {"status": "ERROR", "detail": f"{type(e).__name__}: {e}"}
-        status = r["status"]
-        tallies[status] = tallies.get(status, 0) + 1
-        if status not in ("PASS", "ROWS_ONLY"):
-            bad.append((name, status, str(r.get("detail", ""))[:300]))
-            # a failed Spark build can leave broken state; keep going
-        print(f"[{i}/{len(names)}] {status:16s} {name}", flush=True)
-        spark.catalog.clearCache()
-    print("\n== " + ", ".join(f"{k}={v}" for k, v in sorted(tallies.items())) + " ==")
-    for name, status, detail in bad:
-        print(f"  {status}: {name}\n    {detail}")
-    return 1 if bad else 0
+    return sweep(names, spark, duck_connect(sf_dir), sf_dir)
 
 
 if __name__ == "__main__":

@@ -69,9 +69,7 @@ def main() -> int:
             continue
         sdf = QUERIES[name](spark, args.sf)
         scols, srows = canon_rows(sdf.columns, sdf.collect())
-        # entries are independent — drop blocks persisted inside the query
-        # build (e.g. k18) so a 50-entry replay doesn't accumulate them
-        spark.catalog.clearCache()
+        del sdf
 
         rel = con.sql(sql)
         acols, arows = arrow_records(rel)

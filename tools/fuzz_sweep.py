@@ -52,7 +52,7 @@ sys.path.insert(0, str(REPO))
 from upc_sku_data_loader_spark import plans  # noqa: F401,E402
 from upc_sku_data_loader_spark.registry import QUERIES  # noqa: E402
 from upc_sku_data_loader_spark.session import get_spark  # noqa: E402
-from tools.parity import compare_one, duck_connect  # noqa: E402
+from tools.parity import duck_connect, sweep  # noqa: E402
 
 NAN, PINF, NINF = float("nan"), float("inf"), float("-inf")
 
@@ -323,25 +323,7 @@ def main() -> int:
           f"base={args.base or '2024-01-01'} at {sf_dir}", flush=True)
     spark = get_spark(app_name=f"fuzz_sweep_{args.seed}")
     spark.sparkContext.setLogLevel("ERROR")
-    con = duck_connect(sf_dir)
-    tallies: dict[str, int] = {}
-    bad: list[tuple[str, str, str]] = []
-    for i, name in enumerate(names, 1):
-        try:
-            r = compare_one(name, spark, con, sf_dir)
-        except Exception as e:  # noqa: BLE001
-            r = {"status": "ERROR", "detail": f"{type(e).__name__}: {e}"}
-        status = r["status"]
-        tallies[status] = tallies.get(status, 0) + 1
-        if status not in ("PASS", "ROWS_ONLY"):
-            bad.append((name, status, str(r.get("detail", ""))[:300]))
-        print(f"[{i}/{len(names)}] {status:16s} {name}", flush=True)
-        spark.catalog.clearCache()
-    print("\n== seed=" + str(args.seed) + " "
-          + ", ".join(f"{k}={v}" for k, v in sorted(tallies.items())) + " ==")
-    for name, status, detail in bad:
-        print(f"  {status}: {name}\n    {detail}")
-    return 1 if bad else 0
+    return sweep(names, spark, duck_connect(sf_dir), sf_dir, f"seed={args.seed} ")
 
 
 if __name__ == "__main__":

@@ -15,7 +15,7 @@ timing is magnitude-driven, ties are harmless.
 
 Usage:
     python tools/make_scale.py [--src /root/testdata/sf0.1] [--factor 5]
-Prints the output dir (pass it to tools/scaling.py --sf).
+Prints the output dir (pass it to tools/op_bench.py --sf after the base dir).
 """
 
 from __future__ import annotations

@@ -19,6 +19,7 @@ import decimal as _dec
 import math
 import sys
 import time
+from collections import Counter
 from pathlib import Path
 
 import duckdb
@@ -174,7 +175,13 @@ def compare_one(
         out["detail"] = f"spark={scols} duck={ocols}"
         return out
     if len(srows) != len(orows):
+        only_s, only_o = Counter(srows) - Counter(orows), Counter(orows) - Counter(srows)
         out["status"] = "FAIL_ROWCOUNT"
+        out["detail"] = (
+            f"spark={len(srows)} rows, duck={len(orows)} rows\n"
+            f"  first spark-only row: {min(only_s) if only_s else '<none>'}\n"
+            f"  first duck-only row : {min(only_o) if only_o else '<none>'}"
+        )
         return out
     if srows != orows:
         bad = next(
@@ -185,6 +192,28 @@ def compare_one(
         return out
     out["status"] = "PASS"
     return out
+
+
+def sweep(names: list[str], spark, con, sf_dir: str, label: str = "") -> int:
+    """Compare every name on ``sf_dir``, printing one ``[i/n] STATUS name``
+    line each, then the status tally (after ``label``) and the detail of
+    every entry that neither passed nor is rows-only; exit code 1 if any."""
+    tallies: dict[str, int] = {}
+    bad: list[tuple[str, str, str]] = []
+    for i, name in enumerate(names, 1):
+        try:
+            r = compare_one(name, spark, con, sf_dir)
+        except Exception as e:  # noqa: BLE001 — a failed build is tallied, the sweep goes on
+            r = {"status": "ERROR", "detail": f"{type(e).__name__}: {e}"}
+        status = r["status"]
+        tallies[status] = tallies.get(status, 0) + 1
+        if status not in ("PASS", "ROWS_ONLY"):
+            bad.append((name, status, str(r.get("detail", ""))[:300]))
+        print(f"[{i}/{len(names)}] {status:16s} {name}", flush=True)
+    print("\n== " + label + ", ".join(f"{k}={v}" for k, v in sorted(tallies.items())) + " ==")
+    for name, status, detail in bad:
+        print(f"  {status}: {name}\n    {detail}")
+    return 1 if bad else 0
 
 
 def preflight(sf_dir: str) -> None:
@@ -284,11 +313,6 @@ def main() -> int:
             # leak into the next entry's oracle (ADVICE r6 + r7)
             con.close()
             con = duck_connect(args.sf)
-        # release blocks persisted inside query builds (e.g. k18's clustered
-        # docs/prefix relations): entries are independent, and without this
-        # a 339-entry sweep accumulates session-lifetime cached blocks
-        # (ADVICE r7, llm.py persist scope)
-        spark.catalog.clearCache()
         line = f"{status:12s} {name:36s} rows={r.get('spark_rows', '?'):>6} spark={r.get('spark_sec', '?')}s"
         print(line, flush=True)
         if status not in ("PASS", "ROWS_ONLY") and "detail" in r:

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import datetime as dt
 import shutil
+from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -150,3 +151,69 @@ def test_ns_and_us_encodings_always_agree(spark, tmp_path_factory, micros):
         pq.write_table(table, f"{d}/events.parquet")
         frames[unit] = sorted(load(spark, d, "events").collect())
     assert frames["ns"] == frames["us"]
+
+
+# --- one schema path: the footer schema is the schema Spark infers -----------
+
+TESTDATA = Path("/root/testdata")
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_read_schema_matches_inference_on_fixtures(spark, sf):
+    from upc_sku_data_loader_spark.catalog import TABLES, read_schema
+
+    for t in TABLES:
+        p = str(TESTDATA / sf / f"{t}.parquet")
+        assert read_schema(p) == spark.read.parquet(p).schema, p
+
+
+def test_read_schema_matches_inference_on_other_writers(spark, sf_dir, tmp_path):
+    """A pandas-written ``events`` (string ``user_id``, ns ``ts``) and a
+    Spark-written directory (with an INT96 ``timestamp`` column) read
+    through the footer schema exactly as through Spark's inference."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from upc_sku_data_loader_spark.catalog import load, read_schema
+
+    pd.DataFrame(
+        {
+            "event_id": [r[0] for r in ROWS],
+            "ts": pd.to_datetime([r[1] for r in ROWS]),
+            "user_id": [f"u{r[2]}" for r in ROWS],
+            "event_type": [r[3] for r in ROWS],
+            "value": [r[4] for r in ROWS],
+            "props": [r[5] for r in ROWS],
+        }
+    ).to_parquet(tmp_path / "events.parquet")
+    load(spark, sf_dir, "orders").withColumn(
+        "o_ts", F.col("o_orderdate").cast("timestamp")
+    ).write.parquet(str(tmp_path / "orders.parquet"))
+
+    assert read_schema(str(tmp_path / "orders.parquet"))["o_ts"].dataType == T.TimestampType()
+    for t in ("events", "orders"):
+        p = str(tmp_path / f"{t}.parquet")
+        assert read_schema(p) == spark.read.parquet(p).schema, t
+    got = sorted(load(spark, str(tmp_path), "orders").collect())
+    assert got == sorted(spark.read.parquet(str(tmp_path / "orders.parquet")).collect())
+    assert [r.user_id for r in sorted(load(spark, str(tmp_path), "events").collect())] == [
+        "u10", "u11", "u12"
+    ]
+
+
+def test_catalog_loads_start_no_job(spark, sf_dir):
+    """Loading every fixture table runs no Spark job: the schema comes
+    from the footer on the driver, not from an inference job."""
+    from upc_sku_data_loader_spark.catalog import TABLES, load
+
+    sc = spark.sparkContext
+    group = "test_catalog_loads_start_no_job"
+    sc.setJobGroup(group, "catalog.load")
+    try:
+        for t in TABLES:
+            load(spark, sf_dir, t)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup(group) == []

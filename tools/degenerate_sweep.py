@@ -65,98 +65,68 @@ other three modes can't see:
 
 from __future__ import annotations
 
+import datetime
 import sys
 from pathlib import Path
 
-import pyarrow as pa
 import pyarrow.parquet as pq
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 from upc_sku_data_loader_spark import plans  # noqa: F401,E402
+from upc_sku_data_loader_spark.catalog import TABLES  # noqa: E402
 from upc_sku_data_loader_spark.registry import QUERIES  # noqa: E402
 from upc_sku_data_loader_spark.session import get_spark  # noqa: E402
-from tools.parity import duck_connect, sweep  # noqa: E402
+from tools.parity import duck_connect, fixture_schema, sweep, write_fixture  # noqa: E402
 
-TS = lambda day, h=0: pa.scalar(  # noqa: E731
-    __import__("datetime").datetime(2024, 1, day, h), type=pa.timestamp("us")
-)
+
+def ts(day: int, h: int = 0) -> datetime.datetime:
+    return datetime.datetime(2024, 1, day, h)
 
 
 def build(out: Path) -> str:
     """Write the degenerate fixture tables (schemas match /root/testdata)."""
     out.mkdir(parents=True, exist_ok=True)
-    import datetime
-
-    def ts(day, h=0):
-        return datetime.datetime(2024, 1, day, h)
-
-    def write(name, cols, schema):
-        pq.write_table(pa.table(cols, schema=pa.schema(schema)), f"{out}/{name}.parquet")
-
-    write("region", {"r_regionkey": [0], "r_name": ["ONLY"]},
-          [("r_regionkey", pa.int32()), ("r_name", pa.string())])
-    write("nation", {"n_nationkey": [0], "n_name": ["SOLO"], "n_regionkey": [0]},
-          [("n_nationkey", pa.int32()), ("n_name", pa.string()),
-           ("n_regionkey", pa.int32())])
+    write_fixture(out, "region", {"r_regionkey": [0], "r_name": ["ONLY"]})
+    write_fixture(out, "nation", {"n_nationkey": [0], "n_name": ["SOLO"], "n_regionkey": [0]})
     # two customers, CONSTANT acctbal, one segment
-    write("customer",
-          {"c_custkey": [1, 2], "c_name": ["c#1", "c#2"],
-           "c_nationkey": [0, 0], "c_acctbal": [0.1, 0.1],
-           "c_mktsegment": ["BUILDING", "BUILDING"]},
-          [("c_custkey", pa.int64()), ("c_name", pa.string()),
-           ("c_nationkey", pa.int32()), ("c_acctbal", pa.float64()),
-           ("c_mktsegment", pa.string())])
-    write("supplier",
-          {"s_suppkey": [1], "s_name": ["s#1"], "s_nationkey": [0],
-           "s_acctbal": [0.1]},
-          [("s_suppkey", pa.int64()), ("s_name", pa.string()),
-           ("s_nationkey", pa.int32()), ("s_acctbal", pa.float64())])
+    write_fixture(out, "customer",
+                  {"c_custkey": [1, 2], "c_name": ["c#1", "c#2"],
+                   "c_nationkey": [0, 0], "c_acctbal": [0.1, 0.1],
+                   "c_mktsegment": ["BUILDING", "BUILDING"]})
+    write_fixture(out, "supplier",
+                  {"s_suppkey": [1], "s_name": ["s#1"], "s_nationkey": [0],
+                   "s_acctbal": [0.1]})
     # two parts, constant price, same brand/type
-    write("part",
-          {"p_partkey": [1, 2], "p_name": ["alpha alpha", "alpha alpha"],
-           "p_brand": ["Brand#1", "Brand#1"], "p_type": ["TYPE A", "TYPE A"],
-           "p_size": [1, 1], "p_retailprice": [0.1, 0.1]},
-          [("p_partkey", pa.int64()), ("p_name", pa.string()),
-           ("p_brand", pa.string()), ("p_type", pa.string()),
-           ("p_size", pa.int32()), ("p_retailprice", pa.float64())])
+    write_fixture(out, "part",
+                  {"p_partkey": [1, 2], "p_name": ["alpha alpha", "alpha alpha"],
+                   "p_brand": ["Brand#1", "Brand#1"], "p_type": ["TYPE A", "TYPE A"],
+                   "p_size": [1, 1], "p_retailprice": [0.1, 0.1]})
     # two orders, same customer, same day, constant price
-    write("orders",
-          {"o_orderkey": [1, 2], "o_custkey": [1, 1],
-           "o_orderstatus": ["F", "F"], "o_totalprice": [0.1, 0.1],
-           "o_orderdate": [ts(1), ts(1)],
-           "o_orderpriority": ["1-URGENT", "1-URGENT"]},
-          [("o_orderkey", pa.int64()), ("o_custkey", pa.int64()),
-           ("o_orderstatus", pa.string()), ("o_totalprice", pa.float64()),
-           ("o_orderdate", pa.timestamp("us")), ("o_orderpriority", pa.string())])
+    write_fixture(out, "orders",
+                  {"o_orderkey": [1, 2], "o_custkey": [1, 1],
+                   "o_orderstatus": ["F", "F"], "o_totalprice": [0.1, 0.1],
+                   "o_orderdate": [ts(1), ts(1)],
+                   "o_orderpriority": ["1-URGENT", "1-URGENT"]})
     # two identical-valued lineitems on one order + one on the other
-    write("lineitem",
-          {"l_orderkey": [1, 1, 2], "l_partkey": [1, 2, 1],
-           "l_suppkey": [1, 1, 1], "l_linenumber": [1, 2, 1],
-           "l_quantity": [1.0, 1.0, 1.0],
-           "l_extendedprice": [0.1, 0.1, 0.1],
-           "l_discount": [0.0, 0.0, 0.0], "l_tax": [0.0, 0.0, 0.0],
-           "l_returnflag": ["N", "N", "N"], "l_linestatus": ["O", "O", "O"],
-           "l_shipdate": [ts(2), ts(2), ts(2)]},
-          [("l_orderkey", pa.int64()), ("l_partkey", pa.int64()),
-           ("l_suppkey", pa.int64()), ("l_linenumber", pa.int32()),
-           ("l_quantity", pa.float64()), ("l_extendedprice", pa.float64()),
-           ("l_discount", pa.float64()), ("l_tax", pa.float64()),
-           ("l_returnflag", pa.string()), ("l_linestatus", pa.string()),
-           ("l_shipdate", pa.timestamp("us"))])
+    write_fixture(out, "lineitem",
+                  {"l_orderkey": [1, 1, 2], "l_partkey": [1, 2, 1],
+                   "l_suppkey": [1, 1, 1], "l_linenumber": [1, 2, 1],
+                   "l_quantity": [1.0, 1.0, 1.0],
+                   "l_extendedprice": [0.1, 0.1, 0.1],
+                   "l_discount": [0.0, 0.0, 0.0], "l_tax": [0.0, 0.0, 0.0],
+                   "l_returnflag": ["N", "N", "N"], "l_linestatus": ["O", "O", "O"],
+                   "l_shipdate": [ts(2), ts(2), ts(2)]})
     # single user; constant-valued purchase pair (the d30 trigger),
     # constant click pair, one lone 'view'
-    write("events",
-          {"event_id": [1, 2, 3, 4, 5],
-           "ts": [ts(1, 1), ts(1, 2), ts(1, 3), ts(1, 4), ts(1, 5)],
-           "user_id": [7, 7, 7, 7, 7],
-           "event_type": ["purchase", "purchase", "click", "click", "view"],
-           "value": [0.1, 0.1, 2.0, 2.0, 5.0],
-           "props": ["{}"] * 5},
-          [("event_id", pa.int64()), ("ts", pa.timestamp("us")),
-           ("user_id", pa.int64()), ("event_type", pa.string()),
-           ("value", pa.float64()), ("props", pa.string())])
+    write_fixture(out, "events",
+                  {"event_id": [1, 2, 3, 4, 5],
+                   "ts": [ts(1, 1), ts(1, 2), ts(1, 3), ts(1, 4), ts(1, 5)],
+                   "user_id": [7, 7, 7, 7, 7],
+                   "event_type": ["purchase", "purchase", "click", "click", "view"],
+                   "value": [0.1, 0.1, 2.0, 2.0, 5.0],
+                   "props": ["{}"] * 5})
     # exact dups, a single-char doc, a whitespace-heavy doc, one normal
     docs = [
         (1, "same text here for everyone", "en", "web"),
@@ -165,13 +135,10 @@ def build(out: Path) -> str:
         (4, "   ", "en", "web"),                            # whitespace only
         (5, "a b a b a b a b a b a b", "en", "synth"),      # 2-token vocab
     ]
-    write("documents",
-          {"doc_id": [d[0] for d in docs], "text": [d[1] for d in docs],
-           "lang": [d[2] for d in docs], "source": [d[3] for d in docs],
-           "n_chars": [len(d[1]) for d in docs]},
-          [("doc_id", pa.int64()), ("text", pa.string()),
-           ("lang", pa.string()), ("source", pa.string()),
-           ("n_chars", pa.int64())])
+    write_fixture(out, "documents",
+                  {"doc_id": [d[0] for d in docs], "text": [d[1] for d in docs],
+                   "lang": [d[2] for d in docs], "source": [d[3] for d in docs],
+                   "n_chars": [len(d[1]) for d in docs]})
     # a ZERO vector (cosine's 0-norm edge), an exact-duplicate pair, and
     # one ordinary vector
     vecs = [
@@ -180,12 +147,10 @@ def build(out: Path) -> str:
         (3, [1.0, 2.0, 3.0, 4.0], 1),  # exact dup of 2
         (4, [4.0, 3.0, 2.0, 1.0], 2),
     ]
-    write("embeddings",
-          {"vec_id": [v[0] for v in vecs],
-           "embedding": [v[1] for v in vecs],
-           "label": [v[2] for v in vecs]},
-          [("vec_id", pa.int64()), ("embedding", pa.list_(pa.float32())),
-           ("label", pa.int32())])
+    write_fixture(out, "embeddings",
+                  {"vec_id": [v[0] for v in vecs],
+                   "embedding": [v[1] for v in vecs],
+                   "label": [v[2] for v in vecs]})
     return str(out)
 
 
@@ -193,89 +158,58 @@ def build_extreme(out: Path) -> str:
     """Third-mode fixture: non-finite floats, multibyte text, int64-edge
     keys.  Schemas identical to /root/testdata (and to build() above)."""
     out.mkdir(parents=True, exist_ok=True)
-    import datetime
-
-    def ts(day, h=0):
-        return datetime.datetime(2024, 1, day, h)
-
-    def write(name, cols, schema):
-        pq.write_table(pa.table(cols, schema=pa.schema(schema)), f"{out}/{name}.parquet")
-
     K = 2**62  # 4.61e18 — near-int64-edge base for key columns
     NAN, PINF, NINF = float("nan"), float("inf"), float("-inf")
 
-    write("region", {"r_regionkey": [0, 1], "r_name": ["ÜBER-RÉGION", "亜細亜"]},
-          [("r_regionkey", pa.int32()), ("r_name", pa.string())])
-    write("nation",
-          {"n_nationkey": [0, 1], "n_name": ["日本", "CÔTE D'IVOIRE"],
-           "n_regionkey": [0, 1]},
-          [("n_nationkey", pa.int32()), ("n_name", pa.string()),
-           ("n_regionkey", pa.int32())])
-    write("customer",
-          {"c_custkey": [K + 1, K + 2, K + 3],
-           "c_name": ["顧客#1", "cliënt#2", "عميل#3"],
-           "c_nationkey": [0, 1, 0],
-           "c_acctbal": [100.5, -50.25, 0.0],
-           "c_mktsegment": ["BUILDING", "MACHINERY", "BUILDING"]},
-          [("c_custkey", pa.int64()), ("c_name", pa.string()),
-           ("c_nationkey", pa.int32()), ("c_acctbal", pa.float64()),
-           ("c_mktsegment", pa.string())])
-    write("supplier",
-          {"s_suppkey": [1, 2], "s_name": ["fournisseur#1", "仕入先#2"],
-           "s_nationkey": [0, 1], "s_acctbal": [10.5, -3.75]},
-          [("s_suppkey", pa.int64()), ("s_name", pa.string()),
-           ("s_nationkey", pa.int32()), ("s_acctbal", pa.float64())])
-    write("part",
-          {"p_partkey": [1, 2, 3],
-           "p_name": ["café au lait brûlée", "naïve £ part", "普通の部品"],
-           "p_brand": ["Brand#1", "Brand#2", "Brand#1"],
-           "p_type": ["TYPE A", "TYPE B", "TYPE A"],
-           "p_size": [1, 50, 25],
-           "p_retailprice": [901.0, 1000.5, 850.25]},
-          [("p_partkey", pa.int64()), ("p_name", pa.string()),
-           ("p_brand", pa.string()), ("p_type", pa.string()),
-           ("p_size", pa.int32()), ("p_retailprice", pa.float64())])
-    write("orders",
-          {"o_orderkey": [K + 11, K + 12, K + 13, K + 14],
-           "o_custkey": [K + 1, K + 1, K + 2, K + 3],
-           "o_orderstatus": ["F", "O", "F", "O"],
-           "o_totalprice": [100.0, 200.0, 150.5, 99.99],
-           "o_orderdate": [ts(1), ts(2), ts(3), ts(4)],
-           "o_orderpriority": ["1-URGENT", "2-HIGH", "3-MEDIUM", "1-URGENT"]},
-          [("o_orderkey", pa.int64()), ("o_custkey", pa.int64()),
-           ("o_orderstatus", pa.string()), ("o_totalprice", pa.float64()),
-           ("o_orderdate", pa.timestamp("us")), ("o_orderpriority", pa.string())])
-    write("lineitem",
-          {"l_orderkey": [K + 11, K + 11, K + 12, K + 13, K + 14],
-           "l_partkey": [1, 2, 3, 1, 2],
-           "l_suppkey": [1, 2, 1, 2, 1],
-           "l_linenumber": [1, 2, 1, 1, 1],
-           "l_quantity": [1.0, 2.0, 3.0, 4.0, 5.0],
-           "l_extendedprice": [10.5, 20.25, 30.0, 40.75, 50.5],
-           "l_discount": [0.0, 0.05, 0.1, 0.05, 0.0],
-           "l_tax": [0.0, 0.02, 0.04, 0.0, 0.08],
-           "l_returnflag": ["N", "R", "A", "N", "R"],
-           "l_linestatus": ["O", "F", "F", "O", "F"],
-           "l_shipdate": [ts(2), ts(3), ts(4), ts(5), ts(6)]},
-          [("l_orderkey", pa.int64()), ("l_partkey", pa.int64()),
-           ("l_suppkey", pa.int64()), ("l_linenumber", pa.int32()),
-           ("l_quantity", pa.float64()), ("l_extendedprice", pa.float64()),
-           ("l_discount", pa.float64()), ("l_tax", pa.float64()),
-           ("l_returnflag", pa.string()), ("l_linestatus", pa.string()),
-           ("l_shipdate", pa.timestamp("us"))])
+    write_fixture(out, "region", {"r_regionkey": [0, 1], "r_name": ["ÜBER-RÉGION", "亜細亜"]})
+    write_fixture(out, "nation",
+                  {"n_nationkey": [0, 1], "n_name": ["日本", "CÔTE D'IVOIRE"],
+                   "n_regionkey": [0, 1]})
+    write_fixture(out, "customer",
+                  {"c_custkey": [K + 1, K + 2, K + 3],
+                   "c_name": ["顧客#1", "cliënt#2", "عميل#3"],
+                   "c_nationkey": [0, 1, 0],
+                   "c_acctbal": [100.5, -50.25, 0.0],
+                   "c_mktsegment": ["BUILDING", "MACHINERY", "BUILDING"]})
+    write_fixture(out, "supplier",
+                  {"s_suppkey": [1, 2], "s_name": ["fournisseur#1", "仕入先#2"],
+                   "s_nationkey": [0, 1], "s_acctbal": [10.5, -3.75]})
+    write_fixture(out, "part",
+                  {"p_partkey": [1, 2, 3],
+                   "p_name": ["café au lait brûlée", "naïve £ part", "普通の部品"],
+                   "p_brand": ["Brand#1", "Brand#2", "Brand#1"],
+                   "p_type": ["TYPE A", "TYPE B", "TYPE A"],
+                   "p_size": [1, 50, 25],
+                   "p_retailprice": [901.0, 1000.5, 850.25]})
+    write_fixture(out, "orders",
+                  {"o_orderkey": [K + 11, K + 12, K + 13, K + 14],
+                   "o_custkey": [K + 1, K + 1, K + 2, K + 3],
+                   "o_orderstatus": ["F", "O", "F", "O"],
+                   "o_totalprice": [100.0, 200.0, 150.5, 99.99],
+                   "o_orderdate": [ts(1), ts(2), ts(3), ts(4)],
+                   "o_orderpriority": ["1-URGENT", "2-HIGH", "3-MEDIUM", "1-URGENT"]})
+    write_fixture(out, "lineitem",
+                  {"l_orderkey": [K + 11, K + 11, K + 12, K + 13, K + 14],
+                   "l_partkey": [1, 2, 3, 1, 2],
+                   "l_suppkey": [1, 2, 1, 2, 1],
+                   "l_linenumber": [1, 2, 1, 1, 1],
+                   "l_quantity": [1.0, 2.0, 3.0, 4.0, 5.0],
+                   "l_extendedprice": [10.5, 20.25, 30.0, 40.75, 50.5],
+                   "l_discount": [0.0, 0.05, 0.1, 0.05, 0.0],
+                   "l_tax": [0.0, 0.02, 0.04, 0.0, 0.08],
+                   "l_returnflag": ["N", "R", "A", "N", "R"],
+                   "l_linestatus": ["O", "F", "F", "O", "F"],
+                   "l_shipdate": [ts(2), ts(3), ts(4), ts(5), ts(6)]})
     # non-finite values interleaved with normals; int64-edge user ids
-    write("events",
-          {"event_id": [K + i for i in range(1, 9)],
-           "ts": [ts(1, 1), ts(1, 2), ts(1, 3), ts(1, 4),
-                  ts(2, 1), ts(2, 2), ts(2, 3), ts(2, 4)],
-           "user_id": [K + 7, K + 7, K + 8, K + 8, K + 7, K + 8, K + 9, K + 9],
-           "event_type": ["purchase", "click", "purchase", "view",
-                          "click", "purchase", "view", "click"],
-           "value": [1.5, NAN, PINF, NINF, 2.5, NAN, 0.0, 3.25],
-           "props": ["{}"] * 8},
-          [("event_id", pa.int64()), ("ts", pa.timestamp("us")),
-           ("user_id", pa.int64()), ("event_type", pa.string()),
-           ("value", pa.float64()), ("props", pa.string())])
+    write_fixture(out, "events",
+                  {"event_id": [K + i for i in range(1, 9)],
+                   "ts": [ts(1, 1), ts(1, 2), ts(1, 3), ts(1, 4),
+                          ts(2, 1), ts(2, 2), ts(2, 3), ts(2, 4)],
+                   "user_id": [K + 7, K + 7, K + 8, K + 8, K + 7, K + 8, K + 9, K + 9],
+                   "event_type": ["purchase", "click", "purchase", "view",
+                                  "click", "purchase", "view", "click"],
+                   "value": [1.5, NAN, PINF, NINF, 2.5, NAN, 0.0, 3.25],
+                   "props": ["{}"] * 8})
     # multibyte scripts (CJK, accented Latin, 4-byte emoji, RTL Arabic,
     # mixed), one exact-dup pair, int64-edge doc ids; n_chars counts
     # Python/Spark/DuckDB codepoints (all three agree)
@@ -287,13 +221,10 @@ def build_extreme(out: Path) -> str:
         (K + 5, "مرحبا بالعالم هذا نص تجريبي باللغة العربية للاختبار", "ar", "web"),
         (K + 6, "Mixed ASCII with Ünïcödé and ελληνικά and кириллица", "en", "web"),
     ]
-    write("documents",
-          {"doc_id": [d[0] for d in docs], "text": [d[1] for d in docs],
-           "lang": [d[2] for d in docs], "source": [d[3] for d in docs],
-           "n_chars": [len(d[1]) for d in docs]},
-          [("doc_id", pa.int64()), ("text", pa.string()),
-           ("lang", pa.string()), ("source", pa.string()),
-           ("n_chars", pa.int64())])
+    write_fixture(out, "documents",
+                  {"doc_id": [d[0] for d in docs], "text": [d[1] for d in docs],
+                   "lang": [d[2] for d in docs], "source": [d[3] for d in docs],
+                   "n_chars": [len(d[1]) for d in docs]})
     # NaN / +Inf / -Inf components, an exact-dup pair, int64-edge ids
     vecs = [
         (K + 1, [NAN, 1.0, 2.0, 3.0], 0),
@@ -303,12 +234,10 @@ def build_extreme(out: Path) -> str:
         (K + 5, [1.0, 2.0, 3.0, 4.0], 2),  # exact dup of K+4
         (K + 6, [4.0, 3.0, 2.0, 1.0], 0),
     ]
-    write("embeddings",
-          {"vec_id": [v[0] for v in vecs],
-           "embedding": [v[1] for v in vecs],
-           "label": [v[2] for v in vecs]},
-          [("vec_id", pa.int64()), ("embedding", pa.list_(pa.float32())),
-           ("label", pa.int32())])
+    write_fixture(out, "embeddings",
+                  {"vec_id": [v[0] for v in vecs],
+                   "embedding": [v[1] for v in vecs],
+                   "label": [v[2] for v in vecs]})
     return str(out)
 
 
@@ -323,87 +252,56 @@ def build_nulls(out: Path) -> str:
     text, timestamps, a whole embedding, and one embedding element.
     """
     out.mkdir(parents=True, exist_ok=True)
-    import datetime
-
-    def ts(day, h=0):
-        return datetime.datetime(2024, 1, day, h)
-
-    def write(name, cols, schema):
-        pq.write_table(pa.table(cols, schema=pa.schema(schema)), f"{out}/{name}.parquet")
-
-    write("region", {"r_regionkey": [0, 1], "r_name": ["AMERICA", None]},
-          [("r_regionkey", pa.int32()), ("r_name", pa.string())])
-    write("nation",
-          {"n_nationkey": [0, 1], "n_name": [None, "FRANCE"],
-           "n_regionkey": [0, 1]},
-          [("n_nationkey", pa.int32()), ("n_name", pa.string()),
-           ("n_regionkey", pa.int32())])
-    write("customer",
-          {"c_custkey": [1, 2, 3],
-           "c_name": [None, "c#2", "c#3"],
-           "c_nationkey": [0, 1, 0],
-           "c_acctbal": [100.5, None, -7.25],
-           "c_mktsegment": ["BUILDING", None, "MACHINERY"]},
-          [("c_custkey", pa.int64()), ("c_name", pa.string()),
-           ("c_nationkey", pa.int32()), ("c_acctbal", pa.float64()),
-           ("c_mktsegment", pa.string())])
-    write("supplier",
-          {"s_suppkey": [1, 2], "s_name": ["s#1", None],
-           "s_nationkey": [0, 1], "s_acctbal": [None, 12.5]},
-          [("s_suppkey", pa.int64()), ("s_name", pa.string()),
-           ("s_nationkey", pa.int32()), ("s_acctbal", pa.float64())])
-    write("part",
-          {"p_partkey": [1, 2, 3],
-           "p_name": ["alpha beta", None, "gamma delta"],
-           "p_brand": ["Brand#1", "Brand#2", None],
-           "p_type": [None, "TYPE B", "TYPE A"],
-           "p_size": [1, None, 25],
-           "p_retailprice": [901.0, 1000.5, None]},
-          [("p_partkey", pa.int64()), ("p_name", pa.string()),
-           ("p_brand", pa.string()), ("p_type", pa.string()),
-           ("p_size", pa.int32()), ("p_retailprice", pa.float64())])
-    write("orders",
-          {"o_orderkey": [11, 12, 13, 14],
-           "o_custkey": [1, 1, 2, 3],
-           "o_orderstatus": ["F", "O", None, "O"],
-           "o_totalprice": [100.0, None, 150.5, 99.99],
-           "o_orderdate": [ts(1), ts(2), ts(3), None],
-           "o_orderpriority": [None, "2-HIGH", "3-MEDIUM", "1-URGENT"]},
-          [("o_orderkey", pa.int64()), ("o_custkey", pa.int64()),
-           ("o_orderstatus", pa.string()), ("o_totalprice", pa.float64()),
-           ("o_orderdate", pa.timestamp("us")), ("o_orderpriority", pa.string())])
-    write("lineitem",
-          {"l_orderkey": [11, 11, 12, 13, 14],
-           "l_partkey": [1, 2, 3, 1, 2],
-           "l_suppkey": [1, 2, 1, 2, 1],
-           "l_linenumber": [1, 2, 1, 1, 1],
-           "l_quantity": [1.0, None, 3.0, 4.0, 5.0],
-           "l_extendedprice": [10.5, 20.25, None, 40.75, 50.5],
-           "l_discount": [0.0, 0.05, 0.1, None, 0.0],
-           "l_tax": [0.0, 0.02, None, 0.0, 0.08],
-           "l_returnflag": ["N", None, "A", "N", "R"],
-           "l_linestatus": ["O", "F", "F", None, "F"],
-           "l_shipdate": [ts(2), ts(3), None, ts(5), ts(6)]},
-          [("l_orderkey", pa.int64()), ("l_partkey", pa.int64()),
-           ("l_suppkey", pa.int64()), ("l_linenumber", pa.int32()),
-           ("l_quantity", pa.float64()), ("l_extendedprice", pa.float64()),
-           ("l_discount", pa.float64()), ("l_tax", pa.float64()),
-           ("l_returnflag", pa.string()), ("l_linestatus", pa.string()),
-           ("l_shipdate", pa.timestamp("us"))])
+    write_fixture(out, "region", {"r_regionkey": [0, 1], "r_name": ["AMERICA", None]})
+    write_fixture(out, "nation",
+                  {"n_nationkey": [0, 1], "n_name": [None, "FRANCE"],
+                   "n_regionkey": [0, 1]})
+    write_fixture(out, "customer",
+                  {"c_custkey": [1, 2, 3],
+                   "c_name": [None, "c#2", "c#3"],
+                   "c_nationkey": [0, 1, 0],
+                   "c_acctbal": [100.5, None, -7.25],
+                   "c_mktsegment": ["BUILDING", None, "MACHINERY"]})
+    write_fixture(out, "supplier",
+                  {"s_suppkey": [1, 2], "s_name": ["s#1", None],
+                   "s_nationkey": [0, 1], "s_acctbal": [None, 12.5]})
+    write_fixture(out, "part",
+                  {"p_partkey": [1, 2, 3],
+                   "p_name": ["alpha beta", None, "gamma delta"],
+                   "p_brand": ["Brand#1", "Brand#2", None],
+                   "p_type": [None, "TYPE B", "TYPE A"],
+                   "p_size": [1, None, 25],
+                   "p_retailprice": [901.0, 1000.5, None]})
+    write_fixture(out, "orders",
+                  {"o_orderkey": [11, 12, 13, 14],
+                   "o_custkey": [1, 1, 2, 3],
+                   "o_orderstatus": ["F", "O", None, "O"],
+                   "o_totalprice": [100.0, None, 150.5, 99.99],
+                   "o_orderdate": [ts(1), ts(2), ts(3), None],
+                   "o_orderpriority": [None, "2-HIGH", "3-MEDIUM", "1-URGENT"]})
+    write_fixture(out, "lineitem",
+                  {"l_orderkey": [11, 11, 12, 13, 14],
+                   "l_partkey": [1, 2, 3, 1, 2],
+                   "l_suppkey": [1, 2, 1, 2, 1],
+                   "l_linenumber": [1, 2, 1, 1, 1],
+                   "l_quantity": [1.0, None, 3.0, 4.0, 5.0],
+                   "l_extendedprice": [10.5, 20.25, None, 40.75, 50.5],
+                   "l_discount": [0.0, 0.05, 0.1, None, 0.0],
+                   "l_tax": [0.0, 0.02, None, 0.0, 0.08],
+                   "l_returnflag": ["N", None, "A", "N", "R"],
+                   "l_linestatus": ["O", "F", "F", None, "F"],
+                   "l_shipdate": [ts(2), ts(3), None, ts(5), ts(6)]})
     # NULL value / event_type / props / ts / user_id — one each,
     # interleaved with enough normal rows for sessions and windows
-    write("events",
-          {"event_id": [1, 2, 3, 4, 5, 6, 7, 8],
-           "ts": [ts(1, 1), ts(1, 2), None, ts(1, 4),
-                  ts(2, 1), ts(2, 2), ts(2, 3), ts(2, 4)],
-           "user_id": [7, 7, 7, None, 7, 8, 8, 9],
-           "event_type": ["purchase", None, "purchase", "view",
-                          "click", "purchase", "view", "click"],
-           "value": [1.5, None, 2.0, None, 2.5, 4.0, 0.0, 3.25],
-           "props": ["{}", '{"k": 1}', None, "{}", "{}", "{}", "{}", "{}"]},
-          [("event_id", pa.int64()), ("ts", pa.timestamp("us")),
-           ("user_id", pa.int64()), ("event_type", pa.string()),
-           ("value", pa.float64()), ("props", pa.string())])
+    write_fixture(out, "events",
+                  {"event_id": [1, 2, 3, 4, 5, 6, 7, 8],
+                   "ts": [ts(1, 1), ts(1, 2), None, ts(1, 4),
+                          ts(2, 1), ts(2, 2), ts(2, 3), ts(2, 4)],
+                   "user_id": [7, 7, 7, None, 7, 8, 8, 9],
+                   "event_type": ["purchase", None, "purchase", "view",
+                                  "click", "purchase", "view", "click"],
+                   "value": [1.5, None, 2.0, None, 2.5, 4.0, 0.0, 3.25],
+                   "props": ["{}", '{"k": 1}', None, "{}", "{}", "{}", "{}", "{}"]})
     # NULL text vs EMPTY text are distinct shapes; NULL lang/source/
     # n_chars; an exact-dup pair so dedup ops still cluster
     docs = [
@@ -414,13 +312,10 @@ def build_nulls(out: Path) -> str:
         (5, "plain ascii document for scoring", None, "synth", 32),
         (6, "another ordinary document body", "en", None, 30),
     ]
-    write("documents",
-          {"doc_id": [d[0] for d in docs], "text": [d[1] for d in docs],
-           "lang": [d[2] for d in docs], "source": [d[3] for d in docs],
-           "n_chars": [d[4] for d in docs]},
-          [("doc_id", pa.int64()), ("text", pa.string()),
-           ("lang", pa.string()), ("source", pa.string()),
-           ("n_chars", pa.int64())])
+    write_fixture(out, "documents",
+                  {"doc_id": [d[0] for d in docs], "text": [d[1] for d in docs],
+                   "lang": [d[2] for d in docs], "source": [d[3] for d in docs],
+                   "n_chars": [d[4] for d in docs]})
     # one NULL whole-embedding, one embedding with a NULL element, one
     # NULL label; a dup pair keeps the dedup/ANN ops non-trivial
     vecs = [
@@ -431,12 +326,10 @@ def build_nulls(out: Path) -> str:
         (5, [4.0, 3.0, 2.0, 1.0], 2),
         (6, [0.5, 1.5, 2.5, 3.5], 0),
     ]
-    write("embeddings",
-          {"vec_id": [v[0] for v in vecs],
-           "embedding": [v[1] for v in vecs],
-           "label": [v[2] for v in vecs]},
-          [("vec_id", pa.int64()), ("embedding", pa.list_(pa.float32())),
-           ("label", pa.int32())])
+    write_fixture(out, "embeddings",
+                  {"vec_id": [v[0] for v in vecs],
+                   "embedding": [v[1] for v in vecs],
+                   "label": [v[2] for v in vecs]})
     return str(out)
 
 
@@ -482,19 +375,10 @@ def build_megadoc(out: Path) -> str:
         (6, "a small ordinary document about parts and orders", "en", "web"),
         (7, "another small document mentioning suppliers", "en", "synth"),
     ]
-    pq.write_table(
-        pa.table(
-            {"doc_id": [d[0] for d in docs], "text": [d[1] for d in docs],
-             "lang": [d[2] for d in docs], "source": [d[3] for d in docs],
-             "n_chars": [len(d[1]) for d in docs]},
-            schema=pa.schema(
-                [("doc_id", pa.int64()), ("text", pa.string()),
-                 ("lang", pa.string()), ("source", pa.string()),
-                 ("n_chars", pa.int64())]
-            ),
-        ),
-        f"{out}/documents.parquet",
-    )
+    write_fixture(out, "documents",
+                          {"doc_id": [d[0] for d in docs], "text": [d[1] for d in docs],
+                           "lang": [d[2] for d in docs], "source": [d[3] for d in docs],
+                           "n_chars": [len(d[1]) for d in docs]})
     return str(out)
 
 
@@ -532,30 +416,18 @@ def build_nfd(out: Path) -> str:
         docs.append((did, nfd, "xx", "nfd")); did += 1
     docs.append((did, "identical ascii duplicate line", "en", "web")); did += 1
     docs.append((did, "identical ascii duplicate line", "en", "web")); did += 1
-    pq.write_table(
-        pa.table(
-            {"doc_id": [d[0] for d in docs], "text": [d[1] for d in docs],
-             "lang": [d[2] for d in docs], "source": [d[3] for d in docs],
-             "n_chars": [len(d[1]) for d in docs]},
-            schema=pa.schema(
-                [("doc_id", pa.int64()), ("text", pa.string()),
-                 ("lang", pa.string()), ("source", pa.string()),
-                 ("n_chars", pa.int64())]
-            ),
-        ),
-        f"{out}/documents.parquet",
-    )
+    write_fixture(out, "documents",
+                          {"doc_id": [d[0] for d in docs], "text": [d[1] for d in docs],
+                           "lang": [d[2] for d in docs], "source": [d[3] for d in docs],
+                           "n_chars": [len(d[1]) for d in docs]})
     return str(out)
 
 
 def build_empty(out: Path) -> str:
     """Zero-row variants of every table, exact fixture schemas."""
     out.mkdir(parents=True, exist_ok=True)
-    src = build(out.parent / "degenerate")  # reuse the schema definitions
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events", "documents", "embeddings"):
-        schema = pq.read_schema(f"{src}/{t}.parquet")
-        pq.write_table(schema.empty_table(), f"{out}/{t}.parquet")
+    for t in TABLES:
+        pq.write_table(fixture_schema(t).empty_table(), f"{out}/{t}.parquet")
     return str(out)
 
 

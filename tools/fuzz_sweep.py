@@ -43,16 +43,13 @@ import sys
 from datetime import datetime, timedelta
 from pathlib import Path
 
-import pyarrow as pa
-import pyarrow.parquet as pq
-
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 from upc_sku_data_loader_spark import plans  # noqa: F401,E402
 from upc_sku_data_loader_spark.registry import QUERIES  # noqa: E402
 from upc_sku_data_loader_spark.session import get_spark  # noqa: E402
-from tools.parity import duck_connect, sweep  # noqa: E402
+from tools.parity import duck_connect, sweep, write_fixture  # noqa: E402
 
 NAN, PINF, NINF = float("nan"), float("inf"), float("-inf")
 
@@ -141,79 +138,62 @@ def build(out: Path, seed: int, rows: int, base: datetime | None = None) -> str:
     base = base or datetime(2024, 1, 1)
     K = g.key_off
 
-    def write(name, cols, schema):
-        pq.write_table(pa.table(cols, schema=pa.schema(schema)), f"{out}/{name}.parquet")
-
     n_nat = max(2, rows // 12)
-    write("region",
-          {"r_regionkey": list(range(3)),
-           "r_name": [None if g.null("name") else f"REGION{i}" for i in range(3)]},
-          [("r_regionkey", pa.int32()), ("r_name", pa.string())])
-    write("nation",
-          {"n_nationkey": list(range(n_nat)),
-           "n_name": [None if g.null("name") else f"NATION{i}" for i in range(n_nat)],
-           "n_regionkey": [g.r.randrange(3) for _ in range(n_nat)]},
-          [("n_nationkey", pa.int32()), ("n_name", pa.string()),
-           ("n_regionkey", pa.int32())])
+    write_fixture(out, "region",
+                  {"r_regionkey": list(range(3)),
+                   "r_name": [None if g.null("name") else f"REGION{i}" for i in range(3)]})
+    write_fixture(out, "nation",
+                  {"n_nationkey": list(range(n_nat)),
+                   "n_name": [None if g.null("name") else f"NATION{i}" for i in range(n_nat)],
+                   "n_regionkey": [g.r.randrange(3) for _ in range(n_nat)]})
     n_cust = rows
-    write("customer",
-          {"c_custkey": [K + i for i in range(1, n_cust + 1)],
-           "c_name": [None if g.null("name") else f"cust#{i}" for i in range(n_cust)],
-           "c_nationkey": [g.r.randrange(n_nat) for _ in range(n_cust)],
-           "c_acctbal": [None if g.null("price")
-                         else round(g.r.uniform(-999, 9999), 2)
-                         for _ in range(n_cust)],
-           "c_mktsegment": [None if g.null("segment")
-                            # skew: one dominant segment
-                            else (SEGMENTS[0] if g.r.random() < 0.5
-                                  else g.r.choice(SEGMENTS))
-                            for _ in range(n_cust)]},
-          [("c_custkey", pa.int64()), ("c_name", pa.string()),
-           ("c_nationkey", pa.int32()), ("c_acctbal", pa.float64()),
-           ("c_mktsegment", pa.string())])
+    write_fixture(out, "customer",
+                  {"c_custkey": [K + i for i in range(1, n_cust + 1)],
+                   "c_name": [None if g.null("name") else f"cust#{i}" for i in range(n_cust)],
+                   "c_nationkey": [g.r.randrange(n_nat) for _ in range(n_cust)],
+                   "c_acctbal": [None if g.null("price")
+                                 else round(g.r.uniform(-999, 9999), 2)
+                                 for _ in range(n_cust)],
+                   "c_mktsegment": [None if g.null("segment")
+                                    # skew: one dominant segment
+                                    else (SEGMENTS[0] if g.r.random() < 0.5
+                                          else g.r.choice(SEGMENTS))
+                                    for _ in range(n_cust)]})
     n_supp = max(2, rows // 6)
-    write("supplier",
-          {"s_suppkey": [K + i for i in range(1, n_supp + 1)],
-           "s_name": [None if g.null("name") else f"supp#{i}" for i in range(n_supp)],
-           "s_nationkey": [g.r.randrange(n_nat) for _ in range(n_supp)],
-           "s_acctbal": [None if g.null("price")
-                         else round(g.r.uniform(-999, 9999), 2)
-                         for _ in range(n_supp)]},
-          [("s_suppkey", pa.int64()), ("s_name", pa.string()),
-           ("s_nationkey", pa.int32()), ("s_acctbal", pa.float64())])
+    write_fixture(out, "supplier",
+                  {"s_suppkey": [K + i for i in range(1, n_supp + 1)],
+                   "s_name": [None if g.null("name") else f"supp#{i}" for i in range(n_supp)],
+                   "s_nationkey": [g.r.randrange(n_nat) for _ in range(n_supp)],
+                   "s_acctbal": [None if g.null("price")
+                                 else round(g.r.uniform(-999, 9999), 2)
+                                 for _ in range(n_supp)]})
     n_part = max(3, rows // 2)
-    write("part",
-          {"p_partkey": [K + i for i in range(1, n_part + 1)],
-           "p_name": [g.text() for _ in range(n_part)],
-           "p_brand": [None if g.null("name")
-                       else f"Brand#{g.r.randint(1, 5)}" for _ in range(n_part)],
-           "p_type": [None if g.null("name")
-                      else f"TYPE {g.r.choice('ABC')}" for _ in range(n_part)],
-           "p_size": [None if g.null("qty") else g.r.randint(1, 50)
-                      for _ in range(n_part)],
-           "p_retailprice": [None if g.null("price")
-                             else round(g.r.uniform(100, 2000), 2)
-                             for _ in range(n_part)]},
-          [("p_partkey", pa.int64()), ("p_name", pa.string()),
-           ("p_brand", pa.string()), ("p_type", pa.string()),
-           ("p_size", pa.int32()), ("p_retailprice", pa.float64())])
+    write_fixture(out, "part",
+                  {"p_partkey": [K + i for i in range(1, n_part + 1)],
+                   "p_name": [g.text() for _ in range(n_part)],
+                   "p_brand": [None if g.null("name")
+                               else f"Brand#{g.r.randint(1, 5)}" for _ in range(n_part)],
+                   "p_type": [None if g.null("name")
+                              else f"TYPE {g.r.choice('ABC')}" for _ in range(n_part)],
+                   "p_size": [None if g.null("qty") else g.r.randint(1, 50)
+                              for _ in range(n_part)],
+                   "p_retailprice": [None if g.null("price")
+                                     else round(g.r.uniform(100, 2000), 2)
+                                     for _ in range(n_part)]})
     n_ord = rows * 2
     custs = [K + i for i in range(1, n_cust + 1)]
-    write("orders",
-          {"o_orderkey": [K + i for i in range(1, n_ord + 1)],
-           "o_custkey": [g.r.choice(custs) for _ in range(n_ord)],
-           "o_orderstatus": [None if g.null("status") else g.r.choice("FOP")
-                             for _ in range(n_ord)],
-           "o_totalprice": [None if g.null("price")
-                            else round(g.r.uniform(900, 400000), 2)
-                            for _ in range(n_ord)],
-           "o_orderdate": [g.ts(base) for _ in range(n_ord)],
-           "o_orderpriority": [None if g.null("priority")
-                               else g.r.choice(PRIORITIES)
-                               for _ in range(n_ord)]},
-          [("o_orderkey", pa.int64()), ("o_custkey", pa.int64()),
-           ("o_orderstatus", pa.string()), ("o_totalprice", pa.float64()),
-           ("o_orderdate", pa.timestamp("us")), ("o_orderpriority", pa.string())])
+    write_fixture(out, "orders",
+                  {"o_orderkey": [K + i for i in range(1, n_ord + 1)],
+                   "o_custkey": [g.r.choice(custs) for _ in range(n_ord)],
+                   "o_orderstatus": [None if g.null("status") else g.r.choice("FOP")
+                                     for _ in range(n_ord)],
+                   "o_totalprice": [None if g.null("price")
+                                    else round(g.r.uniform(900, 400000), 2)
+                                    for _ in range(n_ord)],
+                   "o_orderdate": [g.ts(base) for _ in range(n_ord)],
+                   "o_orderpriority": [None if g.null("priority")
+                                       else g.r.choice(PRIORITIES)
+                                       for _ in range(n_ord)]})
     n_li = rows * 4
     lok, lln = [], []
     seen: dict[int, int] = {}
@@ -222,81 +202,67 @@ def build(out: Path, seed: int, rows: int, base: datetime | None = None) -> str:
         seen[ok] = seen.get(ok, 0) + 1
         lok.append(ok)
         lln.append(seen[ok])
-    write("lineitem",
-          {"l_orderkey": lok,
-           "l_partkey": [K + g.r.randint(1, n_part) for _ in range(n_li)],
-           "l_suppkey": [K + g.r.randint(1, n_supp) for _ in range(n_li)],
-           "l_linenumber": lln,
-           "l_quantity": [None if g.null("qty") else float(g.r.randint(1, 50))
-                          for _ in range(n_li)],
-           "l_extendedprice": [None if g.null("price")
-                               else round(g.r.uniform(900, 100000), 2)
-                               for _ in range(n_li)],
-           "l_discount": [None if g.null("price")
-                          else round(g.r.choice([0.0, 0.02, 0.05, 0.1]), 2)
-                          for _ in range(n_li)],
-           "l_tax": [None if g.null("price")
-                     else round(g.r.choice([0.0, 0.02, 0.04, 0.08]), 2)
-                     for _ in range(n_li)],
-           "l_returnflag": [None if g.null("flag") else g.r.choice("ARN")
-                            for _ in range(n_li)],
-           "l_linestatus": [None if g.null("flag") else g.r.choice("OF")
-                            for _ in range(n_li)],
-           "l_shipdate": [g.ts(base) for _ in range(n_li)]},
-          [("l_orderkey", pa.int64()), ("l_partkey", pa.int64()),
-           ("l_suppkey", pa.int64()), ("l_linenumber", pa.int32()),
-           ("l_quantity", pa.float64()), ("l_extendedprice", pa.float64()),
-           ("l_discount", pa.float64()), ("l_tax", pa.float64()),
-           ("l_returnflag", pa.string()), ("l_linestatus", pa.string()),
-           ("l_shipdate", pa.timestamp("us"))])
+    write_fixture(out, "lineitem",
+                  {"l_orderkey": lok,
+                   "l_partkey": [K + g.r.randint(1, n_part) for _ in range(n_li)],
+                   "l_suppkey": [K + g.r.randint(1, n_supp) for _ in range(n_li)],
+                   "l_linenumber": lln,
+                   "l_quantity": [None if g.null("qty") else float(g.r.randint(1, 50))
+                                  for _ in range(n_li)],
+                   "l_extendedprice": [None if g.null("price")
+                                       else round(g.r.uniform(900, 100000), 2)
+                                       for _ in range(n_li)],
+                   "l_discount": [None if g.null("price")
+                                  else round(g.r.choice([0.0, 0.02, 0.05, 0.1]), 2)
+                                  for _ in range(n_li)],
+                   "l_tax": [None if g.null("price")
+                             else round(g.r.choice([0.0, 0.02, 0.04, 0.08]), 2)
+                             for _ in range(n_li)],
+                   "l_returnflag": [None if g.null("flag") else g.r.choice("ARN")
+                                    for _ in range(n_li)],
+                   "l_linestatus": [None if g.null("flag") else g.r.choice("OF")
+                                    for _ in range(n_li)],
+                   "l_shipdate": [g.ts(base) for _ in range(n_li)]})
     n_ev = rows * 3
     # skewed users: user 0 dominates; one NULL-user slice
     users = [K + g.r.randint(1, max(2, rows // 4)) for _ in range(n_ev)]
-    write("events",
-          {"event_id": [K + i for i in range(1, n_ev + 1)],
-           "ts": [g.ts(base) for _ in range(n_ev)],
-           "user_id": [None if g.null("user") else
-                       (users[0] if g.r.random() < 0.3 else u)
-                       for u in users],
-           "event_type": [None if g.null("type") else g.r.choice(EVENT_TYPES)
-                          for _ in range(n_ev)],
-           "value": [g.value() for _ in range(n_ev)],
-           "props": [None if g.null("props")
-                     else g.r.choice(['{}', '{"k": 1}', '{"k": 7}', 'not json'])
-                     for _ in range(n_ev)]},
-          [("event_id", pa.int64()), ("ts", pa.timestamp("us")),
-           ("user_id", pa.int64()), ("event_type", pa.string()),
-           ("value", pa.float64()), ("props", pa.string())])
+    write_fixture(out, "events",
+                  {"event_id": [K + i for i in range(1, n_ev + 1)],
+                   "ts": [g.ts(base) for _ in range(n_ev)],
+                   "user_id": [None if g.null("user") else
+                               (users[0] if g.r.random() < 0.3 else u)
+                               for u in users],
+                   "event_type": [None if g.null("type") else g.r.choice(EVENT_TYPES)
+                                  for _ in range(n_ev)],
+                   "value": [g.value() for _ in range(n_ev)],
+                   "props": [None if g.null("props")
+                             else g.r.choice(['{}', '{"k": 1}', '{"k": 7}', 'not json'])
+                             for _ in range(n_ev)]})
     n_doc = rows
     texts = [g.text() for _ in range(n_doc)]
     for i in range(1, n_doc):  # exact-dup pairs at the seeded rate
         if texts[i - 1] is not None and g.r.random() < g.dup_p:
             texts[i] = texts[i - 1]
-    write("documents",
-          {"doc_id": [K + i for i in range(1, n_doc + 1)],
-           "text": texts,
-           "lang": [None if g.null("lang") else g.r.choice(["en", "fr", "ja", "ar"])
-                    for _ in range(n_doc)],
-           "source": [None if g.null("source") else g.r.choice(["web", "synth", "book"])
-                      for _ in range(n_doc)],
-           # n_chars is a DERIVED column (FIXTURES.md: len(text)) — it is
-           # NULL exactly when text is, never independently
-           "n_chars": [None if t is None else len(t) for t in texts]},
-          [("doc_id", pa.int64()), ("text", pa.string()),
-           ("lang", pa.string()), ("source", pa.string()),
-           ("n_chars", pa.int64())])
+    write_fixture(out, "documents",
+                  {"doc_id": [K + i for i in range(1, n_doc + 1)],
+                   "text": texts,
+                   "lang": [None if g.null("lang") else g.r.choice(["en", "fr", "ja", "ar"])
+                            for _ in range(n_doc)],
+                   "source": [None if g.null("source") else g.r.choice(["web", "synth", "book"])
+                              for _ in range(n_doc)],
+                   # n_chars is a DERIVED column (FIXTURES.md: len(text)) — it is
+                   # NULL exactly when text is, never independently
+                   "n_chars": [None if t is None else len(t) for t in texts]})
     n_vec = rows
     vecs = [g.vec() for _ in range(n_vec)]
     for i in range(1, n_vec):
         if vecs[i - 1] is not None and g.r.random() < g.dup_p:
             vecs[i] = list(vecs[i - 1])
-    write("embeddings",
-          {"vec_id": [K + i for i in range(1, n_vec + 1)],
-           "embedding": vecs,
-           "label": [None if g.null("label") else g.r.randint(0, 3)
-                     for _ in range(n_vec)]},
-          [("vec_id", pa.int64()), ("embedding", pa.list_(pa.float32())),
-           ("label", pa.int32())])
+    write_fixture(out, "embeddings",
+                  {"vec_id": [K + i for i in range(1, n_vec + 1)],
+                   "embedding": vecs,
+                   "label": [None if g.null("label") else g.r.randint(0, 3)
+                             for _ in range(n_vec)]})
     return str(out)
 
 

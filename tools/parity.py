@@ -24,6 +24,8 @@ from pathlib import Path
 
 import duckdb
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
@@ -32,6 +34,20 @@ from upc_sku_data_loader_spark import plans  # noqa: F401,E402  (populates regis
 from upc_sku_data_loader_spark.catalog import TABLES  # noqa: E402
 from upc_sku_data_loader_spark.registry import ORACLES, QUERIES  # noqa: E402
 from upc_sku_data_loader_spark.session import get_spark  # noqa: E402
+
+#: The fixture scale whose parquet footers give the sweep fixtures' schemas.
+REFERENCE_SF_DIR = "/root/testdata/sf0.001"
+
+
+def fixture_schema(name: str) -> pa.Schema:
+    """Table ``name``'s arrow schema, read from the reference fixture's
+    parquet footer (pandas metadata dropped)."""
+    return pq.read_schema(f"{REFERENCE_SF_DIR}/{name}.parquet").remove_metadata()
+
+
+def write_fixture(out: Path, name: str, cols: dict) -> None:
+    """Write ``cols`` as ``<out>/<name>.parquet`` with the fixture schema."""
+    pq.write_table(pa.table(cols, schema=fixture_schema(name)), f"{out}/{name}.parquet")
 
 
 def duck_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -222,8 +238,6 @@ def preflight(sf_dir: str) -> None:
     surfaced as 33 cryptic mid-sweep AnalysisExceptions).  Probe every
     table's parquet footer up front so an encoding change fails HERE with
     a labeled line instead."""
-    import pyarrow.parquet as pq
-
     # Measured fixture column sets (2026-08-13, all three SFs identical).
     expected_cols = {
         "region": {"r_regionkey", "r_name"},

@@ -23,18 +23,27 @@ Either way the engine-facing schema is ``ts timestamp_ntz`` +
 ``ts_ns bigint``.  ``nanosAsLong`` stays set for backward compat — it is
 a no-op on µs files.
 
-Scale note: loads are plain ``spark.read.parquet`` — columnar scan,
-predicate pushdown and column pruning all apply; at 100 TB the same call
-reads a partitioned directory tree and Catalyst prunes partitions.
+Every load is schema-pinned: :func:`read_schema` reads the table's
+parquet footer on the driver with pyarrow, and the load passes that
+schema to ``spark.read.schema(...)``, so no Spark footer-inference job
+runs.  The streaming source reads the same schema.
+
+Scale note: loads are plain parquet scans — columnar scan, predicate
+pushdown and column pruning all apply; at 100 TB the same call reads a
+directory tree, whose first data file gives the schema.
 """
 
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
+import pyarrow.parquet as pq
+import pyarrow.types as pat
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_type
 
 from .session import ensure_runtime_configs
 
@@ -60,16 +69,47 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     Dispatches on the landed Spark type (see module docstring): int64
     nanoseconds (ns parquet + nanosAsLong) vs a real timestamp (µs
     parquet).  Output schema is identical in both cases:
-    ``ts timestamp_ntz`` (µs precision) + ``ts_ns bigint`` appended.
+    ``ts timestamp_ntz`` (µs precision) + ``ts_ns bigint`` appended,
+    both computed from the input ``ts`` in one projection.
     """
     if isinstance(df.schema["ts"].dataType, T.LongType):
-        return df.withColumn("ts_ns", F.col("ts")).withColumn(
-            "ts", F.expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)")
-        )
-    return df.withColumn(
-        "ts_ns",
-        F.expr("unix_micros(cast(ts as timestamp)) * CAST(1000 AS BIGINT)"),
-    ).withColumn("ts", F.expr("cast(ts as timestamp_ntz)"))
+        ts_ns, ts = "ts", "cast(timestamp_micros(ts div 1000) as timestamp_ntz)"
+    else:
+        ts_ns = "unix_micros(cast(ts as timestamp)) * CAST(1000 AS BIGINT)"
+        ts = "cast(ts as timestamp_ntz)"
+    return df.withColumns({"ts_ns": F.expr(ts_ns), "ts": F.expr(ts)})
+
+
+def _data_files(path: str) -> list[Path]:
+    """The parquet files at ``path``: the file itself, or every
+    ``*.parquet`` under a Spark-written directory, in name order."""
+    root = Path(path)
+    return sorted(root.rglob("*.parquet")) if root.is_dir() else [root]
+
+
+def read_schema(path: str) -> T.StructType:
+    """The schema Spark reads for the parquet at ``path`` (a file or a
+    Spark-written directory), taken from the first data file's footer on
+    the driver — no Spark job.
+
+    Types map as Spark's own footer inference does: naive timestamps as
+    ``timestamp_ntz``, an ns timestamp as ``bigint`` (how it lands under
+    ``nanosAsLong``), an INT96 column as ``timestamp``, every top-level
+    column nullable.
+    """
+    footer = pq.ParquetFile(_data_files(path)[0])
+    leaves = [footer.schema.column(i) for i in range(len(footer.schema))]
+    int96 = {c.path for c in leaves if c.physical_type == "INT96"}
+    fields = []
+    for f in footer.schema_arrow:
+        if f.name in int96:
+            dt = T.TimestampType()
+        elif pat.is_timestamp(f.type) and f.type.unit == "ns":
+            dt = T.LongType()
+        else:
+            dt = from_arrow_type(f.type, prefer_timestamp_ntz=True)
+        fields.append(T.StructField(f.name, dt))
+    return T.StructType(fields)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -82,32 +122,23 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     ensure_runtime_configs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(read_schema(path)).parquet(path)
     if name == "events":
         df = normalize_events_ts(df)
     return df
 
 
-def parquet_rowcount(spark: SparkSession, sf_dir: str, name: str) -> int:
+def parquet_rowcount(sf_dir: str, name: str) -> int:
     """RAW row count of a fixture table from its parquet footers — a
     driver-side metadata read (~1 ms), no Spark job.  Used by plan-time
     strategy gates (e.g. the deliberate join build side in plans/joins.py
     and the broadcast-vs-blocked switch in operators/similarity.py) so
     the physical strategy adapts to the INPUT size rather than being
-    pinned for either local mode or the cluster.  Handles the single-file
-    fixture layout and Spark-written directories; any failure (remote FS,
-    exotic layout) falls back to the Spark metadata count, which is still
-    footer-driven."""
-    import pyarrow.parquet as pq
-    from pathlib import Path
-
-    root = Path(f"{sf_dir}/{name}.parquet")
-    try:
-        if root.is_dir():
-            return sum(pq.read_metadata(p).num_rows for p in root.rglob("*.parquet"))
-        return pq.read_metadata(root).num_rows
-    except Exception:
-        return load(spark, sf_dir, name).count()
+    pinned for either local mode or the cluster."""
+    return sum(
+        pq.read_metadata(p).num_rows for p in _data_files(f"{sf_dir}/{name}.parquet")
+    )
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -241,12 +241,12 @@ def _chunk_topk(
     return tuple(np.concatenate(cols) for cols in zip(*outs))  # type: ignore[return-value]
 
 
-def _pick_strategy(strategy: str, spark: SparkSession, sf_dir: str) -> str:
+def _pick_strategy(strategy: str, sf_dir: str) -> str:
     if strategy == "auto":
         # The RAW footer count is a conservative stand-in for the
         # post-finiteness count (raw >= finite), so "auto" never
         # broadcasts a side the threshold would have rejected.
-        n = parquet_rowcount(spark, sf_dir, "embeddings")
+        n = parquet_rowcount(sf_dir, "embeddings")
         return "broadcast" if n <= BROADCAST_MAX_ROWS else "blocked"
     if strategy not in ("broadcast", "blocked"):
         raise ValueError(f"unknown similarity strategy {strategy!r}")
@@ -285,7 +285,7 @@ def _knn_broadcast(
     ids, mat = embedding_matrix(spark, sf_dir)
     bc = spark.sparkContext.broadcast((ids, mat))
     queries = _fan_out(
-        queries, est_rows=parquet_rowcount(spark, sf_dir, "embeddings")
+        queries, est_rows=parquet_rowcount(sf_dir, "embeddings")
     )
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -405,7 +405,7 @@ def knn_join(
     queries = _raw_vecs(spark, sf_dir)
     if query_filter:
         queries = queries.filter(query_filter)
-    if _pick_strategy(strategy, spark, sf_dir) == "broadcast":
+    if _pick_strategy(strategy, sf_dir) == "broadcast":
         return _knn_broadcast(spark, sf_dir, queries, k)
     return _knn_blocked(spark, sf_dir, queries, k, n_blocks)
 
@@ -474,7 +474,7 @@ def dedup_embedding(
     min-dup-id partial and reduces with a keyed min — associative, so
     bit-identical to the broadcast answer."""
     vecs = _raw_vecs(spark, sf_dir)
-    if _pick_strategy(strategy, spark, sf_dir) == "broadcast":
+    if _pick_strategy(strategy, sf_dir) == "broadcast":
         ids, mat = embedding_matrix(spark, sf_dir)
         bc = spark.sparkContext.broadcast((ids, mat))
 
@@ -494,7 +494,7 @@ def dedup_embedding(
                     }
                 )
 
-        n = parquet_rowcount(spark, sf_dir, "embeddings")
+        n = parquet_rowcount(sf_dir, "embeddings")
         return _fan_out(vecs, est_rows=n).mapInPandas(
             compute, "vec_id bigint, dup_of bigint, is_keeper boolean"
         )

@@ -75,7 +75,7 @@ def c1_join_inner_equi(spark: SparkSession, sf_dir: str) -> DataFrame:
     co = c.join(o, c.c_custkey == o.o_custkey, "inner").select(
         "o_orderkey", "o_orderdate", "o_orderpriority"
     )
-    if parquet_rowcount(spark, sf_dir, "orders") <= _C1_BROADCAST_MAX_ORDERS:
+    if parquet_rowcount(sf_dir, "orders") <= _C1_BROADCAST_MAX_ORDERS:
         co = F.broadcast(co)
     return (
         li.join(co, li.l_orderkey == co.o_orderkey, "inner")

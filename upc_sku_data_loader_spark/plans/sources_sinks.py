@@ -23,7 +23,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import load, read_schema
 from ..functions.exprs import fsum, fsum_sql
 from ..functions.upc import gtin_check_digit_sql
 from ..registry import query
@@ -497,24 +497,11 @@ def i10_output_modes_triggers(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(src, ignore_errors=True)
     # 4 files ⇒ 4 micro-batches; watermark advances between them.  The scratch
     # copy is written in the CANONICAL form (ts as µs timestamp_ntz, via
-    # catalog.normalize_events_ts) so the streaming schema below is
-    # independent of which physical encoding (ns vs µs) the fixture shipped.
+    # catalog.normalize_events_ts), so its footer schema is the same
+    # whichever physical encoding (ns vs µs) the fixture shipped.
     load(spark, sf_dir, "events").drop("ts_ns").repartition(4).write.parquet(src)
-
-    from pyspark.sql import types as T
-
-    canon_schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampNTZType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
     raw = (
-        spark.readStream.schema(canon_schema)
+        spark.readStream.schema(read_schema(src))
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
         # watermark needs TIMESTAMP (LTZ); session tz is pinned UTC so the
@@ -2658,7 +2645,7 @@ def a28_metadata_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     checksum manifest builder, and partition pruning still applies
     because `_metadata` adds no read columns.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load(spark, sf_dir, "lineitem")
     return (
         li.select(
             F.col("_metadata.file_name").alias("file_name"),

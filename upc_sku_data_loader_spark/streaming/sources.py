@@ -2,14 +2,13 @@
 
 ``events`` as an unbounded stream: ``spark.readStream.schema(...)
 .parquet(dir)`` — file-based micro-batches, the standard pattern for
-replayable ingestion.  Unlike the batch reader, ``readStream`` *imposes*
-the declared schema rather than inferring one, so the ``ts`` field type
-must match the physical encoding; the fixtures have shipped as both
-timestamp[ns] (lands as int64 under nanosAsLong) and timestamp[µs]
-(lands as a timestamp).  We probe the parquet footer with pyarrow once
-per source construction (driver-side, O(1)) and declare the matching
-schema, then normalize identically to the batch catalog so streaming and
-batch twins agree bit-for-bit.
+replayable ingestion.  ``readStream`` needs a declared schema; it is
+``catalog.read_schema`` of the fixture file, read from its parquet
+footer on the driver exactly as the batch load reads it (no inference
+job), so the ``ts`` type follows the physical encoding (ns lands as
+int64 under nanosAsLong, µs as a timestamp).  The stream is then
+normalized like the batch load, so streaming and batch twins agree
+bit-for-bit.
 
 Scale note: at production scale the same code points at an object-store
 prefix; ``maxFilesPerTrigger`` bounds micro-batch size, and the
@@ -23,10 +22,8 @@ from contextlib import contextmanager
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..catalog import normalize_events_ts
+from ..catalog import normalize_events_ts, parquet_rowcount, read_schema
 from ..session import ensure_runtime_configs
 
 #: Streaming state sizing: rows of source input per state partition.
@@ -55,11 +52,9 @@ def stream_state_partitions(
     partition count for the duration of one streaming query run (set
     before ``start()``, restored after ``awaitTermination()``).  See
     the module note above for the measurement and the scale argument."""
-    from ..catalog import parquet_rowcount
-
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        n = parquet_rowcount(spark, sf_dir, table)
+        n = parquet_rowcount(sf_dir, table)
         target = min(
             int(old), max(4, math.ceil(n / _STREAM_ROWS_PER_STATE_PART))
         )
@@ -69,39 +64,11 @@ def stream_state_partitions(
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def _events_ts_field(sf_dir: str) -> T.DataType:
-    """Probe the parquet footer to pick the declared ``ts`` field type.
-
-    timestamp[ns] files land as int64 under nanosAsLong → LongType;
-    timestamp[µs] files land as a timestamp → TimestampNTZType.  Footer
-    read is driver-side and O(1) — no data scan.
-    """
-    import pyarrow.parquet as pq
-
-    arrow_type = pq.read_schema(f"{sf_dir}/events.parquet").field("ts").type
-    if str(arrow_type) in ("timestamp[ns]", "int64"):
-        return T.LongType()
-    return T.TimestampNTZType()
-
-
-def events_raw_schema(sf_dir: str) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", _events_ts_field(sf_dir)),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-
-
 def read_events_stream(
     spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
     ensure_runtime_configs(spark)
-    reader = spark.readStream.schema(events_raw_schema(sf_dir))
+    reader = spark.readStream.schema(read_schema(f"{sf_dir}/events.parquet"))
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     # Stream a glob that matches exactly the fixture file.  Listing the

@@ -1,7 +1,10 @@
 """Shared fixtures: one small local SparkSession for the whole run
-(SURVEY §5.3.1 — local[4], shuffle=4, tiny fixtures at sf0.001).
+(SURVEY §5.3.1 — local[4], tiny fixtures at sf0.001).
 
-local[4]/shuffle=4 is MEASURED, not arbitrary: a round-6 experiment at
+``SPARK_GRAFT_CPUS`` alone sets the width: ``get_spark`` runs
+``local[$SPARK_GRAFT_CPUS]`` and sizes the shuffle to the same core
+count, so the default below gives local[4] with 4 shuffle partitions.
+That width is MEASURED, not arbitrary: a round-6 experiment at
 local[8]/shuffle=8 made the suite SLOWER (13m53s → 17m02s, sys time
 3×) — at sf0.001 per-task overhead dominates, and iterative operators
 (k62 pointer doubling, k37 label propagation) pay the extra task count
@@ -24,7 +27,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
-    os.environ.setdefault("SPARK_GRAFT_SHUFFLE", "4")
     from upc_sku_data_loader_spark.session import get_spark
 
     s = get_spark(app_name="pytest")

@@ -97,7 +97,7 @@ def test_stream_load_canonical_schema(spark, fixture_dirs, unit):
     agg = stream.groupBy("event_type").agg(
         F.max("ts_ns").alias("max_ns"), F.count(F.lit(1)).alias("n")
     )
-    out = run_available_now(agg, f"t_events_enc_{unit}")
+    out = run_available_now(agg, f"t_events_enc_{unit}", "complete")
     got = {r.event_type: (r.max_ns, r.n) for r in out.collect()}
     assert got == {
         "view": (1704067798778549000, 1),

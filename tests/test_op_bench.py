@@ -22,7 +22,7 @@ NAMES = ["d1_agg_hash_grouped", "k18_ngram_jaccard"]  # k18 holds blocks
 def test_profiles_each_query_at_each_scale(sf_dir):
     sf_dirs = [sf_dir, str(Path(sf_dir).parent / "sf0.01")]
     # a subprocess: the event log is a static conf, set before the session starts
-    env = {"SPARK_GRAFT_SHUFFLE": "4", "SPARK_GRAFT_DRIVER_MEM": "2g", **os.environ}
+    env = {"SPARK_GRAFT_DRIVER_MEM": "2g", **os.environ}
     proc = subprocess.run(
         [sys.executable, str(REPO / "tools" / "op_bench.py"), "--reps", "1", *NAMES,
          "--sf", *sf_dirs],

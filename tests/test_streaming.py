@@ -24,6 +24,7 @@ def test_stream_tumbling_equals_batch(spark, sf_dir):
     streamed = run_available_now(
         stream.groupBy(F.window("ts", "1 hour"), "event_type").agg(*agg_cols),
         "t_stream_eq",
+        "complete",
     ).select(F.col("window.start").alias("ws"), "event_type", "n", "sum_value")
 
     batch = (
@@ -77,15 +78,7 @@ def test_stateful_session_state_spans_micro_batches(spark, tmp_path):
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName("t_sess_span")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.table("t_sess_span").collect()
+    rows = run_available_now(sessions, "t_sess_span", "append").collect()
     # one closed session spanning both files; the 12:00 session stays open
     assert len(rows) == 1
     r = rows[0]
@@ -130,15 +123,7 @@ def test_watermark_finalizes_windows_exactly_once(spark, tmp_path):
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("window.start").alias("ws"), "n")
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("t_late")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    emitted = spark.table("t_late").collect()
+    emitted = run_available_now(stream, "t_late", "append").collect()
     rows = {r["ws"].strftime("%H:%M"): r["n"] for r in emitted}
     # the late 03:30 row must not update or re-emit the finalized window
     assert rows.get("03:00") == 1
@@ -168,6 +153,61 @@ def test_a16b_stream_source_is_streaming_and_tiles(spark, sf_dir):
     out = QUERIES["a16b_python_stream_source"](spark, sf_dir).collect()
     assert sum(r["n"] for r in out) == 2000
     assert sum(r["sum_seq"] for r in out) == 2000 * 1999 // 2
+
+
+# --- state width: the runner's gate scopes it to one run ----------------------
+
+
+def test_state_gate_scopes_width_to_one_run(spark, sf_dir):
+    """With ``sf_dir`` the runner narrows a stateful stream's partition
+    count to the events-derived width (4 at fixture scale) even when the
+    session is wider, and leaves the session width as it found it;
+    without ``sf_dir`` the state takes the session width."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class StateWidths(StreamingQueryListener):
+        def __init__(self):
+            self.seen: dict[str, set[int]] = {}
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            widths = self.seen.setdefault(p.name, set())
+            widths.update(op.numShufflePartitions for op in p.stateOperators)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    listener = StateWidths()
+    spark.streams.addListener(listener)
+    try:
+        spark.conf.set(key, "8")
+        agg = (
+            read_events_stream(spark, sf_dir)
+            .withColumn("tse", F.col("ts").cast("timestamp"))
+            .withWatermark("tse", "10 minutes")
+            .groupBy(F.window("tse", "1 hour"))
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
+        run_available_now(agg, "t_state_gated", "append", sf_dir)
+        assert spark.conf.get(key) == "8"
+        run_available_now(agg, "t_state_session", "append")
+        # progress events reach Python listeners asynchronously
+        deadline = time.time() + 60
+        names = ("t_state_gated", "t_state_session")
+        while not all(listener.seen.get(n) for n in names) and time.time() < deadline:
+            time.sleep(0.2)
+        assert listener.seen == {"t_state_gated": {4}, "t_state_session": {8}}
+    finally:
+        spark.streams.removeListener(listener)
+        spark.conf.set(key, old)
 
 
 # --- i16 streaming left-outer join ---------------------------------------------

@@ -134,7 +134,6 @@ def main() -> int:
         env["SPARK_GRAFT_SCRATCH"] = str(shard_root)
         env["SPARK_GRAFT_WAREHOUSE"] = str(shard_root / "warehouse")
         env.setdefault("SPARK_GRAFT_CPUS", "4")
-        env.setdefault("SPARK_GRAFT_SHUFFLE", "4")
         log = REPO / ".scratch" / f"_shard{i}.log"
         log.parent.mkdir(parents=True, exist_ok=True)
         cmd = [sys.executable, "-m", "pytest", "-q", *sel, *args.extra]

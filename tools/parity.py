@@ -239,6 +239,10 @@ def preflight(sf_dir: str) -> None:
     table's parquet footer up front so an encoding change fails HERE with
     a labeled line instead."""
     # Measured fixture column sets (2026-08-13, all three SFs identical).
+    # Kept by hand on purpose: this is the engine's stored expectation,
+    # independent of the fixtures.  Deriving it from ``fixture_schema``
+    # (the sf0.001 footers) would pass a regeneration that changes every
+    # fixture dir at once, which is the case this check exists to catch.
     expected_cols = {
         "region": {"r_regionkey", "r_name"},
         "nation": {"n_nationkey", "n_name", "n_regionkey"},

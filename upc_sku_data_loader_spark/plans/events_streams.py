@@ -25,11 +25,7 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..functions.exprs import dsum, fsum, fsum_sql
 from ..registry import query
-from ..streaming.sources import (
-    read_events_stream,
-    run_available_now,
-    stream_state_partitions,
-)
+from ..streaming.sources import read_events_stream, run_available_now
 
 # Shared DuckDB gaps-and-islands sessionization (twin for I3 and I6).
 # Gap-boundary convention (fuzz sweep, seed 7): an event EXACTLY `gap`
@@ -175,7 +171,7 @@ def i4_watermark_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("w.start").alias("hour_start"), "event_type", "n_events")
     )
-    out = run_available_now(agg, "i4_watermark_sink", sf_dir)
+    out = run_available_now(agg, "i4_watermark_sink", "complete", sf_dir)
     return out.withColumn("hour_start", F.col("hour_start").cast("timestamp_ntz"))
 
 
@@ -443,22 +439,13 @@ def i6b_stateful_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    # NO stream_state_partitions gate here (measured r10): i6b's wall
-    # is the per-row Python state machine, not state-store commits —
-    # shrinking to 4 state partitions also shrank the pool of parallel
-    # Python workers and made it 1.8x SLOWER (1.9 s → 3.4 s).  The
-    # session shuffle default keeps the Python work wide; state commit
-    # cost is secondary for a single-store stateful op.
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName("i6b_sessions")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    # No sf_dir, so no state gate: i6b's cost is the per-row Python
+    # state machine, not state-store commits, and each state partition
+    # is one Python worker, so its width follows the cores (the session
+    # width).  Narrowed from a session width of 32 to 4, it ran 1.8x
+    # slower (1.9 s → 3.4 s).
     return (
-        spark.table("i6b_sessions")
+        run_available_now(sessions, "i6b_sessions", "append")
         .withColumn("session_start", F.col("session_start").cast("timestamp_ntz"))
         .withColumn("session_end", F.col("session_end").cast("timestamp_ntz"))
     )
@@ -584,7 +571,7 @@ def i13_stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
     )
-    out = run_available_now(agg, "i13_sliding_sink", sf_dir)
+    out = run_available_now(agg, "i13_sliding_sink", "complete", sf_dir)
     return out.withColumn("window_start", F.col("window_start").cast("timestamp_ntz"))
 
 
@@ -620,16 +607,8 @@ def i15_stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["event_id", "event_type", "user_id"]
     )
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    with stream_state_partitions(spark, sf_dir):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(f"i15_dedup_{tag}")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(f"i15_dedup_{tag}").select("event_id", "event_type", "user_id")
+    out = run_available_now(deduped, f"i15_dedup_{tag}", "append", sf_dir)
+    return out.select("event_id", "event_type", "user_id")
 
 
 # --- I16: TRUE streaming stream-stream LEFT OUTER join ------------------------
@@ -716,16 +695,7 @@ def i16_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (c.c_ts <= p.p_ts),
         "leftOuter",
     )
-    with stream_state_partitions(spark, sf_dir):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName("i16_outer")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("i16_outer").select(
+    return run_available_now(joined, "i16_outer", "append", sf_dir).select(
         "purchase_id",
         "user_id",
         F.col("p_ts").cast("timestamp_ntz").alias("p_ts"),
@@ -803,16 +773,7 @@ def i17_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 4).alias("total_value"),
         )
     )
-    with stream_state_partitions(spark, sf_dir):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("i17_sessions")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("i17_sessions").select(
+    return run_available_now(agg, "i17_sessions", "append", sf_dir).select(
         "user_id",
         F.col("sw.start").cast("timestamp_ntz").alias("session_start"),
         # Spark's session window end = last event + gap; expose the
@@ -869,7 +830,7 @@ def i18_stream_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     counted = bucketed.groupBy("w", "event_type").agg(
         F.count(F.lit(1)).alias("n_users")
     )
-    out = run_available_now(counted, "i18_distinct_users", sf_dir)
+    out = run_available_now(counted, "i18_distinct_users", "complete", sf_dir)
     return out.select(
         F.col("w.start").cast("timestamp_ntz").alias("ws"),
         "event_type",

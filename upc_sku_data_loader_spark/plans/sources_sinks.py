@@ -30,11 +30,7 @@ from ..registry import query
 from ..sources.db import db_sink_upsert, db_source, jdbc_sink_append
 from ..sources.files import csv_source, json_source, parquet_sink
 from ..sources.rest_api import fetch_products
-from ..streaming.sources import (
-    read_events_stream,
-    run_available_now,
-    stream_state_partitions,
-)
+from ..streaming.sources import read_events_stream, run_available_now
 
 _REPO = Path(__file__).resolve().parents[2]
 
@@ -339,7 +335,7 @@ def a9_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_events_stream(spark, sf_dir)
     agg = stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
     tag = (Path(sf_dir).name or "sf").replace(".", "_")
-    return run_available_now(agg, f"a9_counts_{tag}", sf_dir)
+    return run_available_now(agg, f"a9_counts_{tag}", "complete", sf_dir)
 
 
 # --- I9: foreachBatch → idempotent DB upsert (the reference's load loop,
@@ -519,17 +515,8 @@ def i10_output_modes_triggers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     tag = (Path(sf_dir).name or "sf").replace(".", "_")
-    name = f"i10_append_{tag}"
-    with stream_state_partitions(spark, sf_dir):
-        q = (
-            windowed.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")  # ≠ complete: only watermark-closed windows
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    # append ≠ complete: only watermark-closed windows
+    return run_available_now(windowed, f"i10_append_{tag}", "append", sf_dir)
 
 
 # --- A10: ORC round-trip (columnar alternative to parquet) --------------------
@@ -1263,7 +1250,6 @@ def a16b_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly — proving the offset ranges tile the stream with no gap or
     overlap."""
     from ..sources.python_ds import UpcWorklistDataSource
-    from ..streaming.sources import run_available_now
 
     try:
         spark.dataSource.register(UpcWorklistDataSource)
@@ -1280,7 +1266,7 @@ def a16b_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("seq").cast("bigint").alias("sum_seq"),
     )
     tag = (Path(sf_dir).name or "sf").replace(".", "_")
-    return run_available_now(agg, f"a16b_stream_{tag}", sf_dir)
+    return run_available_now(agg, f"a16b_stream_{tag}", "complete", sf_dir)
 
 
 # --- ETL7: data-quality expectation suite (single-pass audit report) ----------

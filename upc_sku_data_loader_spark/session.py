@@ -11,8 +11,12 @@ Scale notes (100 TB design point):
 - AQE stays on (default in Spark 3.2+): runtime shuffle-partition
   coalescing + skew-join splitting is the main defense at 1000-executor
   scale; we never hand-pick per-query partition counts.
-- ``shuffle.partitions`` here is only the *local test* default; on a
-  real cluster it is set by the cluster conf (or AQE's
+- ``shuffle.partitions`` follows the session's cores: ``get_spark``
+  sets it to ``defaultParallelism``, the width the explicit partition
+  counts (etl, rest_api, dedup, similarity) already read, so it tracks
+  ``SPARK_GRAFT_CPUS``.  Spark's default of 200 is pure scheduling
+  overhead at fixture scale.  On a real cluster the cluster's conf sets
+  it (or AQE's
   ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``).
 """
 
@@ -62,26 +66,21 @@ def ensure_runtime_configs(spark: SparkSession) -> SparkSession:
 def get_spark(
     app_name: str = "upc-sku-data-loader-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (fallback
     ``local[*]``); on a real cluster pass ``master=None`` with the conf
-    coming from spark-submit.
+    coming from spark-submit.  The shuffle width is the session's
+    ``defaultParallelism``.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        # Small local fixtures: 200 default partitions is pure scheduling
-        # overhead. AQE coalesces anyway; 32 matches local core count.
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # Python-worker connect-back defaults to 15 s; a fork under a
@@ -101,6 +100,9 @@ def get_spark(
     for k, v in RUNTIME_CONFIGS.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    )
     return ensure_runtime_configs(spark)
 
 

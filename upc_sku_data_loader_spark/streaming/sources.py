@@ -10,6 +10,12 @@ int64 under nanosAsLong, µs as a timestamp).  The stream is then
 normalized like the batch load, so streaming and batch twins agree
 bit-for-bit.
 
+``run_available_now`` is the one runner for memory-sink streams: every
+registry query that drains a stream into a memory sink calls it with
+its output mode (``"complete"`` or ``"append"``) and, where state
+width matters, its ``sf_dir``.  The foreachBatch and parquet sinks
+(i9, i12, i19) hold no memory-sink state and start their own writers.
+
 Scale note: at production scale the same code points at an object-store
 prefix; ``maxFilesPerTrigger`` bounds micro-batch size, and the
 checkpoint directory gives exactly-once with idempotent sinks.
@@ -18,7 +24,7 @@ checkpoint directory gives exactly-once with idempotent sinks.
 from __future__ import annotations
 
 import math
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,29 +38,29 @@ from ..session import ensure_runtime_configs
 #: the checkpoint), and EVERY micro-batch pays a fixed per-partition
 #: per-store commit cost (HDFS state store: delta file write + rename
 #: per store per partition — a stream-stream outer join carries 4
-#: stores).  Measured (r10, i16 at sf0.1 = 200k input rows): 32
+#: stores).  Measured (i16 at sf0.1 = 200k input rows): 32
 #: partitions → 18.2 s wall with state commitTimeMs dominating; 8 →
 #: 4.1 s; 4 → 2.8 s, identical output.  The right count follows the
-#: DATA (state volume / throughput), not the local core count, so the
-#: gate below derives it from the parquet-footer row count of the
-#: source and caps it at the session's configured shuffle partitions
-#: (the cluster-tuned authority at real scale — the gate only prevents
-#: OVERsharding tiny state, it never overrides an operator that needs
-#: more).
+#: DATA (state volume / throughput), not the core count, so the gate
+#: below derives it from the parquet-footer row count of the source and
+#: caps it at the session's shuffle width (``defaultParallelism`` from
+#: ``get_spark``, or the cluster conf at real scale — the gate only
+#: prevents OVERsharding tiny state, it never overrides an operator that
+#: needs more).  A per-query ``repartition`` cannot do this: a stateful
+#: operator's partition count is read from the session conf, so the
+#: scope below is the one session-conf mutation outside session start.
 _STREAM_ROWS_PER_STATE_PART = 50_000
 
 
 @contextmanager
-def stream_state_partitions(
-    spark: SparkSession, sf_dir: str, table: str = "events"
-) -> Iterator[None]:
+def _stream_state_partitions(spark: SparkSession, sf_dir: str) -> Iterator[None]:
     """Scope ``spark.sql.shuffle.partitions`` to an input-derived state
     partition count for the duration of one streaming query run (set
     before ``start()``, restored after ``awaitTermination()``).  See
     the module note above for the measurement and the scale argument."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        n = parquet_rowcount(sf_dir, table)
+        n = parquet_rowcount(sf_dir, "events")
         target = min(
             int(old), max(4, math.ceil(n / _STREAM_ROWS_PER_STATE_PART))
         )
@@ -85,30 +91,35 @@ def read_events_stream(
 
 
 def run_available_now(
-    stream_df: DataFrame, view_name: str, sf_dir: str | None = None
+    stream_df: DataFrame,
+    view_name: str,
+    output_mode: str,
+    sf_dir: str | None = None,
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion (availableNow) into a
-    memory sink in *complete* output mode; return the result as a batch
-    DataFrame.  Complete mode emits every window/group regardless of the
-    final watermark, so the result equals the batch twin exactly.
+    memory sink named ``view_name``; return the sink as a batch
+    DataFrame.  This is the one place a memory-sink stream starts.
 
-    When ``sf_dir`` is given, the run is scoped by
-    :func:`stream_state_partitions` so the state-partition count tracks
-    the input size instead of the session shuffle default."""
+    ``output_mode`` is part of the query's meaning, so every caller
+    names it:
+
+    - ``"complete"`` emits every window/group regardless of the final
+      watermark, so the result equals the batch twin exactly;
+    - ``"append"`` emits only rows the watermark has finalized (closed
+      windows, evicted join/dedup/session state), so the result is the
+      stream's emission contract, not its batch twin.
+
+    When ``sf_dir`` is given, the run is scoped by the state gate (see
+    ``_STREAM_ROWS_PER_STATE_PART``) so the state-partition count tracks
+    the size of ``sf_dir``'s events instead of the session width."""
     spark = stream_df.sparkSession
-
-    def _run() -> DataFrame:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(view_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.table(view_name)
-
-    if sf_dir is None:
-        return _run()
-    with stream_state_partitions(spark, sf_dir):
-        return _run()
+    writer = (
+        stream_df.writeStream.format("memory")
+        .queryName(view_name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+    )
+    scope = _stream_state_partitions(spark, sf_dir) if sf_dir else nullcontext()
+    with scope:
+        writer.start().awaitTermination()
+    return spark.table(view_name)

@@ -87,8 +87,11 @@ HEADLINE_PLAN_SNAPSHOT = {
     },
     # r10: topk_pairs' least/greatest+dropDuplicates (an Exchange +
     # HashAggregate) replaced by the provably-equivalent q<neighbor
-    # filter — the kernel output feeds TakeOrdered directly.
-    "k3_similarity_topk": {"MapInPandas": 1},
+    # filter — the kernel output feeds TakeOrdered directly.  The
+    # kernel runs on the driver below _TOPK_CELL_BUDGET (similarity.py's
+    # driver tier), so its rows arrive as a local relation: no
+    # MapInPandas, no Exchange.
+    "k3_similarity_topk": {"LocalTableScan": 1},
 }
 
 _PLAN_MARKERS = [
@@ -101,6 +104,7 @@ _PLAN_MARKERS = [
     "BroadcastNestedLoopJoin",
     "MapInPandas",
     "FlatMapCoGroupsInPandas",
+    "LocalTableScan",
     "ArrowEvalPython",
     "BatchEvalPython",
     "Window",

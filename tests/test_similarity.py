@@ -82,7 +82,9 @@ def test_blocked_strategy_bit_identical_and_driver_free(spark, sf_dir):
     """The beyond-broadcast path must (a) never collect the reference
     side to the driver — its physical plan is cogroup-shaped — and
     (b) produce bit-identical results to the broadcast kernel (disjoint
-    per-block partials + same deterministic re-rank key)."""
+    per-block partials + same deterministic re-rank key).  At fixture
+    scale the broadcast strategy takes its driver tier; the fan-out
+    tier is pinned against it in test_vectors_dedup's gate test."""
     from upc_sku_data_loader_spark.operators.similarity import topk_pairs
 
     def rows(df):
@@ -114,6 +116,92 @@ def test_blocked_strategy_bit_identical_and_driver_free(spark, sf_dir):
         .toString()
     )
     assert "FlatMapCoGroupsInPandas" in plan
+
+
+_DRIVER_TIER = ("k3_similarity_topk", "k4_knn_join", "k17_dedup_embedding")
+
+
+def _executed_plan(spark, name, sf_dir):
+    from upc_sku_data_loader_spark import plans  # noqa: F401  (registry)
+    from upc_sku_data_loader_spark.registry import QUERIES
+
+    df = QUERIES[name](spark, sf_dir)
+    return df, df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_driver_tier_starts_no_python_worker(spark, sf_dir, monkeypatch):
+    """A problem that fits one sub-block runs on the driver: the
+    executed plans of k3/k4/k17 hold no MapInPandas.  Zeroing the
+    budget brings the fan-out's MapInPandas back."""
+    from upc_sku_data_loader_spark.operators import similarity as S
+
+    for name in _DRIVER_TIER:
+        assert "MapInPandas" not in _executed_plan(spark, name, sf_dir)[1], name
+    monkeypatch.setattr(S, "_TOPK_CELL_BUDGET", 0)
+    for name in _DRIVER_TIER:
+        assert "MapInPandas" in _executed_plan(spark, name, sf_dir)[1], name
+
+
+def _embeddings_dir(tmp_path, vectors):
+    """An sf dir whose only table is ``embeddings``: (vec_id, vector)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array([v[0] for v in vectors], pa.int64()),
+                "embedding": pa.array([v[1] for v in vectors], pa.list_(pa.float32())),
+                "label": pa.array([0] * len(vectors), pa.int32()),
+            }
+        ),
+        tmp_path / "embeddings.parquet",
+    )
+    return str(tmp_path)
+
+
+#: every way a vector leaves the finite-vector convention
+_NON_FINITE = [
+    (0, None),
+    (40, [float("nan"), 1.0]),
+    (60, [float("inf"), 0.0]),
+    (80, [float("-inf"), 1.0]),
+    (100, [None, 1.0]),
+]
+
+
+def test_driver_tier_without_a_finite_vector_is_empty(spark, tmp_path):
+    """Every vector non-finite or NULL: each query returns no rows and
+    the exact schema of its other tiers."""
+    sf = _embeddings_dir(tmp_path, _NON_FINITE)
+    schemas = {
+        "k3_similarity_topk": "a bigint, b bigint, sim double",
+        "k4_knn_join": "q_vec_id bigint, neighbor_id bigint, sim double, rank int",
+        "k17_dedup_embedding": "vec_id bigint, dup_of bigint, is_keeper boolean",
+    }
+    for name in _DRIVER_TIER:
+        df, plan = _executed_plan(spark, name, sf)
+        assert "MapInPandas" not in plan, name
+        assert df.collect() == [], name
+        assert df.schema == spark.createDataFrame([], schemas[name]).schema, name
+
+
+def test_driver_tier_with_one_finite_vector(spark, tmp_path):
+    """One finite vector among invalid ones: it has no neighbor (k3 and
+    k4 return no rows) and is its own keeper (k17 returns one row)."""
+    sf = _embeddings_dir(tmp_path, _NON_FINITE + [(20, [0.6, 0.8])])
+    got = {name: _executed_plan(spark, name, sf)[0].collect() for name in _DRIVER_TIER}
+    assert got["k3_similarity_topk"] == []
+    assert got["k4_knn_join"] == []
+    assert [tuple(r) for r in got["k17_dedup_embedding"]] == [(20, None, True)]
+
+
+def test_driver_tier_query_flag_follows_finite_rows(spark, tmp_path):
+    """k4's query flag rides in the matrix collect: after the invalid
+    first row drops, the flag must still mark vec_id 20, not 21."""
+    sf = _embeddings_dir(tmp_path, [(1, None), (20, [1.0, 0.0]), (21, [0.6, 0.8])])
+    rows = _executed_plan(spark, "k4_knn_join", sf)[0].collect()
+    assert [tuple(r) for r in rows] == [(20, 21, 0.6, 1)]
 
 
 def test_ann_ivf_trains_without_full_collect(spark, sf_dir, monkeypatch):

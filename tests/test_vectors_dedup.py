@@ -178,6 +178,7 @@ def test_dedup_clusters_driver_and_distributed_paths_agree(spark, monkeypatch):
 
 
 _DEDUP = "upc_sku_data_loader_spark.operators.dedup"
+_SIMILARITY = "upc_sku_data_loader_spark.operators.similarity"
 
 #: (module, gate constant, registry query that reaches the gate)
 _GATES = [
@@ -191,6 +192,9 @@ _GATES = [
         "_C1_BROADCAST_MAX_ORDERS",
         "c1_join_inner_equi",
     ),
+    (_SIMILARITY, "_TOPK_CELL_BUDGET", "k3_similarity_topk"),
+    (_SIMILARITY, "_TOPK_CELL_BUDGET", "k4_knn_join"),
+    (_SIMILARITY, "_TOPK_CELL_BUDGET", "k17_dedup_embedding"),
 ]
 
 
@@ -199,8 +203,9 @@ def test_zero_gate_matches_default_path(spark, sf_dir, monkeypatch, module, gate
     """Every size-gated driver fast path and the path beyond its gate
     emit the same rows: zeroing the gate constant forces the other side
     (the CSR kernel's distributed verify, the distributed edge loops,
-    c1's shuffle join).  Rows compare as a multiset, so a duplicate on
-    either side fails too."""
+    c1's shuffle join, the similarity kernels' fan-out broadcast).
+    Rows compare as a multiset, so a duplicate on either side fails
+    too."""
     import importlib
     from collections import Counter
 

@@ -15,6 +15,13 @@ these), the per-rep layer profile that ``perfbench/tracing.py`` reads
 from Spark's event log, and the ``session.*`` counts of what the query
 left behind once its result was dropped (``perfbench.workloads.Hygiene``).
 
+The ten memory-sink stream queries (a9, a16b, i4, i6b, i10, i13, i15,
+i16, i17, i18) drain their stream inside the registry builder
+(``streaming.sources.run_available_now``), so the stream run is counted
+in ``plans.build_s`` (and its jobs in ``plans.build_jobs``), and their
+``exec.*`` columns cover only the noop write of the finished memory
+table.
+
 Given two or more dirs, each query's record at the last dir carries
 ``ratio``: its min there over its min at the first dir.  The run exits 1
 when a ratio exceeds ``RATIO_MAX`` or k4b's min exceeds

@@ -4,13 +4,22 @@ Fast path: Arrow-batched ``mapInPandas`` + numpy float64 block matmul.
 BASELINE.md measured the naive crossJoin+HOF plan at 33.5 s vs DuckDB
 0.17 s at sf0.1 (n=2000, d=64) — the vectorized path is mandatory.
 
-Scale design (100 TB / billions of vectors) — two physical strategies
-behind one logical operator, chosen by ``strategy=`` (default "auto"):
+Scale design (100 TB / billions of vectors) — three physical tiers
+behind one logical operator.  ``strategy=`` (default "auto") picks
+broadcast or blocked; under broadcast, the measured problem size picks
+the driver tier or the fan-out:
 
-- **broadcast** (reference side fits executor memory): collect + L2
-  normalize the reference matrix once, broadcast it; each executor
+- **driver** (the whole problem fits one sub-block: footer count n with
+  n·n ≤ ``_TOPK_CELL_BUDGET``, i.e. n ≤ 2 828): collect + L2 normalize
+  the matrix once (the same collect the fan-out broadcasts), run the
+  numpy kernel on the driver and return its rows as a local Arrow
+  relation — no shuffle, no broadcast variable, no Python worker.  A
+  Python stage costs about 0.2–0.3 s before it does any work
+  (SCALING.md), more than the whole kernel at this size.
+- **fan-out broadcast** (reference side fits executor memory): collect
+  + L2 normalize the reference matrix once, broadcast it; each executor
   partition multiplies its query block against it — embarrassingly
-  parallel O(n·m·d/p) with BLAS constants, no shuffle.
+  parallel O(n·m·d/p) with BLAS constants, one small query shuffle.
 - **blocked** (beyond broadcast): NO driver-side collect anywhere.  A
   QB×RB grid of cogroup cells: queries hash into QB blocks (replicated
   across RB), references into RB blocks (replicated across QB) — the
@@ -32,15 +41,18 @@ Determinism contract: similarities are rounded to 6 dp and ordered by
 on bit-for-bit (cross-engine fp drift ~1e-15 can't straddle a 5e-7
 boundary in practice).  The blocked path is bit-identical to the
 broadcast path by construction: per-block partials are disjoint and the
-global window re-ranks with the same key.
+global window re-ranks with the same key.  The driver tier runs the
+fan-out's own kernels on the same normalized rows.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -75,27 +87,31 @@ def _raw_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
 
-def _finite_rows(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
-    """(vec_ids int64[n], float64[n,d]) of the FINITE rows of an
+def _finite_index(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """(positions int[n], float64[n,d]) of the FINITE rows of an
     embeddings pandas batch — the numpy twin of ``finite_vec``.
 
     Arrow renders a NULL vector as None and a NULL float component as
     NaN (verified: pa.list_(float32).to_pandas), so the None guard plus
     ``np.isfinite`` reproduces the JVM/oracle predicate exactly.  The
-    returned matrix is NOT normalized (callers decide)."""
+    positions index ``pdf``'s rows, so any other column lines up with
+    the matrix; the matrix is NOT normalized (callers decide)."""
     emb = pdf["embedding"].to_numpy()
-    if len(emb) == 0:
-        return np.empty(0, np.int64), np.zeros((0, 1))
-    present = np.fromiter((e is not None for e in emb), bool, len(emb))
-    ids = pdf["vec_id"].to_numpy()[present]
-    emb = emb[present]
-    if len(emb) == 0:
-        return np.empty(0, np.int64), np.zeros((0, 1))
+    present = np.nonzero([e is not None for e in emb])[0]
+    if len(present) == 0:
+        return present, np.zeros((0, 1))
     # object→float64 astype maps a stray None to NaN on the non-Arrow
     # (plain toPandas) path too, so both entrances land on the same check
-    mat = np.vstack(emb).astype(np.float64, copy=False)
+    mat = np.vstack(emb[present]).astype(np.float64, copy=False)
     keep = np.isfinite(mat).all(axis=1)
-    return ids[keep].astype(np.int64), mat[keep]
+    return present[keep], mat[keep]
+
+
+def _finite_rows(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """(vec_ids int64[n], float64[n,d]) of the FINITE rows of an
+    embeddings pandas batch (see :func:`_finite_index`)."""
+    pos, mat = _finite_index(pdf)
+    return pdf["vec_id"].to_numpy()[pos].astype(np.int64), mat
 
 SIM_DECIMALS = 6
 
@@ -111,16 +127,28 @@ def _normalized(mat: np.ndarray) -> np.ndarray:
     return m / norms
 
 
-def embedding_matrix(spark: SparkSession, sf_dir: str) -> tuple[np.ndarray, np.ndarray]:
-    """(vec_ids int64[n], L2-normalized float64[n,d]) — the broadcast-side
-    matrix for the SMALL-reference strategy only; the blocked strategy
-    never calls this (no full-table driver collect at scale).  Finiteness
-    is enforced numpy-side (one pass, free next to the matmul) instead of
-    a JVM HOF re-scan of the parquet."""
-    ids, mat = _finite_rows(_raw_vecs(spark, sf_dir).toPandas())
-    if len(ids) == 0:  # 0×1 keeps callers 2-D
-        return ids, np.zeros((0, 1))
-    return ids, _normalized(mat)
+def embedding_matrix(
+    spark: SparkSession, sf_dir: str, query_filter: str | None = None
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(vec_ids int64[n], L2-normalized float64[n,d], is_query bool[n])
+    — the driver-side matrix of the driver and fan-out tiers only; the
+    blocked strategy never calls this (no full-table driver collect at
+    scale).  Finiteness is enforced numpy-side (one pass, free next to
+    the matmul) instead of a JVM HOF re-scan of the parquet.
+
+    ``is_query`` marks, row-aligned, the rows ``query_filter`` keeps
+    (every row without one); it rides in the same collect, so the
+    driver tier reads the table once."""
+    keep = F.expr(query_filter) if query_filter else F.lit(True)
+    pdf = (
+        _raw_vecs(spark, sf_dir)
+        .withColumn("is_query", F.coalesce(keep, F.lit(False)))
+        .toPandas()
+    )
+    pos, mat = _finite_index(pdf)
+    ids = pdf["vec_id"].to_numpy()[pos].astype(np.int64)
+    is_query = pdf["is_query"].to_numpy(bool)[pos]
+    return ids, _normalized(mat), is_query  # 0×1 when empty: callers stay 2-D
 
 
 # Extra top-candidates kept per row beyond k so boundary ties almost never
@@ -139,6 +167,8 @@ _TIE_MARGIN = 64
 # the 200k x 200k stage ran ~5x slower than the single-thread
 # per-sub-block cost predicts); 64 MB keeps the whole working set
 # cache-friendly and the executor under ~6 GB.
+# It also gates the driver tier: a problem whose whole n×n sims matrix
+# fits one sub-block (n ≤ 2 828) runs on the driver (_pick_strategy).
 _TOPK_CELL_BUDGET = 8_000_000
 
 
@@ -242,15 +272,19 @@ def _chunk_topk(
 
 
 def _pick_strategy(strategy: str, sf_dir: str) -> str:
-    if strategy == "auto":
-        # The RAW footer count is a conservative stand-in for the
-        # post-finiteness count (raw >= finite), so "auto" never
-        # broadcasts a side the threshold would have rejected.
-        n = parquet_rowcount(sf_dir, "embeddings")
-        return "broadcast" if n <= BROADCAST_MAX_ROWS else "blocked"
-    if strategy not in ("broadcast", "blocked"):
+    """The tier for ``strategy`` ("auto", "broadcast" or "blocked"):
+    "driver", "broadcast" (the fan-out) or "blocked".  The RAW footer
+    count is a conservative stand-in for the post-finiteness count
+    (raw >= finite), so neither gate takes a tier the finite count would
+    have rejected.  The budget is read here, when the query is built."""
+    if strategy not in ("auto", "broadcast", "blocked"):
         raise ValueError(f"unknown similarity strategy {strategy!r}")
-    return strategy
+    if strategy == "blocked":
+        return strategy
+    n = parquet_rowcount(sf_dir, "embeddings")
+    if strategy == "auto" and n > BROADCAST_MAX_ROWS:
+        return "blocked"
+    return "driver" if n * n <= _TOPK_CELL_BUDGET else "broadcast"
 
 
 # Below this many query rows per task the python-worker round trip costs
@@ -279,11 +313,38 @@ def _fan_out(queries: DataFrame, est_rows: int | None = None) -> DataFrame:
     return queries.repartition(parts)
 
 
-def _knn_broadcast(
-    spark: SparkSession, sf_dir: str, queries: DataFrame, k: int
+def _knn_columns(
+    cids: np.ndarray, cmat: np.ndarray, all_ids: np.ndarray, all_mat: np.ndarray, k: int
+) -> dict[str, np.ndarray]:
+    q, nb, sim, rank = _chunk_topk(cids, cmat, all_ids, all_mat, k)
+    return {"q_vec_id": q, "neighbor_id": nb, "sim": sim, "rank": rank.astype(np.int32)}
+
+
+def _broadcast(
+    spark: SparkSession,
+    sf_dir: str,
+    tier: str,
+    columns: Callable[..., dict],
+    schema: str,
+    query_filter: str | None = None,
 ) -> DataFrame:
-    ids, mat = embedding_matrix(spark, sf_dir)
+    """The broadcast strategy's two tiers around one column kernel,
+    ``columns(query_ids, query_mat, all_ids, all_mat) -> {name: array}``
+    over L2-normalized finite rows.
+
+    ``tier == "driver"``: one collect, the kernel on the driver, the
+    columns back as a local Arrow relation.  Otherwise the fan-out: the
+    matrix travels by broadcast and each ``mapInPandas`` task runs the
+    kernel on its query rows."""
+    if tier == "driver":
+        ids, mat, is_query = embedding_matrix(spark, sf_dir, query_filter)
+        cols = columns(ids[is_query], mat[is_query], ids, mat)
+        return spark.createDataFrame(pa.table(cols), schema)
+    ids, mat, _ = embedding_matrix(spark, sf_dir)
     bc = spark.sparkContext.broadcast((ids, mat))
+    queries = _raw_vecs(spark, sf_dir)
+    if query_filter:
+        queries = queries.filter(query_filter)
     queries = _fan_out(
         queries, est_rows=parquet_rowcount(sf_dir, "embeddings")
     )
@@ -294,14 +355,8 @@ def _knn_broadcast(
             cids, cmat = _finite_rows(pdf)
             if len(cids) == 0:
                 continue
-            cmat = _normalized(cmat)
-            q, nb, sim, rank = _chunk_topk(cids, cmat, all_ids, all_mat, k)
-            yield pd.DataFrame(
-                {"q_vec_id": q, "neighbor_id": nb, "sim": sim,
-                 "rank": rank.astype(np.int32)}
-            )
+            yield pd.DataFrame(columns(cids, _normalized(cmat), all_ids, all_mat))
 
-    schema = "q_vec_id bigint, neighbor_id bigint, sim double, rank int"
     return queries.mapInPandas(compute, schema)
 
 
@@ -402,11 +457,16 @@ def knn_join(
     """K nearest neighbors for each (optionally filtered) query vector.
     Non-finite/NULL vectors drop inside the Arrow kernels (query AND
     reference side), so results match the HOF-filtered plan exactly."""
+    tier = _pick_strategy(strategy, sf_dir)
+    if tier != "blocked":
+        return _broadcast(
+            spark, sf_dir, tier, functools.partial(_knn_columns, k=k),
+            "q_vec_id bigint, neighbor_id bigint, sim double, rank int",
+            query_filter,
+        )
     queries = _raw_vecs(spark, sf_dir)
     if query_filter:
         queries = queries.filter(query_filter)
-    if _pick_strategy(strategy, sf_dir) == "broadcast":
-        return _knn_broadcast(spark, sf_dir, queries, k)
     return _knn_blocked(spark, sf_dir, queries, k, n_blocks)
 
 
@@ -460,6 +520,17 @@ def _dup_of_block(
     return out
 
 
+def _dedup_columns(
+    cids: np.ndarray, cmat: np.ndarray, all_ids: np.ndarray, all_mat: np.ndarray, tau: float
+) -> dict:
+    dup_of = _dup_of_block(cids, cmat, all_ids, all_mat, tau)
+    return {
+        "vec_id": cids,
+        "dup_of": pd.array(dup_of, dtype="Int64"),
+        "is_keeper": np.array([d is None for d in dup_of], dtype=bool),
+    }
+
+
 def dedup_embedding(
     spark: SparkSession,
     sf_dir: str,
@@ -469,36 +540,18 @@ def dedup_embedding(
 ) -> DataFrame:
     """Embedding-cosine near-dup dedup: each vector is a duplicate of the
     LOWEST-id vector whose cosine similarity (rounded to 6 dp) ≥ tau;
-    vectors with no earlier near-neighbor are keepers.  Broadcast kernel
-    for small references; the blocked strategy computes a per-block
-    min-dup-id partial and reduces with a keyed min — associative, so
-    bit-identical to the broadcast answer."""
-    vecs = _raw_vecs(spark, sf_dir)
-    if _pick_strategy(strategy, sf_dir) == "broadcast":
-        ids, mat = embedding_matrix(spark, sf_dir)
-        bc = spark.sparkContext.broadcast((ids, mat))
-
-        def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            all_ids, all_mat = bc.value
-            for pdf in batches:
-                cids, cmat = _finite_rows(pdf)
-                if len(cids) == 0:
-                    continue
-                cmat = _normalized(cmat)
-                dup_of = _dup_of_block(cids, cmat, all_ids, all_mat, tau)
-                yield pd.DataFrame(
-                    {
-                        "vec_id": cids,
-                        "dup_of": pd.array(dup_of, dtype="Int64"),
-                        "is_keeper": [d is None for d in dup_of],
-                    }
-                )
-
-        n = parquet_rowcount(sf_dir, "embeddings")
-        return _fan_out(vecs, est_rows=n).mapInPandas(
-            compute, "vec_id bigint, dup_of bigint, is_keeper boolean"
+    vectors with no earlier near-neighbor are keepers.  The driver and
+    fan-out tiers run one kernel for small references; the blocked
+    strategy computes a per-block min-dup-id partial and reduces with a
+    keyed min — associative, so bit-identical to the broadcast answer."""
+    tier = _pick_strategy(strategy, sf_dir)
+    if tier != "blocked":
+        return _broadcast(
+            spark, sf_dir, tier, functools.partial(_dedup_columns, tau=tau),
+            "vec_id bigint, dup_of bigint, is_keeper boolean",
         )
 
+    vecs = _raw_vecs(spark, sf_dir)
     # fresh load → distinct lineage, avoids self-join ambiguity in cogroup
     ref = _raw_vecs(spark, sf_dir)
 

@@ -15,7 +15,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import load, parquet_rowcount
 from ..functions import text as TXT
 from ..functions import vectors as V
 from ..functions.multimodal import (
@@ -144,9 +144,10 @@ def k3_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- K4: KNN join (top-3 neighbors per query vector) ---------------------------
 
 
-# Shared by k4 (auto→broadcast kernel) and k4b (forced blocked strategy):
-# both physical plans implement the same logical KNN join, so one oracle
-# hash-checks each against DuckDB independently.
+# Shared by k4 (auto → the driver or fan-out broadcast tier) and k4b
+# (forced blocked strategy): every physical plan implements the same
+# logical KNN join, so one oracle hash-checks each against DuckDB
+# independently.
 K4_ORACLE = f"""
     WITH scored AS (
       SELECT a.vec_id AS q_vec_id, b.vec_id AS neighbor_id,
@@ -341,7 +342,7 @@ def k6_tokenize_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def k7_term_freq_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
-    n_docs = d.count()  # scalar; a parquet-footer metadata count
+    n_docs = parquet_rowcount(sf_dir, "documents")  # footer read, no job
     tf = (
         d.select("doc_id", F.explode(TXT.tokens("text")).alias("term"))
         .groupBy("doc_id", "term")

@@ -3,6 +3,7 @@ representative end-to-end parity slice at sf0.001 (SURVEY §5.3.2)."""
 
 from __future__ import annotations
 
+import ast
 import sys
 from pathlib import Path
 
@@ -244,3 +245,58 @@ def test_plan_audit_allowlists_reference_real_queries():
     names = set(entrymod.queries())
     assert pa.BNLJ_OK <= names, pa.BNLJ_OK - names
     assert pa.PY_OK <= names, pa.PY_OK - names
+
+
+#: Top-level engine functions that no engine module calls, each with the
+#: reason it stays.  Everything else unreferenced is a dead twin.
+_PUBLIC_ENTRY_POINTS = {
+    "get_spark": "the session factory the driver contract, tools and tests use",
+    "http_transport": "the real-endpoint transport; the registry runs the fake",
+    "cosine": "Column form of cosine_sql's zero-norm convention",
+    "decode_image": "where a real image codec plugs in; raises until wired",
+}
+
+
+def test_engine_has_no_dead_twins():
+    """Every top-level function in the engine package that is not a
+    ``@query`` is referenced by engine code (a call, a name or an
+    attribute; an import alone does not count) or is a listed public
+    entry point.  A function nothing calls is a second implementation
+    of a job another function does, or frozen history."""
+    pkg = REPO / "upc_sku_data_loader_spark"
+    defined: dict[str, str] = {}
+    used: set[str] = set()
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        owner: dict[int, str] = {}
+        for fn in tree.body:
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for n in ast.walk(fn):
+                owner[id(n)] = fn.name
+            decorators = [
+                d.func if isinstance(d, ast.Call) else d
+                for d in fn.decorator_list
+            ]
+            if not any(
+                isinstance(d, ast.Name) and d.id == "query" for d in decorators
+            ):
+                defined[fn.name] = str(path.relative_to(REPO))
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Name):
+                name = n.id
+            elif isinstance(n, ast.Attribute):
+                name = n.attr
+            else:
+                continue
+            if owner.get(id(n)) != name:  # recursion is not a caller
+                used.add(name)
+    assert set(_PUBLIC_ENTRY_POINTS) <= set(defined), (
+        set(_PUBLIC_ENTRY_POINTS) - set(defined)
+    )
+    dead = {
+        name: where
+        for name, where in defined.items()
+        if name not in used and name not in _PUBLIC_ENTRY_POINTS
+    }
+    assert not dead, f"functions no engine code references: {dead}"

@@ -14,6 +14,7 @@ sys.path.insert(0, str(REPO))
 from pyspark.sql import functions as F  # noqa: E402
 
 from upc_sku_data_loader_spark import plans  # noqa: F401,E402
+from upc_sku_data_loader_spark.catalog import load  # noqa: E402
 from upc_sku_data_loader_spark.plans.curation import _CHUNK, _STRIDE  # noqa: E402
 from upc_sku_data_loader_spark.registry import QUERIES  # noqa: E402
 
@@ -214,10 +215,10 @@ def test_k45_excludes_eval_docs_and_bounds(spark, sf_dir):
         assert hashlib.md5(str(r["doc_id"]).encode()).hexdigest()[0] != "0"
     assert all(0 <= r["contaminated_micro"] <= 1_000_000 for r in rows)
     # total = all docs minus eval docs
-    n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
+    n_docs = load(spark, sf_dir, "documents").count()
     n_eval = sum(
         1
-        for (doc_id,) in spark.read.parquet(f"{sf_dir}/documents.parquet")
+        for (doc_id,) in load(spark, sf_dir, "documents")
         .select("doc_id")
         .collect()
         if hashlib.md5(str(doc_id).encode()).hexdigest()[0] == "0"
@@ -241,7 +242,7 @@ def test_k46_shares_sum_and_cumulative_monotone(spark, sf_dir):
     assert cums[-1] == 1_000_000
     # corpus token total matches an independent count
     indep = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        load(spark, sf_dir, "documents")
         .select(F.explode(F.split("text", " ")))
         .count()
     )

@@ -25,8 +25,10 @@ from upc_sku_data_loader_spark.operators.asof import asof_join
 from upc_sku_data_loader_spark.operators.dedup import (
     lsh_candidate_pairs,
     minhash_signatures,
+    shingle_base,
     verify_jaccard,
 )
+from upc_sku_data_loader_spark.session import Held
 
 NAN, INF = float("nan"), float("inf")
 
@@ -96,13 +98,19 @@ def test_minhash_pipeline_excludes_null_text_docs(spark):
             ]
         ),
     )
-    sigs = minhash_signatures(docs, n_hashes=8, shingle_k=3)
-    assert sorted(r["doc_id"] for r in sigs.collect()) == [1, 2, 4]
-    pairs = verify_jaccard(
-        lsh_candidate_pairs(sigs, n_bands=2, rows_per_band=4),
-        docs,
-        threshold=0.5,
-    ).collect()
+    held = Held()
+    base = shingle_base(docs, held, shingle_k=3)
+    try:
+        assert sorted(r["doc_id"] for r in base.collect()) == [1, 2, 4]
+        sigs = minhash_signatures(base, n_hashes=8)
+        assert sorted(r["doc_id"] for r in sigs.collect()) == [1, 2, 4]
+        pairs = verify_jaccard(
+            lsh_candidate_pairs(sigs, n_bands=2, rows_per_band=4),
+            base,
+            threshold=0.5,
+        ).collect()
+    finally:
+        held.free(base)
     # the NULL-text doc pairs with nothing; the real dup pair survives
     assert {(r["a"], r["b"]) for r in pairs} == {(1, 2)}
 

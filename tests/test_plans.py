@@ -13,6 +13,7 @@ sys.path.insert(0, str(REPO))
 from pyspark.sql import functions as F  # noqa: E402
 
 from upc_sku_data_loader_spark import plans  # noqa: F401,E402
+from upc_sku_data_loader_spark.catalog import load  # noqa: E402
 from upc_sku_data_loader_spark.registry import QUERIES  # noqa: E402
 
 
@@ -355,7 +356,7 @@ def test_g6_multiset_identity(spark, sf_dir):
     by_op = {r["op"]: r["n"] for r in
              out.groupBy("op").agg(F.count(F.lit(1)).alias("n")).collect()}
     a_count = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        load(spark, sf_dir, "lineitem")
         .filter(F.col("l_quantity") < 10)
         .count()
     )
@@ -372,7 +373,7 @@ def test_d21_bitmap_equals_count_distinct(spark, sf_dir):
     }
     exact = {
         r["o_orderpriority"]: r["n"]
-        for r in spark.read.parquet(f"{sf_dir}/orders.parquet")
+        for r in load(spark, sf_dir, "orders")
         .groupBy("o_orderpriority")
         .agg(F.countDistinct("o_custkey").alias("n"))
         .collect()
@@ -404,14 +405,14 @@ def test_etl6_cdc_semantics(spark, sf_dir):
     rows = {r["o_orderkey"]: r for r in out.collect()}
     base_keys = {
         r["o_orderkey"]
-        for r in spark.read.parquet(f"{sf_dir}/orders.parquet")
+        for r in load(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") % 3 == 0)
         .select("o_orderkey")
         .collect()
     }
     feed_keys = {
         r["o_orderkey"]
-        for r in spark.read.parquet(f"{sf_dir}/orders.parquet")
+        for r in load(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") % 2 == 0)
         .select("o_orderkey")
         .collect()

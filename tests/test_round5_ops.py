@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from upc_sku_data_loader_spark import plans  # noqa: F401
+from upc_sku_data_loader_spark.catalog import load
 from upc_sku_data_loader_spark.registry import QUERIES
 
 
@@ -30,7 +31,7 @@ def test_k50_bm25_hits_contain_query_terms(spark, sf_dir):
     from upc_sku_data_loader_spark.plans.curation import _BM25_QUERY
 
     out = QUERIES["k50_bm25_topk"](spark, sf_dir)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load(spark, sf_dir, "documents")
     joined = out.join(docs, "doc_id").select("doc_id", "text").collect()
     assert len(joined) == out.count()
     for r in joined:
@@ -54,7 +55,7 @@ def test_k51_pmi_floor_and_order(spark, sf_dir):
 def test_k51_pmi_matches_manual_recompute(spark, sf_dir):
     """Recompute PMI for the top pair from raw corpus counts."""
     top = QUERIES["k51_pmi_collocations"](spark, sf_dir).limit(1).collect()[0]
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load(spark, sf_dir, "documents")
     t = docs.select(F.split("text", " ").alias("t")).withColumn(
         "n", F.size("t")
     )
@@ -99,9 +100,7 @@ def test_k52_entropy_bounds(spark, sf_dir):
         | (F.col("ttr_micro") > 1_000_000)
     ).count()
     assert bad == 0
-    assert out.count() == spark.read.parquet(
-        f"{sf_dir}/documents.parquet"
-    ).count()
+    assert out.count() == load(spark, sf_dir, "documents").count()
 
 
 def test_k52_entropy_hand_checked():
@@ -117,7 +116,7 @@ def test_k53_projection_shape_and_determinism(spark, sf_dir):
     from upc_sku_data_loader_spark.plans.training import _RP_DIMS
 
     out = QUERIES["k53_random_projection"](spark, sf_dir)
-    n_vec = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
+    n_vec = load(spark, sf_dir, "embeddings").count()
     assert out.count() == n_vec * _RP_DIMS
     assert out.select("j").distinct().count() == _RP_DIMS
     a = sorted(map(tuple, out.collect()))
@@ -133,7 +132,7 @@ def test_k53_projection_preserves_norm_in_distribution(spark, sf_dir):
     proj_norm = out.groupBy("vec_id").agg(
         F.sum(F.col("comp") * F.col("comp")).alias("p2")
     )
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    emb = load(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.aggregate(
             F.transform("embedding", lambda x: x.cast("double")),
@@ -201,7 +200,7 @@ def test_t8_first_row_equals_value(spark, sf_dir):
 
 def test_h14_collation_collapses_case_variants(spark, sf_dir):
     rows = QUERIES["h14_collation_group"](spark, sf_dir).collect()
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    cust = load(spark, sf_dir, "customer")
     assert sum(r["n_rows"] for r in rows) == cust.count()
     assert len(rows) == cust.select("c_mktsegment").distinct().count()
     for r in rows:
@@ -248,7 +247,7 @@ def test_etl7_catches_planted_violation(spark, sf_dir):
 def test_e10_frame_contains_current_row(spark, sf_dir):
     out = QUERIES["e10_win_range_interval"](spark, sf_dir)
     purchases = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
+        load(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
         .count()
     )
@@ -306,7 +305,7 @@ def test_etl8_change_types_are_consistent(spark, sf_dir):
         ).count()
         == 0
     )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = load(spark, sf_dir, "orders")
     expect_added = o.filter(
         (F.col("o_orderkey") % 97 == 3) & (F.col("o_orderkey") % 89 != 7)
     ).count()
@@ -518,7 +517,7 @@ def test_k55_bigram_logprob_bounds(spark, sf_dir):
     assert out.filter(F.isnan("logprob")).count() == 0
     # every doc with >= 2 tokens is scored
     docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        load(spark, sf_dir, "documents")
         .filter(F.size(F.split("text", " ")) >= 2)
         .count()
     )
@@ -573,7 +572,7 @@ def test_a20_files_are_gzip(spark, sf_dir):
     out = QUERIES["a20_compressed_json"](spark, sf_dir)
     n = out.count()
     src = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        load(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") % 4 == 1)
         .count()
     )
@@ -594,7 +593,7 @@ def test_j9_matches_builtin_aggregation(spark, sf_dir):
     }
     ref = {
         r["o_custkey"]: (r["n"], r["t"], r["m"])
-        for r in spark.read.parquet(f"{sf_dir}/orders.parquet")
+        for r in load(spark, sf_dir, "orders")
         .groupBy("o_custkey")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -614,9 +613,7 @@ def test_j9_matches_builtin_aggregation(spark, sf_dir):
 
 def test_k56_mask_consistent_with_keep(spark, sf_dir):
     rows = QUERIES["k56_curation_scorecard"](spark, sf_dir).collect()
-    assert len(rows) == spark.read.parquet(
-        f"{sf_dir}/documents.parquet"
-    ).count()
+    assert len(rows) == load(spark, sf_dir, "documents").count()
     for r in rows:
         assert 0 <= r["reason_mask"] < 32
         assert r["keep"] == (r["reason_mask"] == 0)
@@ -661,7 +658,7 @@ def test_k56_gates_fire_on_planted_docs(spark):
 
 def test_k58_manifest_covers_corpus_and_checksum_is_order_free(spark, sf_dir):
     rows = QUERIES["k58_shard_manifest"](spark, sf_dir).collect()
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load(spark, sf_dir, "documents")
     assert sum(r["n_docs"] for r in rows) == docs.count()
     assert len(rows) == min(8, docs.count())
     # XOR checksum is order/partitioning independent: recompute from a
@@ -691,7 +688,7 @@ def test_h16_map_pipeline_matches_row_form(spark, sf_dir):
         for r in QUERIES["h16_map_hof"](spark, sf_dir).collect()
     }
     li = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        load(spark, sf_dir, "lineitem")
         .filter(F.col("l_orderkey") % 20 == 0)
         .groupBy("l_orderkey", "l_linenumber")
         .agg(
@@ -720,7 +717,7 @@ def test_k60_card_values_recompute(spark, sf_dir):
         r["metric"]: r["value"]
         for r in QUERIES["k60_dataset_card"](spark, sf_dir).collect()
     }
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load(spark, sf_dir, "documents")
     assert card["n_docs"] == docs.count()
     assert card["n_langs"] == docs.select("lang").distinct().count()
     assert card["n_sources"] == docs.select("source").distinct().count()
@@ -747,7 +744,7 @@ def test_h17_calendar_invariants(spark, sf_dir):
 
 def test_h18_position_zero_when_absent(spark, sf_dir):
     out = QUERIES["h18_array_lib"](spark, sf_dir)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
+    docs = load(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 5 == 0
     )
     joined = out.join(docs, "doc_id").select("pos_the", "text").collect()

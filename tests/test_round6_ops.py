@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from upc_sku_data_loader_spark import plans  # noqa: F401
+from upc_sku_data_loader_spark.catalog import load
 from upc_sku_data_loader_spark.registry import QUERIES
 
 
@@ -69,7 +70,7 @@ def test_s8_sql_udf_inlines_to_pushed_scan(spark, sf_dir):
 def test_d23_mode_is_argmax_of_counts(spark, sf_dir):
     rows = QUERIES["d23_agg_mode"](spark, sf_dir).collect()
     parts = (
-        spark.read.parquet(f"{sf_dir}/part.parquet")
+        load(spark, sf_dir, "part")
         .groupBy("p_type", "p_brand")
         .count()
         .collect()
@@ -103,7 +104,7 @@ def test_etl11_wap_blocks_bad_batch(spark, sf_dir):
 
 def test_a24_fixed_width_roundtrip_is_lossless(spark, sf_dir):
     out = QUERIES["a24_fixed_width_source"](spark, sf_dir)
-    src = spark.read.parquet(f"{sf_dir}/supplier.parquet")
+    src = load(spark, sf_dir, "supplier")
     assert out.count() == src.count()
     got = {r["s_suppkey"]: r for r in out.collect()}
     for r in src.collect():
@@ -115,7 +116,7 @@ def test_a24_fixed_width_roundtrip_is_lossless(spark, sf_dir):
 def test_k73_decisions_partition_the_new_batch(spark, sf_dir):
     out = QUERIES["k73_incremental_dedup"](spark, sf_dir)
     n_new = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        load(spark, sf_dir, "documents")
         .filter("doc_id % 2 = 1")
         .count()
     )
@@ -131,7 +132,7 @@ def test_k73_decisions_partition_the_new_batch(spark, sf_dir):
 
 def test_a25_jdbc_stripes_tile_exactly(spark, sf_dir):
     out = QUERIES["a25_jdbc_partitioned_read"](spark, sf_dir)
-    n_src = spark.read.parquet(f"{sf_dir}/orders.parquet").count()
+    n_src = load(spark, sf_dir, "orders").count()
     rows = out.collect()
     assert sum(r["n_orders"] for r in rows) == n_src  # no loss/dup at bounds
     assert len(rows) == 8
@@ -186,7 +187,7 @@ def test_k74_score_decomposition(spark, sf_dir):
 def test_q25_chi2_cells_tile_the_user_base(spark, sf_dir):
     r = QUERIES["q25_ab_test_chi2"](spark, sf_dir).first()
     n_users = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
+        load(spark, sf_dir, "events")
         .select("user_id")
         .distinct()
         .count()
@@ -218,7 +219,7 @@ def test_i19_ledger_rejects_all_replays(spark, sf_dir):
 def test_a27_each_file_is_one_row(spark, sf_dir):
     out = QUERIES["a27_wholefile_text"](spark, sf_dir)
     expect = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        load(spark, sf_dir, "documents")
         .filter("doc_id % 25 = 0")
         .count()
     )
@@ -260,7 +261,7 @@ def test_t14_acf_lag_grid_and_bounds(spark, sf_dir):
 def test_q26_rfm_quintiles_are_balanced(spark, sf_dir):
     rows = QUERIES["q26_rfm_segments"](spark, sf_dir).collect()
     n_cust = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        load(spark, sf_dir, "orders")
         .select("o_custkey")
         .distinct()
         .count()
@@ -279,7 +280,7 @@ def test_q26_rfm_quintiles_are_balanced(spark, sf_dir):
 
 def test_q27_attribution_conserves_purchases(spark, sf_dir):
     rows = QUERIES["q27_last_touch_attribution"](spark, sf_dir).collect()
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = load(spark, sf_dir, "events")
     n_purch = ev.filter("event_type = 'purchase'").count()
     assert sum(r["n_purchases"] for r in rows) == n_purch  # full credit
     assert {r["touch_type"] for r in rows} <= {"view", "click", "none"}
@@ -312,7 +313,7 @@ def test_c16_grid_join_finds_exactly_the_all_pairs_matches(spark, sf_dir):
     from upc_sku_data_loader_spark.plans.joins import _C16_R_KM, _c16_coord
 
     cust = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        load(spark, sf_dir, "customer")
         .select(
             "c_custkey",
             _c16_coord("c", "lat", "c_custkey").alias("lat"),
@@ -321,7 +322,7 @@ def test_c16_grid_join_finds_exactly_the_all_pairs_matches(spark, sf_dir):
         .collect()
     )
     supp = (
-        spark.read.parquet(f"{sf_dir}/supplier.parquet")
+        load(spark, sf_dir, "supplier")
         .select(
             "s_suppkey",
             _c16_coord("s", "lat", "s_suppkey").alias("lat"),
@@ -351,7 +352,7 @@ def test_c16_grid_join_finds_exactly_the_all_pairs_matches(spark, sf_dir):
 def test_h20_seq_fanout_matches_size_formula(spark, sf_dir):
     rows = QUERIES["h20_generators"](spark, sf_dir).collect()
     p = (
-        spark.read.parquet(f"{sf_dir}/part.parquet")
+        load(spark, sf_dir, "part")
         .filter("p_partkey % 20 = 0")
         .collect()
     )
@@ -373,5 +374,5 @@ def test_etl12_vault_key_integrity(spark, sf_dir):
     for t in ("hub_customer", "hub_part", "hub_supplier", "link_order_part_supp"):
         assert by[t]["n_rows"] == by[t]["n_distinct"]
     # every lineitem row lands one satellite row
-    n_li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
+    n_li = load(spark, sf_dir, "lineitem").count()
     assert by["sat_lineitem"]["n_rows"] == n_li

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from upc_sku_data_loader_spark import plans  # noqa: F401
+from upc_sku_data_loader_spark.catalog import load
 from upc_sku_data_loader_spark.registry import QUERIES
 
 
@@ -24,7 +25,7 @@ def test_d26_regression_identities(spark, sf_dir):
 def test_d26_slope_matches_moments(spark, sf_dir):
     # Cross-check regr_slope against cov/var computed from raw moments
     # per group (the OLS normal-equation identity slope = cov/var).
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load(spark, sf_dir, "lineitem")
     m = {
         r["l_returnflag"]: r["cov"] / r["var"]
         for r in li.groupBy("l_returnflag")
@@ -48,7 +49,7 @@ def test_k78_every_released_class_meets_k_or_is_flagged(spark, sf_dir):
     assert out.filter(F.col("generalized") & (F.col("bal_band") != -999)).count() == 0
     # row conservation: class sizes sum to the customer count
     total = out.agg(F.sum("class_size")).collect()[0][0]
-    n_cust = spark.read.parquet(f"{sf_dir}/customer.parquet").count()
+    n_cust = load(spark, sf_dir, "customer").count()
     assert total == n_cust
 
 
@@ -58,7 +59,7 @@ def test_t15_median_bounds_and_window(spark, sf_dir):
     # median lies within the frame's [min, max] — check via self-join-free
     # reconstruction: n_win==1 rows' median equals that day's value exactly.
     p = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
+        load(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
         .groupBy(
             "user_id", F.date_trunc("day", F.col("ts")).cast("date").alias("day")
@@ -100,7 +101,7 @@ def test_d27_listagg_sorted_and_distinct(spark, sf_dir):
 
 def test_q29_gap_accounting(spark, sf_dir):
     out = QUERIES["q29_purchase_intervals"](spark, sf_dir).collect()
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load(spark, sf_dir, "orders")
     n_cust = orders.select("o_custkey").distinct().count()
     n_orders = orders.count()
     # every order beyond a customer's first contributes exactly one gap
@@ -115,7 +116,7 @@ def test_k79_recovers_original_text(spark, sf_dir):
     """Stripping must recover the original words: clean_text equals the
     source text plus the deterministic title/footer tokens."""
     out = QUERIES["k79_markup_strip"](spark, sf_dir)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load(spark, sf_dir, "documents")
     j = out.join(docs, "doc_id")
     bad = j.filter(
         F.col("clean_text")
@@ -145,7 +146,7 @@ def test_t16_rows_sum_to_one(spark, sf_dir):
         assert abs(r["s"] - 1_000_000) <= 25
     # transition count conservation: one transition per event beyond each
     # user's first
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
+    e = load(spark, sf_dir, "events")
     expected = e.count() - e.select("user_id").distinct().count()
     assert sum(r["n"] for r in rows) == expected
 
@@ -227,7 +228,7 @@ def test_c17_overlap_pairs_are_real_overlaps(spark, sf_dir):
     # spot-check one pair against raw dates
     r = out.orderBy("custkey", "orderkey_a", "orderkey_b").first()
     if r:
-        o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+        o = load(spark, sf_dir, "orders")
         d = {
             x["o_orderkey"]: x["o_orderdate"].date()
             for x in o.filter(
@@ -251,7 +252,7 @@ def test_etl13_fixtures_are_conformant_and_orphans_detected(spark, sf_dir, tmp_p
     os.makedirs(d)
     for t in ["lineitem", "part", "supplier", "orders", "customer", "events"]:
         shutil.copy(f"{sf_dir}/{t}.parquet", f"{d}/{t}.parquet")
-    half = spark.read.parquet(f"{sf_dir}/part.parquet").filter(F.col("p_partkey") % 2 == 0)
+    half = load(spark, sf_dir, "part").filter(F.col("p_partkey") % 2 == 0)
     half.write.mode("overwrite").parquet(f"{d}/part.parquet")
     out2 = {r["relation"]: r for r in QUERIES["etl13_fk_conformance"](spark, d).collect()}
     assert out2["lineitem.l_partkey->part"]["n_orphans"] > 0
@@ -291,7 +292,7 @@ def test_b17_expansion_rules_and_check_digit(spark, sf_dir):
 
 def test_d28_geomean_below_arithmetic_mean(spark, sf_dir):
     # AM–GM: geometric mean <= arithmetic mean of unit prices per group
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").filter(
+    li = load(spark, sf_dir, "lineitem").filter(
         F.col("l_quantity") > 0
     )
     am = {
@@ -313,7 +314,7 @@ def test_q32_gini_in_unit_interval_and_scale_invariant(spark, sf_dir):
 
 def test_k82_partition_of_events(spark, sf_dir):
     rows = QUERIES["k82_ip_cidr_filter"](spark, sf_dir).collect()
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
+    e = load(spark, sf_dir, "events")
     assert sum(r["n_events"] for r in rows) == e.count()
     for r in rows:
         assert r["n_blocked"] + r["n_kept"] == r["n_events"]
@@ -352,7 +353,7 @@ def test_d29_agrees_with_builtin_population_estimators(spark, sf_dir):
     # the exact-decimal reconstruction must agree to micro precision.
     ref = {
         r["event_type"]: r
-        for r in spark.read.parquet(f"{sf_dir}/events.parquet")
+        for r in load(spark, sf_dir, "events")
         .groupBy("event_type")
         .agg(
             F.skewness("value").alias("sk"), F.kurtosis("value").alias("ku")
@@ -369,7 +370,7 @@ def test_d29_agrees_with_builtin_population_estimators(spark, sf_dir):
 
 def test_k83_metrics_identities(spark, sf_dir):
     rows = QUERIES["k83_langid_metrics"](spark, sf_dir).collect()
-    docs_n = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
+    docs_n = load(spark, sf_dir, "documents").count()
     assert sum(r["actual_n"] for r in rows) == docs_n
     assert sum(r["pred_n"] for r in rows) == docs_n
     assert sum(r["tp"] for r in rows) <= docs_n
@@ -619,13 +620,13 @@ def test_q34_backlog_conservation(spark, sf_dir):
     # all orders eventually close: final backlog is zero
     assert rows[-1]["open_orders"] == 0
     # peak backlog can't exceed total orders
-    n = spark.read.parquet(f"{sf_dir}/orders.parquet").count()
+    n = load(spark, sf_dir, "orders").count()
     assert max(r["open_orders"] for r in rows) <= n
 
 
 def test_etl14_scd3_one_row_per_user_matching_latest(spark, sf_dir):
     out = QUERIES["etl14_scd3_prior_value"](spark, sf_dir)
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
+    e = load(spark, sf_dir, "events")
     assert out.count() == e.select("user_id").distinct().count()
     assert out.groupBy("user_id").count().filter("count > 1").count() == 0
     # current_type matches the true latest event; n_changes = event count
@@ -663,7 +664,7 @@ def test_d30_welch_agrees_with_scipy_formula(spark, sf_dir):
 
     r = QUERIES["d30_welch_ttest"](spark, sf_dir).collect()[0]
     e = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
+        load(spark, sf_dir, "events")
         .filter(F.col("event_type").isin("purchase", "click"))
         .groupBy("event_type")
         .agg(
@@ -687,7 +688,7 @@ def test_q36_streak_accounting(spark, sf_dir):
     rows = {r["hot"]: r for r in QUERIES["q36_revenue_streaks"](spark, sf_dir).collect()}
     assert set(rows) == {True, False}
     n_days = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
+        load(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
         .select(F.date_trunc("day", F.col("ts")).cast("date").alias("d"))
         .distinct()
@@ -717,7 +718,7 @@ def test_d31_ci_brackets_point_estimate(spark, sf_dir):
 
 def test_q37_sla_accounting(spark, sf_dir):
     rows = QUERIES["q37_ship_sla"](spark, sf_dir).collect()
-    li_n = spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
+    li_n = load(spark, sf_dir, "lineitem").count()
     assert sum(r["n_lines"] for r in rows) == li_n
     for r in rows:
         assert 0 <= r["n_within_7d"] <= r["n_lines"]
@@ -764,7 +765,7 @@ def test_k85_oov_bounds_and_total(spark, sf_dir):
         (F.col("oov_micro") < 0) | (F.col("oov_micro") > 1_000_000)
     ).count() == 0
     # doc count preserved; token totals match a direct count
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load(spark, sf_dir, "documents")
     assert out.count() == docs.count()
     direct = docs.select(
         F.sum(F.size(F.split("text", " "))).alias("s")
@@ -779,7 +780,7 @@ def test_q38_final_cumulative_equals_distinct_customers(spark, sf_dir):
         .collect()
     )
     assert rows
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = load(spark, sf_dir, "orders")
     n_cust = o.select("o_custkey").distinct().count()
     assert rows[-1]["cumulative_uniques"] == n_cust
     run = 0
@@ -796,7 +797,7 @@ def test_t20_theil_sen_pair_count_and_robustness(spark, sf_dir):
     # fitted line must pass through the data's vertical band
     daily_rev = [
         x["rev"]
-        for x in spark.read.parquet(f"{sf_dir}/events.parquet")
+        for x in load(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
         .groupBy(F.date_trunc("day", F.col("ts")).cast("date").alias("day"))
         .agg(
@@ -811,7 +812,7 @@ def test_t20_theil_sen_pair_count_and_robustness(spark, sf_dir):
 
 def test_etl15_skew_identities(spark, sf_dir):
     r = QUERIES["etl15_skew_report"](spark, sf_dir).collect()[0]
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = load(spark, sf_dir, "orders")
     assert r["n_rows"] == o.count()
     assert r["n_keys"] == o.select("o_custkey").distinct().count()
     assert r["p50_rows"] <= r["p99_rows"] <= r["max_rows_per_key"]
@@ -823,7 +824,7 @@ def test_q39_entropy_bands_bounded(spark, sf_dir):
     import math
 
     rows = QUERIES["q39_behavior_entropy"](spark, sf_dir).collect()
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
+    e = load(spark, sf_dir, "events")
     assert sum(r["n_users"] for r in rows) == e.select("user_id").distinct().count()
     assert sum(r["n_events"] for r in rows) == e.count()
     max_band = math.floor(math.log2(5) / 0.25)
@@ -881,7 +882,7 @@ def test_b18_isbn_check_digits(spark, sf_dir):
 
 def test_k87_l_diversity_identities(spark, sf_dir):
     out = QUERIES["k87_l_diversity"](spark, sf_dir)
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    c = load(spark, sf_dir, "customer")
     assert out.agg(F.sum("class_size")).collect()[0][0] == c.count()
     n_segments = c.select("c_mktsegment").distinct().count()
     bad = out.filter(
@@ -897,7 +898,7 @@ def test_k87_l_diversity_identities(spark, sf_dir):
 def test_d32_weighted_median_splits_weight(spark, sf_dir):
     out = {r["l_returnflag"]: r for r in QUERIES["d32_weighted_median"](spark, sf_dir).collect()}
     li = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        load(spark, sf_dir, "lineitem")
         .filter(F.col("l_quantity") > 0)
         .select(
             "l_returnflag",

@@ -11,6 +11,7 @@ from collections import defaultdict
 from pyspark.sql import functions as F
 
 from upc_sku_data_loader_spark import plans  # noqa: F401
+from upc_sku_data_loader_spark.catalog import load
 from upc_sku_data_loader_spark.registry import QUERIES
 
 
@@ -66,7 +67,7 @@ def test_k63_weight_recompute_for_top_doc(spark, sf_dir):
 
     out = QUERIES["k63_dsir_importance"](spark, sf_dir)
     top = out.filter(F.col("rk") == 1).collect()[0]
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
+    docs = load(spark, sf_dir, "documents").collect()
 
     def bucket(tok: str) -> int:
         import hashlib
@@ -99,7 +100,7 @@ def test_k63_weight_recompute_for_top_doc(spark, sf_dir):
 
 def test_k67_reconstruction_roundtrip(spark, sf_dir):
     out = QUERIES["k67_span_corruption"](spark, sf_dir)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load(spark, sf_dir, "documents")
     joined = out.join(docs, "doc_id").collect()
     assert joined
     for r in joined:
@@ -125,7 +126,7 @@ def test_k67_short_docs_skipped(spark, sf_dir):
 def test_t10_alarm_algebra_matches_bruteforce(spark, sf_dir):
     alarms = QUERIES["t10_cusum_changepoint"](spark, sf_dir).collect()
     events = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
+        load(spark, sf_dir, "events")
         .select("event_type", "event_id", "ts", "value")
         .collect()
     )
@@ -158,13 +159,13 @@ def test_etl9_audit_flags_consistent(spark, sf_dir):
     rows = out.collect()
     orders_keys = {
         r["o_custkey"]
-        for r in spark.read.parquet(f"{sf_dir}/orders.parquet")
+        for r in load(spark, sf_dir, "orders")
         .select("o_custkey")
         .collect()
     }
     cust = {
         r["c_custkey"]: r
-        for r in spark.read.parquet(f"{sf_dir}/customer.parquet").collect()
+        for r in load(spark, sf_dir, "customer").collect()
     }
     assert {r["custkey"] for r in rows} == orders_keys
     assert len(rows) == len(orders_keys), "one final dim row per fact key"
@@ -193,7 +194,7 @@ def test_a21_roundtrip_equals_direct_filter(spark, sf_dir):
     }
     direct = {
         (r["l_partkey"], r["n_lines"], float(r["sum_qty"]))
-        for r in spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        for r in load(spark, sf_dir, "lineitem")
         .filter(F.col("l_partkey").isin(*_A21_KEYS))
         .groupBy("l_partkey")
         .agg(
@@ -243,7 +244,7 @@ def test_c15_matches_bruteforce_blocked(spark, sf_dir):
 
     names = Counter(
         r["p_name"]
-        for r in spark.read.parquet(f"{sf_dir}/part.parquet").collect()
+        for r in load(spark, sf_dir, "part").collect()
     )
     expected = set()
     uniq = sorted(names)
@@ -270,7 +271,7 @@ def test_k68_merges_match_reference_bpe(spark, sf_dir):
     from collections import Counter
 
     words = Counter()
-    for r in spark.read.parquet(f"{sf_dir}/documents.parquet").collect():
+    for r in load(spark, sf_dir, "documents").collect():
         for w in r["text"].split(" "):
             if "|" not in w:
                 words[w] += 1
@@ -358,7 +359,7 @@ def test_t10_single_exchange_feeds_fused_window(spark, sf_dir):
 
 def test_k64_buckets_are_ordered_terciles(spark, sf_dir):
     rows = QUERIES["k64_ccnet_buckets"](spark, sf_dir).collect()
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
+    docs = load(spark, sf_dir, "documents").count()
     assert len(rows) == docs, "every document is bucketed exactly once"
     by_lang = defaultdict(list)
     for r in rows:
@@ -385,7 +386,7 @@ def test_d22_never_underestimates_and_exact_counts_true(spark, sf_dir):
     assert {r["custkey"] for r in rows} == set(_CM_PROBES)
     direct = {
         r["o_custkey"]: r["n"]
-        for r in spark.read.parquet(f"{sf_dir}/orders.parquet")
+        for r in load(spark, sf_dir, "orders")
         .groupBy("o_custkey")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
@@ -408,7 +409,7 @@ def test_f5_page3_matches_global_sort(spark, sf_dir):
     ]
     allkeys = sorted(
         r["o_orderkey"]
-        for r in spark.read.parquet(f"{sf_dir}/orders.parquet")
+        for r in load(spark, sf_dir, "orders")
         .select("o_orderkey")
         .collect()
     )
@@ -435,7 +436,7 @@ def test_j10_matches_affine_and_runs_via_arrow(spark, sf_dir):
     )
     want = sorted(
         (r["l_orderkey"], round((r["l_quantity"] - 25.0) / 10.0, 6))
-        for r in spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        for r in load(spark, sf_dir, "lineitem")
         .filter(F.col("l_linenumber") == 1)
         .collect()
     )
@@ -449,7 +450,7 @@ def test_s7_threshold_is_tight_power_of_ten(spark, sf_dir):
     row = QUERIES["s7_sql_scripting"](spark, sf_dir).collect()[0]
     thr = row["threshold"]
     assert thr > 1 and 10 ** len(str(thr)[1:]) == thr, "power of ten"
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load(spark, sf_dir, "orders")
     above = orders.filter(F.col("o_totalprice") > float(thr)).count()
     assert above == row["n_above"] < 100
     # tightness: one decade lower still had >= 100 above (loop invariant)
@@ -463,7 +464,7 @@ def test_s7_threshold_is_tight_power_of_ten(spark, sf_dir):
 
 def test_k69_fertility_bounds_and_merge_effect(spark, sf_dir):
     rows = QUERIES["k69_bpe_encode"](spark, sf_dir).collect()
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
+    docs = load(spark, sf_dir, "documents").collect()
     assert len(rows) == len(docs)
     chars = {
         d["doc_id"]: sum(len(w) for w in d["text"].split(" "))
@@ -540,7 +541,7 @@ def test_a23_sidecar_ignored_and_tree_complete(spark, sf_dir):
     }
     direct = {
         (r["l_returnflag"], r["n"])
-        for r in spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        for r in load(spark, sf_dir, "lineitem")
         .filter(F.col("l_returnflag").isin("R", "N"))
         .groupBy("l_returnflag")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -568,7 +569,7 @@ def test_etl10_layers_disjoint_and_complete(spark, sf_dir):
     )
     assert {r["layer"] for r in rows} == {"batch", "speed"}
     total = sum(r["n_events"] for r in rows)
-    assert total == spark.read.parquet(f"{sf_dir}/events.parquet").count()
+    assert total == load(spark, sf_dir, "events").count()
     speed_days = {r["day"] for r in rows if r["layer"] == "speed"}
     assert len(speed_days) <= 3, "speed layer serves only the hot tail"
 
@@ -582,7 +583,7 @@ def test_k70_triplet_integrity(spark, sf_dir):
     rows = QUERIES["k70_contrastive_triplets"](spark, sf_dir).collect()
     docs = {
         d["doc_id"]: d["text"].split(" ")
-        for d in spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
+        for d in load(spark, sf_dir, "documents").collect()
     }
     assert rows
     md5 = lambda s: hashlib.md5(s.encode()).hexdigest()  # noqa: E731
@@ -602,7 +603,7 @@ def test_k70_triplet_integrity(spark, sf_dir):
 
 def test_b14_rescue_accounting(spark, sf_dir):
     rows = QUERIES["b14_sentinel_normalize"](spark, sf_dir).collect()
-    n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
+    n_docs = load(spark, sf_dir, "documents").count()
     assert sum(r["n_rows"] for r in rows) == n_docs
     null_row = next(r for r in rows if r["source_norm"] == "∅NULL")
     # doc_id % 7 in {0,1,2} plants a pure sentinel

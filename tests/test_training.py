@@ -12,6 +12,7 @@ from collections import defaultdict
 
 from pyspark.sql import functions as F
 
+from upc_sku_data_loader_spark.catalog import load
 from upc_sku_data_loader_spark.plans.training import CHUNK, PACK_LEN, _SHARDS
 from upc_sku_data_loader_spark.registry import QUERIES
 
@@ -30,7 +31,7 @@ def test_k32_packing_conserves_tokens(spark, sf_dir):
     to the doc's token count, and every pack except the last is full."""
     packs = QUERIES["k32_sequence_packing"](spark, sf_dir)
     docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        load(spark, sf_dir, "documents")
         .select("doc_id", F.size(F.split("text", " ")).alias("ntok"))
     )
     per_doc = packs.groupBy("doc_id").agg(F.sum("tok_in_pack").alias("got"))
@@ -70,7 +71,7 @@ def test_k33_exact_n_per_stratum_and_deterministic(spark, sf_dir):
     for r in s1:
         per_lang[r["lang"]] += 1
     langs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        load(spark, sf_dir, "documents")
         .groupBy("lang").count().collect()
     )
     for lr in langs:
@@ -86,7 +87,7 @@ def test_k34_flags_match_recomputed_signals(spark, sf_dir):
     rows = QUERIES["k34_gopher_rules"](spark, sf_dir).collect()
     texts = {
         r["doc_id"]: r["text"]
-        for r in spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
+        for r in load(spark, sf_dir, "documents").collect()
     }
     stop = {"the", "a", "of", "and", "in"}
     for r in rows[:200]:
@@ -107,7 +108,7 @@ def test_k35_logprob_nonpositive_and_counts(spark, sf_dir):
     assert rows.filter(F.col("logprob") > 0).count() == 0
     n_tok_sum = rows.agg(F.sum("n_tok")).collect()[0][0]
     corpus_tok = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        load(spark, sf_dir, "documents")
         .select(F.explode(F.split("text", " ")))
         .count()
     )
@@ -124,7 +125,7 @@ def test_k36_kept_chunks_globally_unique(spark, sf_dir):
     # first global occurrence of each chunk is (min(doc_id), min idx there);
     # the per-doc count of such keepers must equal n_kept exactly.
     ch = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        load(spark, sf_dir, "documents")
         .select("doc_id", F.split("text", " ").alias("t"))
         .withColumn("nch", F.expr(f"(size(t) + {CHUNK} - 1) div {CHUNK}"))
         .select(
@@ -198,7 +199,7 @@ def test_k38_map_only_plan(spark, sf_dir):
 
 
 def test_k39_probabilities_and_flattening(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load(spark, sf_dir, "documents")
     n_by_source = {r["source"]: r["count"] for r in docs.groupBy("source").count().collect()}
     kept = QUERIES["k39_source_temperature_sample"](spark, sf_dir).collect()
     p_by_source = {}
@@ -239,7 +240,7 @@ def test_b12_single_scan(spark, sf_dir):
 
 def test_b12_values_match_recomputation(spark, sf_dir):
     rows = {r["col_name"]: r for r in QUERIES["b12_column_profile"](spark, sf_dir).collect()}
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = load(spark, sf_dir, "orders")
     exact = o.agg(
         F.countDistinct("o_custkey").alias("nd"),
         F.min("o_custkey").alias("mn"),
@@ -306,7 +307,6 @@ def test_t6_interpolation_bounds_and_edges(spark, sf_dir):
 def test_k42_assignment_is_shuffle_free(spark, sf_dir):
     """The nearest-centroid assignment must be a pure projection over
     literal centroids — no Exchange anywhere in its plan."""
-    from upc_sku_data_loader_spark.catalog import load
     from upc_sku_data_loader_spark.functions import vectors as V
     from upc_sku_data_loader_spark.plans.training import _KM_K, _km_assign
 
@@ -328,7 +328,7 @@ def test_k42_every_cluster_is_a_seed_and_nonempty(spark, sf_dir):
     clusters = {r["cluster"] for r in out.select("cluster").distinct().collect()}
     seeds = {
         r["vec_id"]
-        for r in spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        for r in load(spark, sf_dir, "embeddings")
         .orderBy("vec_id")
         .limit(_KM_K)
         .collect()
@@ -368,7 +368,7 @@ def test_k47_fps_invariants(spark, sf_dir):
     # seed center is the min vec_id (deterministic greedy start)
     assert min(r["vec_id"] for r in rows) in centers
     # total function: one row per embedding
-    n = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
+    n = load(spark, sf_dir, "embeddings").count()
     assert len(rows) == n
 
 
@@ -377,7 +377,7 @@ def test_k47_fps_invariants(spark, sf_dir):
 
 def test_k48_bucket_accounting(spark, sf_dir):
     rows = QUERIES["k48_length_buckets"](spark, sf_dir).collect()
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load(spark, sf_dir, "documents")
     n_docs = docs.count()
     n_tokens = docs.select(F.explode(F.split("text", " "))).count()
     assert sum(r["n_docs"] for r in rows) == n_docs
@@ -412,11 +412,10 @@ def test_t7_interp_between_neighbor_quotes(spark, sf_dir):
     assert bad == 0
     # every output user has at least one purchase (quote) in events
     users_out = {r["user_id"] for r in out.select("user_id").distinct().collect()}
-    from upc_sku_data_loader_spark.catalog import load as _load
 
     quote_users = {
         r["user_id"]
-        for r in _load(spark, sf_dir, "events")
+        for r in load(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
         .select("user_id")
         .distinct()

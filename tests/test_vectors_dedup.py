@@ -12,6 +12,8 @@ from upc_sku_data_loader_spark.functions.vectors import cosine, dot, l2_norm
 from upc_sku_data_loader_spark.operators.dedup import (
     lsh_candidate_pairs,
     minhash_signatures,
+    shingle_base,
+    verified_near_dup_pairs,
     verify_jaccard,
 )
 from upc_sku_data_loader_spark.session import Held
@@ -64,10 +66,15 @@ def test_minhash_lsh_finds_near_duplicates(spark):
         [(1, " ".join(base)), (2, " ".join(edited)), (3, " ".join(other))],
         "doc_id bigint, text string",
     )
-    sigs = minhash_signatures(docs, n_hashes=32)
-    cands = lsh_candidate_pairs(sigs, n_bands=8, rows_per_band=4)
-    verified = verify_jaccard(cands, docs, threshold=0.8)
-    pairs = {(r["a"], r["b"]) for r in verified.collect()}
+    held = Held()
+    base = shingle_base(docs, held)
+    try:
+        sigs = minhash_signatures(base, n_hashes=32)
+        cands = lsh_candidate_pairs(sigs, n_bands=8, rows_per_band=4)
+        verified = verify_jaccard(cands, base, threshold=0.8)
+        pairs = {(r["a"], r["b"]) for r in verified.collect()}
+    finally:
+        held.free(base)
     assert (1, 2) in pairs
     assert all(3 not in p for p in pairs)
 
@@ -85,13 +92,18 @@ def test_lsh_bucket_cap_defuses_degenerate_band(spark):
         (101, "the quick brown fox jumps over the lazy dog today"),
     ]
     docs = spark.createDataFrame(boiler + near, "doc_id long, text string")
-    sigs = minhash_signatures(docs, n_hashes=32, shingle_k=3)
+    held = Held()
+    base = shingle_base(docs, held, shingle_k=3)
+    try:
+        sigs = minhash_signatures(base, n_hashes=32)
 
-    uncapped = lsh_candidate_pairs(sigs, max_bucket_size=None)
-    assert uncapped.count() >= 60 * 59 // 2  # the quadratic blowup is real
+        uncapped = lsh_candidate_pairs(sigs, max_bucket_size=None)
+        assert uncapped.count() >= 60 * 59 // 2  # the quadratic blowup is real
 
-    capped = lsh_candidate_pairs(sigs, max_bucket_size=5)
-    pairs = {(r["a"], r["b"]) for r in capped.collect()}
+        capped = lsh_candidate_pairs(sigs, max_bucket_size=5)
+        pairs = {(r["a"], r["b"]) for r in capped.collect()}
+    finally:
+        held.free(base)
     assert (100, 101) in pairs          # genuine pair survives
     assert all(a >= 100 for a, _ in pairs)  # degenerate bucket dropped
     assert len(pairs) == 1
@@ -450,14 +462,8 @@ def test_prefix_candidates_guarantee_boundary_recall(spark):
     banding with real probability (fuzz sweep, seed 23 found one); the
     deterministic prefix-filter union must catch every such pair.  The
     two docs below share 4 of their 8 distinct 3-shingles -> J = 0.5
-    with shingle sets engineered to defeat any particular banding."""
-    from upc_sku_data_loader_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_signatures,
-        prefix_candidates,
-        verify_jaccard,
-    )
-
+    with shingle sets engineered to defeat any particular banding.
+    Runs the registry's own pipeline (k2/k20/k62/k73)."""
     # the seed-23 corpus pair, verbatim (J = 0.5 on 3-token shingles)
     docs = spark.createDataFrame(
         [
@@ -466,9 +472,12 @@ def test_prefix_candidates_guarantee_boundary_recall(spark):
         ],
         "doc_id long, text string",
     )
-    sigs = minhash_signatures(docs, n_hashes=32, shingle_k=3)
-    cands = lsh_candidate_pairs(
-        sigs, n_bands=8, rows_per_band=4, max_bucket_size=None
-    ).unionByName(prefix_candidates(docs, shingle_k=3, threshold=0.5)).distinct()
-    got = verify_jaccard(cands, docs, shingle_k=3, threshold=0.5).collect()
+    held = Held()
+    base = shingle_base(docs, held, shingle_k=3)
+    try:
+        got = verified_near_dup_pairs(
+            docs, held, shingle_k=3, threshold=0.5, base=base
+        ).collect()
+    finally:
+        held.free(base)
     assert [(r["a"], r["b"], r["jaccard"]) for r in got] == [(1, 2, 0.5)]

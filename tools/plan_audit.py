@@ -146,7 +146,7 @@ PY_OK = {
     # r11: the same gated CSR kernel prunes the near-dup verify's
     # candidate stream (hash-overlap upper bound; exact string verify
     # still runs on the survivors — operators/dedup.py
-    # verify_jaccard_from_base).  k20/k62/k37 share the pipeline but
+    # verify_jaccard).  k20/k62/k37 share the pipeline but
     # return driver union-find output, so only these two carry the
     # MapInPandas node in their returned plan.
     "k2_dedup_near_minhash",

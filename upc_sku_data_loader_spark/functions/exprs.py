@@ -39,28 +39,6 @@ _PINF = float("inf")
 _NINF = float("-inf")
 
 
-def _nonfinite_counts(c: Column) -> tuple[Column, Column, Column, Column]:
-    """(n_nan, n_pinf, n_ninf, finite_decimal_sum) aggregate parts."""
-    n_nan = F.count(F.when(F.isnan(c), F.lit(1)))
-    n_pinf = F.count(F.when(c == F.lit(_PINF), F.lit(1)))
-    n_ninf = F.count(F.when(c == F.lit(_NINF), F.lit(1)))
-    fin = F.sum(
-        F.when(~F.isnan(c) & (c > F.lit(_NINF)) & (c < F.lit(_PINF)), c)
-        .cast(DECIMAL_T)
-    ).cast("double")
-    return n_nan, n_pinf, n_ninf, fin
-
-
-def _nonfinite_case(n_nan, n_pinf, n_ninf, fin) -> Column:
-    return (
-        F.when(n_nan > 0, F.lit(_NAN))
-        .when((n_pinf > 0) & (n_ninf > 0), F.lit(_NAN))
-        .when(n_pinf > 0, F.lit(_PINF))
-        .when(n_ninf > 0, F.lit(_NINF))
-        .otherwise(fin)
-    )
-
-
 def fsum(col: Column | str, alias: str | None = None) -> Column:
     """Non-finite-faithful exact double SUM (the --extreme sweep class).
 
@@ -73,7 +51,20 @@ def fsum(col: Column | str, alias: str | None = None) -> Column:
     algebraic aggregate, so map-side partial aggregation is preserved.
     """
     c = F.col(col) if isinstance(col, str) else col
-    out = _nonfinite_case(*_nonfinite_counts(c))
+    n_nan = F.count(F.when(F.isnan(c), F.lit(1)))
+    n_pinf = F.count(F.when(c == F.lit(_PINF), F.lit(1)))
+    n_ninf = F.count(F.when(c == F.lit(_NINF), F.lit(1)))
+    fin = F.sum(
+        F.when(~F.isnan(c) & (c > F.lit(_NINF)) & (c < F.lit(_PINF)), c)
+        .cast(DECIMAL_T)
+    ).cast("double")
+    out = (
+        F.when(n_nan > 0, F.lit(_NAN))
+        .when((n_pinf > 0) & (n_ninf > 0), F.lit(_NAN))
+        .when(n_pinf > 0, F.lit(_PINF))
+        .when(n_ninf > 0, F.lit(_NINF))
+        .otherwise(fin)
+    )
     return out.alias(alias) if alias else out
 
 
@@ -95,19 +86,11 @@ def fsum_sql(expr: str, alias: str | None = None) -> str:
     return f"{sql} AS {alias}" if alias else sql
 
 
-def fsum_over(col: Column | str, w) -> Column:
-    """Windowed :func:`fsum`: the same non-finite-faithful composition
-    with each aggregate evaluated over frame ``w`` (a WindowSpec)."""
-    c = F.col(col) if isinstance(col, str) else col
-    n_nan, n_pinf, n_ninf, fin = _nonfinite_counts(c)
-    return _nonfinite_case(
-        n_nan.over(w), n_pinf.over(w), n_ninf.over(w), fin.over(w)
-    )
-
-
 def fsum_over_sql(expr: str, over: str) -> str:
-    """DuckDB twin of :func:`fsum_over`; ``over`` is the full window,
-    e.g. ``"OVER w"`` or ``"OVER (PARTITION BY u ORDER BY ts)"``."""
+    """Windowed DuckDB :func:`fsum`: the same non-finite-faithful
+    branches with each aggregate evaluated over the window ``over``,
+    the full window clause, e.g. ``"OVER w"`` or ``"OVER (PARTITION BY
+    u ORDER BY ts)"``."""
     e = expr
     return f"""CASE
       WHEN COUNT(CASE WHEN isnan({e}) THEN 1 END) {over} > 0 THEN CAST('nan' AS DOUBLE)
@@ -124,7 +107,7 @@ def fsum_over_sql(expr: str, over: str) -> str:
 
 
 def fsum_over_sparksql(expr: str, over: str) -> str:
-    """Spark-SQL-text twin of :func:`fsum_over`, for frames only
+    """Windowed Spark-SQL-text :func:`fsum`, for frames only
     expressible in SQL (e.g. ``RANGE BETWEEN INTERVAL 1 HOUR
     PRECEDING``).  Branch-identical to :func:`fsum_over_sql`; the only
     differences are Spark's non-finite literal spellings ('NaN',

@@ -1,18 +1,21 @@
 """Near-duplicate detection: MinHash + LSH banding, SimHash (SURVEY §2
 K2/K14 [X]; cf. Broder's resemblance/minwise papers — public knowledge).
 
-Pipeline (all DataFrame ops; the shuffle IS the LSH bucketing):
-  tokenize → k-token shingles → n_hashes seeded xxhash64 minima (one
-  explode + groupBy-min: codegen'd, linear) → band keys → self-join on
-  band key (docs colliding in ≥1 band = candidates) → exact shingle-set
-  Jaccard verify.
+Pipeline (all DataFrame ops; the shuffle IS the LSH bucketing), one
+function per stage, every stage reading one persisted
+:func:`shingle_base` scan:
+  :func:`minhash_signatures` (n_hashes seeded xxhash64 minima over the
+  pre-hashed shingles) → :func:`lsh_candidate_pairs` (band keys, one
+  groupBy per bucket) ∪ :func:`prefix_candidates` (PPJoin prefix
+  filter, for exact recall) → :func:`verify_jaccard` (exact shingle-set
+  Jaccard).  :func:`verified_near_dup_pairs` chains them.
 
 Scale notes:
-- Everything is one explode + two keyed shuffles (doc_id, then band
-  key); no crossJoin ever materializes.
+- No crossJoin ever materializes: candidates come from keyed shuffles
+  (band bucket, shingle hash) and are verified by keyed joins.
 - Band-key skew (a degenerate bucket with B docs → B² candidate pairs)
   is the real 100 TB risk: ``lsh_candidate_pairs(max_bucket_size=...)``
-  drops degenerate buckets before the self-join (on by default); AQE
+  drops degenerate buckets before pair emission (off by default); AQE
   skew-split handles moderate cases below the cap.
 - xxhash64 is Spark-JVM-specific → the LSH stage is rows-only for the
   oracle; the *verify* stage (exact Jaccard) and the recall property
@@ -31,31 +34,28 @@ def shingle_base(
     docs: DataFrame,
     held: Held,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     shingle_k: int = 3,
     extra: dict[str, Column] | None = None,
 ) -> DataFrame:
-    """ONE persisted scan+tokenize pass feeding every dedup stage:
-    ``(doc_id, sh_set, hs[, extra...])`` where ``sh_set`` is the
-    distinct shingle array and ``hs = transform(sh_set, xxhash64)`` its
-    per-element 8-byte pre-hash.
+    """ONE persisted scan+tokenize pass over ``docs``' ``doc_id`` and
+    ``text`` columns, feeding every dedup stage: ``(doc_id, sh_set,
+    hs[, extra...])`` where ``sh_set`` is the distinct shingle array and
+    ``hs = transform(sh_set, xxhash64)`` its per-element 8-byte
+    pre-hash.
 
-    Before r11 the pipeline tokenized the corpus THREE times per query
-    (minhash_signatures, prefix_candidates, verify_jaccard each
-    re-scanned + re-shingled), and k73's exact-hash branch re-scanned
-    the raw text twice more — guide §2.4/§5: the shingle pass is the
-    dominant map, so one cached pass beats n recomputed ones as long as
-    re-execution costs more than materialization (the r10 persist
-    rule; A/B numbers in OPTIMIZATION_r11.md).  The InMemoryRelation is
-    also the barrier that keeps ``hs`` evaluated once — the same
-    CollapseProject trap minhash_signatures' two-step projection
-    guards against.
+    The shingle pass is the dominant map, so one cached pass beats one
+    per stage as long as re-execution costs more than materialization
+    (guide §2.4/§5; A/B numbers in OPTIMIZATION_r11.md).  The
+    InMemoryRelation is also the barrier that keeps ``hs`` evaluated
+    once (see :func:`minhash_signatures`).
 
-    NULL-text docs are filtered ONCE here (the shared convention: they
-    join no candidate pairs and carry no signature).  ``extra`` lets a
-    caller ride additional per-doc columns on the same scan (k73's
-    md5 exact-dup key) instead of paying another pass.
+    NULL-text docs are filtered ONCE here, so they join no candidate
+    pairs and carry no signature (--nulls sweep): without the filter,
+    ``shingles(split(NULL))`` collapses to ``[""]`` (concat_ws skips
+    NULL inputs), giving a contentless doc a REAL signature that
+    collides with every empty doc.  ``extra`` lets a caller ride
+    additional per-doc columns on the same scan (k73's md5 exact-dup
+    key) instead of paying another pass.
 
     Scale: this caches a corpus-sized relation (MEMORY_AND_DISK — the
     DataFrame.persist default), trading one uncompressed write+3 local
@@ -63,9 +63,9 @@ def shingle_base(
     100 TB prefer re-reading the columnar source if executor-local disk
     is the bottleneck — drop the persist here and the pipeline is
     plan-identical, just recomputed (SCALING.md r11 note)."""
-    docs = docs.filter(F.col(text_col).isNotNull())
-    sh_set = shingles(F.split(F.col(text_col), " "), shingle_k)
-    cols = [F.col(id_col).alias("doc_id"), sh_set.alias("sh_set")]
+    docs = docs.filter(F.col("text").isNotNull())
+    sh_set = shingles(F.split(F.col("text"), " "), shingle_k)
+    cols = [F.col("doc_id"), sh_set.alias("sh_set")]
     for name, expr in (extra or {}).items():
         cols.append(expr.alias(name))
     return held.persist(
@@ -81,77 +81,41 @@ def verified_near_dup_pairs(
     *,
     shingle_k: int = 3,
     threshold: float = 0.5,
-    n_hashes: int = 32,
-    n_bands: int = 8,
-    rows_per_band: int = 4,
-    max_bucket_size: int | None = None,
     base: DataFrame | None = None,
 ) -> DataFrame:
-    """The full k2-contract near-dup pair pipeline (MinHash-LSH
-    candidates ∪ exact-recall prefix candidates, distinct-ed, exact
-    shingle-Jaccard verified).  The shingle base it persists goes into
-    the caller's ``held`` (session.Held), so the query that returns the
-    plan owns its lifetime.
+    """The full k2-contract near-dup pair pipeline: (a, b, jaccard) for
+    every doc pair with exact shingle Jaccard ≥ ``threshold``, a < b.
 
-    Why the persist matters (measured at sf0.1, r10): without it the
-    planner costs the verify joins from the candidate subtree's wild
-    size ESTIMATES (join-output cardinality guesses), picks sort-merge
-    over the wide shingle-array relations, and a trailing global sort
-    re-executes the whole candidate pipeline a second time for range-
-    partition sampling — 16.8 s end-to-end.  With the ~310k-row
-    candidate set materialized (accurate stats, reused bytes) the same
-    logical query runs 3.9 s.  At 100 TB the candidate set is the
-    SMALL relation (true-pair-density-bound, SCALING.md) — exactly
-    what you want pinned in memory while the corpus streams past it.
+    Candidates are the union of 32-hash MinHash-LSH collisions (8 bands
+    × 4 rows, no bucket cap) and the exact-recall prefix-filter pairs.
+    The union is not distinct-ed: it is consumed once, by
+    :func:`verify_jaccard`, which dedups pairs itself, so the union
+    pays neither a distinct Exchange nor a materialization barrier.
 
-    r11: all three stages read one :func:`shingle_base` scan (pass
-    ``base=`` to share it with caller-side branches, e.g. k73's
-    exact-hash layer).  The r10 ``sigs`` persist is gone — with the
-    base cached, the signature is one projection over cached ``hs``
-    and the banding's ``element_at(mh, i)`` references simplify to one
-    use of each array_min, so nothing re-evaluates.  The r10
-    union-level distinct + persist is gone too (the k18 move):
-    the candidate stream is consumed exactly once by the verify, whose
-    kernel path dedups consecutive pairs after its own (a)-keyed
-    repartition+sort — so the union skips both the 309k-row distinct
-    Exchange and a materialization barrier; prefix_candidates' internal
-    distinct is skipped for the same reason.  The non-kernel fallback
-    inside verify_jaccard_from_base applies ``.distinct()`` itself, so
-    above the kernel gate the pair multiset is deduplicated exactly as
-    before (A/Bs in OPTIMIZATION_r11.md)."""
+    The :func:`shingle_base` relation all stages read goes into the
+    caller's ``held`` (session.Held), so the query that returns the
+    plan owns its lifetime; pass ``base=`` to share one base with
+    caller-side branches (k73's exact-hash layer)."""
     if base is None:
         base = shingle_base(docs, held, shingle_k=shingle_k)
-    sigs = minhash_signatures_from_base(base, n_hashes=n_hashes)
-    cands = lsh_candidate_pairs(
-        sigs,
-        n_bands=n_bands,
-        rows_per_band=rows_per_band,
-        max_bucket_size=max_bucket_size,
-    ).unionByName(
-        prefix_candidates_from_base(base, threshold=threshold, distinct=False)
+    cands = lsh_candidate_pairs(minhash_signatures(base)).unionByName(
+        prefix_candidates(base, threshold)
     )
-    return verify_jaccard_from_base(
-        cands, base, threshold=threshold, candidates_distinct=False
-    )
+    return verify_jaccard(cands, base, threshold)
 
 
 def shingles(toks: Column, k: int = 3) -> Column:
     """Distinct k-token shingles as space-joined strings.
 
     Built as a k-way shifted zip (k whole-array slices, one
-    ``arrays_zip``, then a per-element concat of struct fields) instead
-    of the original ``transform(sequence(0, n-k), i -> concat_ws(slice
-    (toks, i+1, k)))``: the per-element ``slice`` paid an O(k)
-    array-allocation+copy inside an interpreted lambda for every
-    shingle, which measured 3.2x slower at sf0.1 (1.59 s → 0.49 s for
-    the shingle-array pass) and scales worse on long documents.  Same
-    shape as the DuckDB oracles' zip rewrite (r10), so both engines run
-    the linear form.  Element ORDER and VALUES are identical to the old
-    form (slice i of the zip is the shingle starting at token i;
-    array_distinct keeps first occurrence), so every consumer — minhash,
-    prefix filter, verify — sees bit-identical arrays.  Short inputs
-    (n < k) keep the original semantics: one shingle joining all
-    tokens (concat_ws over the whole array)."""
+    ``arrays_zip``, then a per-element concat of struct fields): slice
+    i of the zip is the shingle starting at token i, and array_distinct
+    keeps first occurrence.  A per-shingle ``slice`` inside the lambda
+    would pay an O(k) array allocation+copy for every shingle (3.2x
+    slower at sf0.1, and worse on long documents).  The DuckDB oracles
+    use the same zip shape, so both engines run the linear form.  Short
+    inputs (n < k) give one shingle joining all tokens (concat_ws over
+    the whole array)."""
     n = F.size(toks)
     zipped = F.arrays_zip(
         *[F.slice(toks, i + 1, n - k + 1).alias(f"t{i}") for i in range(k)]
@@ -167,86 +131,38 @@ def shingles(toks: Column, k: int = 3) -> Column:
     ).otherwise(F.array(F.concat_ws(" ", toks)))
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = 32,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """One row per doc: ``mh`` = array<long> of n_hashes min-hash values.
+def minhash_signatures(base: DataFrame, n_hashes: int = 32) -> DataFrame:
+    """One row per :func:`shingle_base` doc: ``mh`` = array<long> of
+    n_hashes min-hash values.
 
-    Shape (r10, measured at sf0.1 — tools/op_bench methodology): the
-    shingle array is hashed ONCE per element to a long in its own
-    projection step, and each of the n_hashes minima is then a plain
-    ``array_min(transform(hs, h -> xxhash64(i, h)))`` over those longs.
-    Per shingle that is 1 string hash + n_hashes fixed-8-byte long
-    hashes instead of n_hashes string hashes.  Variants measured and
-    rejected:
-
-    - explode → groupBy(doc_id) → n_hashes MIN aggs (the r9 shape):
-      shuffles every (doc_id, shingle) row to re-group rows that were
-      already grouped; 2.28 s, and 0.92 s even after the pre-hash.
-    - one ``aggregate`` HOF folding ``zip_with(acc, [xxhash64(i, s)
-      for i], least)``: no shuffle, but allocates a fresh n_hashes
-      array per SHINGLE inside the interpreted fold; 1.43 s.
-    - this shape with the pre-hash INLINED into the 32 minima: the
-      optimizer happily duplicates the non-collapsed transform, so the
-      string-hash pass runs n_hashes times — 11.6 s.  The TWO-STEP
-      projection is load-bearing: CollapseProject keeps the ``hs``
-      alias because a non-cheap expression referenced n_hashes times
-      is never inlined.  This shape: 1.09 s.
+    Each minimum is a plain ``array_min(transform(hs, h -> xxhash64(i,
+    h)))`` over the base's pre-hashed ``hs``: per shingle, one string
+    hash (paid once, in the base) + n_hashes fixed-8-byte long hashes
+    instead of n_hashes string hashes.  ``hs`` must reach this
+    projection already evaluated: with the pre-hash inlined into the
+    n_hashes minima the optimizer duplicates the transform and the
+    string-hash pass runs n_hashes times (11.6 s against 1.09 s at
+    sf0.1; OPTIMIZATION_r10.md also lists the rejected explode/groupBy
+    and ``aggregate``-fold shapes).  The base's InMemoryRelation is that
+    barrier.
 
     The per-seed lambdas are single-parameter closures built in a
     helper — the tempting ``lambda h, i=i:`` two-parameter form
     silently binds i to transform's ELEMENT INDEX argument, seeding
-    every hash identically (the r10 bug class that
-    test_minhash_lsh_finds_near_duplicates caught).
+    every hash identically (test_minhash_lsh_finds_near_duplicates
+    catches it).
 
-    Hash-family note: the signature values are xxhash64(seed,
-    xxhash64(shingle)) — NOT the r9 xxhash64(seed, shingle).  The
-    values are engine-internal: they exist only to generate LSH
-    candidates, recall is guaranteed by the deterministic prefix-filter
-    union, and every emitted pair is exact-string-verified, so the k2
-    family's oracle-checked output is invariant to the hash family (a
-    64-bit collision merges two shingles for CANDIDATE purposes only —
-    the same collision class prefix_candidates already accepts).
-
-    NULL-text docs do not participate (--nulls sweep): without the
-    filter, ``shingles(split(NULL))`` silently collapses to ``[""]``
-    (concat_ws skips NULL inputs), giving a contentless doc a REAL
-    signature that collides with every empty doc.
-    """
+    Hash-family note: the signature values xxhash64(seed,
+    xxhash64(shingle)) are engine-internal: they exist only to generate
+    LSH candidates, recall is guaranteed by the deterministic
+    prefix-filter union, and every emitted pair is exact-string-verified,
+    so the k2 family's oracle-checked output is invariant to the hash
+    family (a 64-bit collision merges two shingles for CANDIDATE
+    purposes only — the same collision class prefix_candidates already
+    accepts)."""
 
     def _seed_min(hs: Column, i: int) -> Column:
         # single-param lambda: i is captured by the enclosing call
-        return F.array_min(F.transform(hs, lambda h: F.xxhash64(F.lit(i), h)))
-
-    docs = docs.filter(F.col(text_col).isNotNull())
-    sh_set = shingles(F.split(F.col(text_col), " "), shingle_k)
-    pre = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.transform(sh_set, lambda s: F.xxhash64(s)).alias("hs"),
-    )
-    return pre.select(
-        "doc_id",
-        F.array(*[_seed_min(F.col("hs"), i) for i in range(n_hashes)]).alias(
-            "mh"
-        ),
-    )
-
-
-def minhash_signatures_from_base(
-    base: DataFrame, n_hashes: int = 32
-) -> DataFrame:
-    """:func:`minhash_signatures` over a :func:`shingle_base` relation:
-    identical mh values (same xxhash64(seed, xxhash64(shingle)) minima
-    over the same pre-hashed ``hs``), but the shingle+pre-hash pass is
-    read from the cached base instead of recomputed — and the
-    InMemoryRelation barrier replaces the two-step-projection
-    CollapseProject guard documented above."""
-
-    def _seed_min(hs: Column, i: int) -> Column:
         return F.array_min(F.transform(hs, lambda h: F.xxhash64(F.lit(i), h)))
 
     return base.select(
@@ -275,17 +191,14 @@ def lsh_candidate_pairs(
     is what callers get unless they opt in to the scale knob — at
     100 TB, pass an explicit cap (~10k) to bound the worst bucket.
 
-    Shape (r10): ONE shuffle — groupBy (band, key) → sorted doc-id
-    list → emit the i<j pairs with a nested-``transform`` flatten.
-    The r9 shape self-joined the band relation on (band, key), which
-    cost the same Exchange TWICE (both join inputs) plus the join
-    itself, and the capped variant added a count-window pass over the
-    same key.  Here the cap is a ``size(lst)`` filter on the already-
-    grouped row, and pair emission is a per-row expression.  Output is
-    identical: (a, b) with a < b from the same bucket, distinct-ed
-    across bands — array_sort fixes collect_list's nondeterministic
-    order so i<j ⇔ a<b, and a doc appears at most once per bucket
-    (one key per band per doc), so in-bucket pairs are unique."""
+    Shape: ONE shuffle — groupBy (band, key) → sorted doc-id list →
+    emit the i<j pairs of each list.  A self-join on (band, key) would
+    pay that Exchange on both join inputs plus the join itself; here
+    the cap is a ``size(lst)`` filter on the already-grouped row.
+    array_sort fixes collect_list's nondeterministic order so i<j ⇔
+    a<b, and a doc appears at most once per bucket (one key per band
+    per doc), so in-bucket pairs are unique; the trailing distinct
+    merges pairs that collide in several bands."""
     bands = signatures.select(
         "doc_id",
         F.explode(
@@ -313,14 +226,12 @@ def lsh_candidate_pairs(
         buckets = buckets.filter(F.size("ids") <= max_bucket_size)
     # all i<j pairs of the sorted bucket: posexplode to one row per
     # (position, id) FIRST, then pair each id with the tail slice after
-    # its position.  The r10 form built the whole flattened pair array
-    # in ONE row — O(B²) structs for a degenerate B-doc bucket in a
-    # single task row (r10 ADVICE: with max_bucket_size=None that is a
-    # single-executor OOM at scale, trading the old distributed
-    # quadratic join for a concentrated one).  Here per-row memory is
-    # O(B) (the carried ids array + its tail slice) while the emitted
-    # pair SET is identical: pos is 0-based, so the tail after position
-    # pos starts at 1-based index pos+2.
+    # its position.  Building the whole flattened pair array in ONE row
+    # would put O(B²) structs for a degenerate B-doc bucket in a single
+    # task row (with max_bucket_size=None, a single-executor OOM at
+    # scale); here per-row memory is O(B) (the carried ids array + its
+    # tail slice).  pos is 0-based, so the tail after position pos
+    # starts at 1-based index pos+2.
     exploded = buckets.filter(F.size("ids") >= 2).select(
         F.col("ids"), F.posexplode("ids").alias("pos", "a")
     )
@@ -335,17 +246,11 @@ def lsh_candidate_pairs(
     )
 
 
-def prefix_candidates(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """DETERMINISTIC candidate pairs via the prefix filter (PPJoin
-    family, Xiao et al. 2008 — public): under any shared total order of
-    shingles, two sets with Jaccard >= t must share at least one
-    element of each other's (|X| - ceil(t*|X|) + 1)-element prefix.
+def prefix_candidates(base: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """DETERMINISTIC candidate pairs (a, b), a < b, via the prefix filter
+    (PPJoin family, Xiao et al. 2008 — public): under any shared total
+    order of shingles, two sets with Jaccard >= t must share at least
+    one element of each other's (|X| - ceil(t*|X|) + 1)-element prefix.
 
     This is the exact-recall complement to :func:`lsh_candidate_pairs`
     (fuzz sweep, seed 23): MinHash banding is PROBABILISTIC — a pair
@@ -355,55 +260,23 @@ def prefix_candidates(
     shingle hash) — rarest-first, which also makes the candidate join
     touch the SMALLEST posting lists.
 
-    Shuffle discipline (r10): every relation past the explode carries
-    ``xxhash64(sh)`` instead of the ~25-char shingle string, so the df
-    window, both per-doc windows and the candidate self-join all move
-    8-byte longs (guide §2.3, narrower shuffle rows).  The hash is
-    engine-internal — candidates go to the exact string-array verify,
-    so the 64-bit collision class (same one k18/k14b already accept)
-    can only add a false candidate, never lose a true pair: merging
-    colliding shingles makes the hashed Jaccard an UPPER bound on the
-    true Jaccard, and the prefix theorem keeps exact recall under any
-    consistent total order.  The old shape also paid a full
-    ``.distinct()`` Exchange on (doc_id, sh) — a no-op, since
-    shingles() is array_distinct per doc — and a shingle-keyed
-    sh⋈freq join; the distinct is dropped and the join replaced by a
-    count window over the hash (one Exchange instead of agg+join).
-    Measured at sf0.1: 6.5 s → see OPTIMIZATION_r10.md."""
-    sh = docs.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(
-            shingles(F.split(F.col(text_col), " "), shingle_k)
-        ).alias("sh"),
-    )
-    # (doc_id, sh) is distinct by construction (array_distinct per doc)
-    sh = sh.select("doc_id", F.xxhash64("sh").alias("h"))
-    return _prefix_join(sh, threshold)
+    The (doc_id, h) rows explode the :func:`shingle_base` pre-hash
+    array ``hs``; they are distinct by construction (``sh_set`` is
+    array_distinct per doc), so no dedup Exchange precedes the windows.
+    Every relation past the explode moves 8-byte hashes rather than
+    ~25-char shingle strings, so the df window, both per-doc windows
+    and the candidate self-join shuffle narrow rows (guide §2.3).  The
+    hash is engine-internal — candidates go to the exact string-array
+    verify, so the 64-bit collision class (same one k18/k14b already
+    accept) can only add a false candidate, never lose a true pair:
+    merging colliding shingles makes the hashed Jaccard an UPPER bound
+    on the true Jaccard, and the prefix theorem keeps exact recall
+    under any consistent total order.
 
-
-def prefix_candidates_from_base(
-    base: DataFrame, threshold: float = 0.5, distinct: bool = True
-) -> DataFrame:
-    """:func:`prefix_candidates` over a :func:`shingle_base` relation:
-    exploding the cached per-element pre-hash array ``hs`` yields the
-    exact (doc_id, h) rows the standalone form computes (transform
-    preserves element order and multiplicity), without re-scanning and
-    re-shingling the corpus.
-
-    ``distinct=False`` skips the trailing pair dedup Exchange — only
-    for consumers that dedup downstream (verify_jaccard_from_base's
-    kernel dedups consecutive sorted pairs; its fallback re-applies
-    ``.distinct()``)."""
+    A pair sharing several prefix hashes is emitted once per shared
+    hash: the output is NOT distinct.  :func:`verify_jaccard` dedups
+    its candidates, so no Exchange is spent on it here."""
     sh = base.select("doc_id", F.explode("hs").alias("h"))
-    return _prefix_join(sh, threshold, distinct=distinct)
-
-
-def _prefix_join(
-    sh: DataFrame, threshold: float, distinct: bool = True
-) -> DataFrame:
-    """Shared prefix-filter + positional-filter candidate join over the
-    exploded (doc_id, h) shingle-hash relation (docstring: see
-    :func:`prefix_candidates`)."""
     w_freq = Window.partitionBy("h")
     w_doc = Window.partitionBy("doc_id").orderBy("df", "h")
     w_size = Window.partitionBy("doc_id")
@@ -446,9 +319,9 @@ def _prefix_join(
     # is proof the pair fails and drops at generation; a true pair's
     # witnesses ALL satisfy it (bound >= true overlap >= alpha), so
     # recall is exact.  Without it the t=0.5 prefix join emitted 310k
-    # candidate pairs at sf0.1 against 256 true pairs, and the exact
-    # verify paid ~310k array_intersects (measured r10).
-    pairs = a.join(
+    # candidate pairs at sf0.1 against 256 true pairs, each paying an
+    # exact verify.
+    return a.join(
         b,
         (F.col("h") == F.col("hb"))
         & (F.col("a") < F.col("b"))
@@ -460,83 +333,58 @@ def _prefix_join(
             >= alpha
         ),
     ).select("a", "b")
-    return pairs.distinct() if distinct else pairs
 
 
 def verify_jaccard(
-    candidates: DataFrame,
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 3,
-    threshold: float = 0.5,
+    candidates: DataFrame, base: DataFrame, threshold: float = 0.5
 ) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs; keep ≥ threshold.
+    """(a, b, jaccard) for each distinct candidate pair whose exact
+    shingle-set Jaccard over the :func:`shingle_base` arrays, rounded to
+    6 dp, is ≥ ``threshold``.  ``candidates`` may repeat a pair.  A doc
+    the base dropped (NULL text) joins nothing, so the inner joins keep
+    the stage total.
 
-    NULL-text docs drop out (same convention as minhash_signatures) —
-    they can have no candidate pairs upstream, and an inner join on a
-    filtered side keeps the verify stage total."""
-    docs = docs.filter(F.col(text_col).isNotNull())
-    sets = docs.select(
-        F.col(id_col).alias("doc_id"),
-        shingles(F.split(F.col(text_col), " "), shingle_k).alias("sh_set"),
-    )
-    return _verify_join(candidates, sets, threshold)
-
-
-def verify_jaccard_from_base(
-    candidates: DataFrame,
-    base: DataFrame,
-    threshold: float = 0.5,
-    candidates_distinct: bool = True,
-) -> DataFrame:
-    """:func:`verify_jaccard` over a :func:`shingle_base` relation: the
-    exact shingle arrays come from the cached base instead of a third
-    corpus scan.
-
-    r11 kernel prefilter (guide §4.2 — the k18 CSR pattern made a
-    shared helper): at sf0.1 the t=0.5 prefix join emits ~309k
-    candidate pairs against 256 true ones, and dragging ~300-element
-    string arrays through two joins + per-pair ``array_intersect`` set
-    builds is the family's dominant stage (measured: the full pipeline
-    spends most of its ~4 s here; a JVM long-array prefilter variant
-    measured FLAT because per-pair set builds cost the same on longs).
-    The gated path broadcasts the pre-hashed shingle CSR (uint32 dense
-    ids over ``hs``) and streams the 16-byte pairs sorted by ``a``
-    through :func:`_pair_intersect_counts`; a pair survives when its
-    HASH-overlap jaccard clears ``threshold - 1e-6``.  The kernel
-    count is an UPPER bound on the true string overlap (every common
-    string hits ≥ 1 marked LUT slot; hash collisions and within-doc
-    duplicate hashes only overcount), and the margin covers the final
-    6-dp rounding (a pair passing ``round(j, 6) >= t`` has raw
-    j > t - 5e-7), so no true pair is pruned — the survivors (≈ the
-    true pair count) then pay the exact STRING-array verify, keeping
-    output values bit-identical to the unfiltered path.  Above the
-    CSR gate (:func:`_pair_intersect_counts` returns ``None``) the
-    prefilter is skipped and the exact verify runs over all candidates,
-    unchanged — the 100 TB path, where the CSR is corpus-sized.
-
-    ``candidates_distinct=False`` declares that the incoming pair
-    stream may carry duplicates: the kernel dedups consecutive pairs
-    after its (a)-keyed repartition+sort (identical pairs share ``a``
-    so they land in one partition, adjacent after the sort — k18's
-    exact pattern, with the batch-boundary carry), and the non-kernel
-    fallback applies ``.distinct()`` itself — either way the verify
-    output is duplicate-free exactly as if the caller had
-    distinct-ed."""
+    Kernel prefilter (guide §4.2 — the k18 CSR pattern made a shared
+    helper): at sf0.1 the t=0.5 prefix join emits ~309k candidate pairs
+    against 256 true ones, and dragging ~300-element string arrays
+    through two joins + per-pair ``array_intersect`` set builds is the
+    family's dominant stage (a JVM long-array prefilter measured FLAT,
+    because per-pair set builds cost the same on longs).  The gated
+    path broadcasts the pre-hashed shingle CSR (uint32 dense ids over
+    ``hs``) and streams the 16-byte pairs sorted by ``a`` through
+    :func:`_pair_intersect_counts`, which also drops repeated pairs; a
+    pair survives when its HASH-overlap jaccard clears ``threshold -
+    1e-6``.  The kernel count is an UPPER bound on the true string
+    overlap (every common string hits ≥ 1 marked LUT slot; hash
+    collisions and within-doc duplicate hashes only overcount), and the
+    margin covers the final 6-dp rounding (a pair passing ``round(j, 6)
+    >= t`` has raw j > t - 5e-7), so no true pair is pruned — the
+    survivors (≈ the true pair count) then pay the exact STRING-array
+    verify, keeping output values bit-identical to the unfiltered path.
+    Above the CSR gate (:func:`_pair_intersect_counts` returns ``None``)
+    the candidates are distinct-ed and the exact verify runs over all
+    of them — the 100 TB path, where the CSR is corpus-sized."""
     stats = _pair_intersect_counts(
-        base.sparkSession,
-        candidates,
-        base.select("doc_id", "hs"),
-        dedup=not candidates_distinct,
+        base.sparkSession, candidates, base.select("doc_id", "hs")
     )
     if stats is not None:
         ih = F.col("inter").cast("double")
         jh = ih / ((F.col("sza") + F.col("szb")).cast("double") - ih)
         surv = stats.filter(jh >= F.lit(threshold - 1e-6)).select("a", "b")
     else:
-        surv = candidates if candidates_distinct else candidates.distinct()
-    return _verify_join(surv, base.select("doc_id", "sh_set"), threshold)
+        surv = candidates.distinct()
+    sets = base.select("doc_id", "sh_set")
+    a = sets.select(F.col("doc_id").alias("a"), F.col("sh_set").alias("sh_a"))
+    b = sets.select(F.col("doc_id").alias("b"), F.col("sh_set").alias("sh_b"))
+    joined = surv.join(a, "a").join(b, "b")
+    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
+    union = (F.size("sh_a") + F.size("sh_b") - F.size(F.array_intersect("sh_a", "sh_b"))).cast(
+        "double"
+    )
+    return (
+        joined.select("a", "b", F.round(inter / union, 6).alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
 
 
 #: CSR-fit gate of :func:`_pair_intersect_counts`: the (doc_id, hs)
@@ -549,17 +397,17 @@ _CSR_KERNEL_MAX_BYTES = 512 * 2**20
 
 
 def _pair_intersect_counts(
-    spark, pairs: DataFrame, docs_hs: DataFrame, dedup: bool = False
+    spark, pairs: DataFrame, docs_hs: DataFrame
 ) -> DataFrame | None:
     """(a, b, inter, sza, szb) for each candidate pair, where ``inter``
     counts b-side hash elements marked by a's LUT row — the k18 CSR
     kernel as a shared helper: broadcast the corpus's pre-hashed
     shingle CSR, stream pairs sorted by ``a``, build each ``a`` row's
     boolean vocab LUT once and count every paired ``b`` row in one
-    ragged gather + bincount (no per-row Python).  ``dedup=True`` drops
-    duplicate (a, b) pairs — they arrive consecutive after the sort —
-    so callers can skip a dedicated distinct Exchange (k18's pattern,
-    including the batch-boundary carry).
+    ragged gather + bincount (no per-row Python).  Repeated (a, b)
+    pairs are emitted once — they arrive consecutive after the sort,
+    carried across batch boundaries — so callers need no distinct
+    Exchange on ``pairs``.
 
     Returns ``None`` when ``docs_hs`` does not fit the CSR gate
     (``_CSR_KERNEL_MAX_ROWS`` / ``_CSR_KERNEL_MAX_BYTES``); the caller
@@ -600,15 +448,14 @@ def _pair_intersect_counts(
                 continue
             a = pdf["a"].to_numpy()
             b = pdf["b"].to_numpy()
-            if dedup:
-                keep = np.r_[True, (a[1:] != a[:-1]) | (b[1:] != b[:-1])]
-                if prev_a is not None and a[0] == prev_a and b[0] == prev_b:
-                    keep[0] = False
-                prev_a, prev_b = int(a[-1]), int(b[-1])
-                if not keep.all():
-                    a, b = a[keep], b[keep]
-                if not len(a):
-                    continue
+            keep = np.r_[True, (a[1:] != a[:-1]) | (b[1:] != b[:-1])]
+            if prev_a is not None and a[0] == prev_a and b[0] == prev_b:
+                keep[0] = False
+            prev_a, prev_b = int(a[-1]), int(b[-1])
+            if not keep.all():
+                a, b = a[keep], b[keep]
+            if not len(a):
+                continue
             ra = pm[np.searchsorted(ids_s, a)]
             rb = pm[np.searchsorted(ids_s, b)]
             inter = np.zeros(len(a), dtype=np.int64)
@@ -649,23 +496,6 @@ def _pair_intersect_counts(
         .mapInPandas(
             intersect_counts, "a long, b long, inter long, sza long, szb long"
         )
-    )
-
-
-def _verify_join(
-    candidates: DataFrame, sets: DataFrame, threshold: float
-) -> DataFrame:
-    """Shared exact-Jaccard verify join over per-doc shingle sets."""
-    a = sets.select(F.col("doc_id").alias("a"), F.col("sh_set").alias("sh_a"))
-    b = sets.select(F.col("doc_id").alias("b"), F.col("sh_set").alias("sh_b"))
-    joined = candidates.join(a, "a").join(b, "b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = (F.size("sh_a") + F.size("sh_b") - F.size(F.array_intersect("sh_a", "sh_b"))).cast(
-        "double"
-    )
-    return (
-        joined.select("a", "b", F.round(inter / union, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
     )
 
 

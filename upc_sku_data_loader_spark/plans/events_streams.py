@@ -17,8 +17,6 @@ the same shuffle shape (one exchange on the grouping key).
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -191,36 +189,10 @@ def i5_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return doubled.dropDuplicates(["event_id", "event_type", "user_id"])
 
 
-# --- I6: stateful sessionize — imperative per-key state machine via
-#     applyInPandas (batch twin of transformWithStateInPandas); the SQL
-#     oracle is the same gaps-and-islands used for I3, so this checks the
-#     Python state machine against a completely independent formulation. -------------
-
-
-def _sessionize_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-    # NULL-timestamp convention (module docstring): NaT events belong to
-    # no session — without the filter, pandas sorts NaT LAST and the
-    # state machine's `NaT - end > gap` (always False) silently merges
-    # the timeless event into whichever session came last
-    pdf = pdf[pdf["ts"].notna()].sort_values(["ts", "event_id"])
-    gap = pd.Timedelta(minutes=30)
-    out = []
-    start = end = None
-    n = 0
-    total = 0.0
-    for ts, val in zip(pdf["ts"], pdf["value"]):
-        if start is None:
-            start, end, n, total = ts, ts, 1, float(val)
-        elif ts - end > gap:
-            out.append((pdf["user_id"].iloc[0], start, end, n, round(total, 4)))
-            start, end, n, total = ts, ts, 1, float(val)
-        else:
-            end, n, total = ts, n + 1, total + float(val)
-    if start is not None:
-        out.append((pdf["user_id"].iloc[0], start, end, n, round(total, 4)))
-    return pd.DataFrame(
-        out, columns=["user_id", "session_start", "session_end", "n_events", "total_value"]
-    )
+# --- I6: batch sessionize — one-pass Arrow kernel per partition (batch
+#     twin of i6b's stateful stream); the SQL oracle is the same
+#     gaps-and-islands used for I3, so this checks the kernel against a
+#     completely independent formulation. -------------------------------
 
 
 @query("i6_stateful_sessionize", oracle=SESSION_SQL_PANDAS)
@@ -229,32 +201,29 @@ def i6_stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     stateful stream; per-session NaN/NULL poisoning contract in
     SESSION_SQL_PANDAS).
 
-    r10 rewrite (guide §4.2, the t11 shape): the original
-    ``groupBy(user_id).applyInPandas(_sessionize_pdf)`` ran an
-    interpreted Python row-loop per group — per-GROUP pandas
-    construction times thousands of small groups plus one interpreted
-    float op per row (4.9 s noop at sf0.1).  Same single Exchange on
-    user_id, but the kernel now sessionizes the WHOLE partition in one
-    pass: sort by (user_id, ts, event_id), session breaks = user-change
-    OR gap > 30 min (numpy compare), per-session bounds from the break
-    positions.  The kernel is ``mapInArrow``, NOT mapInPandas, because
-    of an exactness trap the seed-7/11/23 fuzz fixtures caught in the
-    pandas form: a nullable int64 user_id column converts to float64
+    One Exchange on user_id, then the kernel sessionizes the WHOLE
+    partition in one pass: sort by (user_id, ts, event_id), session
+    breaks = user-change OR gap > 30 min (numpy compare), per-session
+    bounds from the break positions.  A per-group ``applyInPandas``
+    row loop pays pandas construction for each of thousands of small
+    groups plus one interpreted float op per row (4.9 s noop at sf0.1
+    against this kernel's single pass).  The kernel is ``mapInArrow``,
+    NOT mapInPandas, because of an exactness trap the seed-7/11/23 fuzz
+    fixtures caught in the pandas form: a nullable int64 user_id column converts to float64
     (NaN for NULL), and two distinct snowflake-regime ids above 2⁵³
     collapse to the SAME double — merging different users' sessions.
     Arrow keeps int64 + validity exactly; user boundaries come from
     ``dictionary_encode`` codes (NULL user_id = one code, matching the
-    SQL PARTITION BY / old-groupBy one-NULL-group convention), and the
+    SQL PARTITION BY / groupBy one-NULL-group convention), and the
     emitted user_id/timestamps are ``take``-n from the sorted arrays —
     no lossy round-trip anywhere.  Per-session totals stay a plain
     sequential left-to-right Python add + ``round(total, 4)`` over the
-    segment — BIT-identical to the old loop (``np.add.reduceat`` is
-    pairwise above short segments, and np.round's scale-multiply
-    differs from correctly-rounded round() at rare boundaries; the
-    float adds were never the cost, per-group pandas construction
-    was).  NULL-ts events drop before sorting (same convention as
-    _sessionize_pdf, which stays — it is i6b's per-key state-machine
-    reference and pytest-pinned)."""
+    segment — BIT-identical to i6b's per-row state machine
+    (``np.add.reduceat`` is pairwise above short segments, and
+    np.round's scale-multiply differs from correctly-rounded round() at
+    rare boundaries; the float adds were never the cost, per-group
+    pandas construction was).  NULL-ts events belong to no session and
+    drop before sorting (the module's NULL-timestamp convention)."""
     from typing import Iterator
 
     import numpy as np
@@ -395,8 +364,11 @@ def _sessionize_with_state(key, pdfs, state):
         end_us, n, total = 0, 0, 0.0
     out = []
     for pdf in pdfs:
-        # NaT filter: same NULL-timestamp convention as _sessionize_pdf
-        # (astype(int64) of NaT would also fabricate a sentinel time)
+        # NULL-timestamp convention (module comment): NaT events belong
+        # to no session.  Unfiltered, pandas sorts NaT LAST and
+        # `NaT - end > gap` (always False) merges the timeless event
+        # into the last session; astype(int64) of NaT would also
+        # fabricate a sentinel time
         pdf = pdf[pdf["ts"].notna()].sort_values(["ts", "event_id"])
         ts_us = pdf["ts"].astype("int64") // 1000
         for t, val in zip(ts_us, pdf["value"]):

@@ -1099,7 +1099,7 @@ def k18_ngram_jaccard(spark: SparkSession, sf_dir: str, held: Held) -> DataFrame
     # well under any row cap.  Both strategies reuse the persisted
     # clustered relation so nothing is computed twice.
     stats = _pair_intersect_counts(
-        spark, cands, g.select("doc_id", F.col("grams").alias("hs")), dedup=True
+        spark, cands, g.select("doc_id", F.col("grams").alias("hs"))
     )
     if stats is not None:
         inter = F.col("inter").cast("double")

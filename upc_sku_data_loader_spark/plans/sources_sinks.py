@@ -27,7 +27,7 @@ from ..catalog import load, read_schema
 from ..functions.exprs import fsum, fsum_sql
 from ..functions.upc import gtin_check_digit_sql
 from ..registry import query
-from ..sources.db import db_sink_upsert, db_source, jdbc_sink_append
+from ..sources.db import db_sink_upsert, db_source, jdbc_sink_append, jdbc_source
 from ..sources.files import csv_source, json_source, parquet_sink
 from ..sources.rest_api import fetch_products
 from ..streaming.sources import read_events_stream, run_available_now
@@ -258,8 +258,8 @@ def a6_jdbc_sink_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     query idempotent per run), second is mode("append") — the sink
     under test — so the read-back table holds exactly 2× the source and
     proves the append accumulated rather than replaced.  Read-back goes
-    through ``spark.read.jdbc`` (A5's Spark-native path).  On a real
-    cluster the same code targets MySQL/Postgres by swapping URL +
+    through ``sources.db.jdbc_source`` (A5's Spark-native path).  On a
+    real cluster the same code targets MySQL/Postgres by swapping URL +
     driver; parallelism = DataFrame partitions (one JDBC connection
     each), batched inserts under the hood.
     """
@@ -274,13 +274,7 @@ def a6_jdbc_sink_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dbtable", "SUPP_LOAD"
     ).options(**props).save()
     jdbc_sink_append(src, url, "SUPP_LOAD", props)
-    back = (
-        spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", "SUPP_LOAD")
-        .options(**props)
-        .load()
-    )
+    back = jdbc_source(spark, url, "SUPP_LOAD", props)
     return back.select(
         F.col("s_suppkey").cast("long").alias("s_suppkey"),
         "s_name",
@@ -2223,16 +2217,9 @@ def a25_jdbc_partitioned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "read_stripe bigint, n_orders bigint, stripe_total double"
         )
-    back = (
-        spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", "ORDERS_LOAD")
-        .option("partitionColumn", "o_orderkey")
-        .option("lowerBound", str(bounds["lo"]))
-        .option("upperBound", str(bounds["hi"] + 1))
-        .option("numPartitions", "8")
-        .options(**props)
-        .load()
+    back = jdbc_source(
+        spark, url, "ORDERS_LOAD", props,
+        "o_orderkey", bounds["lo"], bounds["hi"] + 1, 8,
     )
     # Spark collapses JDBC stripes when the key width is narrower than
     # numPartitions (upperBound - lowerBound < 8 → one stripe per key),

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..functions.exprs import fsum, fsum_over, fsum_over_sql, fsum_sql
+from ..functions.exprs import fsum, fsum_over_sql, fsum_sql
 from ..registry import query
 
 # --- T1: resample to a daily grid with gap-fill -------------------------------

@@ -706,11 +706,11 @@ def k41_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     folds (15.1 s noop at sf0.1).  After: ONE map-side ``mapInPandas``
     assignment (centroid argmax against a C-row broadcast matrix) and
     ONE Exchange on the cluster key into a ``applyInPandas`` kernel
-    that computes the pair stage as a normalized matmul (column-blocked
-    to the similarity kernels' cell budget).  Values identical: cosine
-    = dot of L2-normalized float64 rows rounded to 6 dp — the same
-    kernel-vs-oracle contract k3/k4/k17 have held bit-exact through
-    every parity/fuzz sweep since r6; argmax ties break to the lowest
+    that runs k17's ``_dup_of_block`` over the cluster's normalized
+    rows (sub-blocked to the similarity kernels' cell budget).  Values
+    identical: cosine = dot of L2-normalized float64 rows rounded to
+    6 dp — the same kernel-vs-oracle contract k3/k4/k17 have held
+    bit-exact through every parity/fuzz sweep since r6; argmax ties break to the lowest
     cid (np.argmax first-occurrence over ascending-cid columns = the
     old ORDER BY sim DESC, cid ASC); dropped[j] = any lower-id member
     with sim ≥ τ computed on the same rounded values.  Zero-norm
@@ -734,7 +734,7 @@ def k41_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions.vectors import finite_vec
     from ..operators.similarity import (
-        _TOPK_CELL_BUDGET,
+        _dup_of_block,
         _finite_rows,
         _normalized,
     )
@@ -783,24 +783,16 @@ def k41_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         nm = _normalized(
             np.vstack(pdf["emb"].to_numpy()[order]).astype(np.float64)
         )
-        n = len(ids)
-        dropped = np.zeros(n, dtype=bool)
-        if n > 1:
-            # column blocks bound the sims transient to the shared
-            # similarity-kernel cell budget (cluster sizes are the one
-            # dimension SemDeDup does not cap per-row)
-            step = max(64, _TOPK_CELL_BUDGET // n)
-            for j0 in range(0, n, step):
-                j1 = min(n, j0 + step)
-                sims = np.round(nm @ nm[j0:j1].T, 6)  # (n, j1-j0)
-                # witness rows are the STRICTLY-lower-id members only
-                lower = np.arange(n)[:, None] < np.arange(j0, j1)[None, :]
-                dropped[j0:j1] = ((sims >= _SEMD_TAU) & lower).any(axis=0)
+        # k17's kernel: a member's witness is any STRICTLY-lower-id
+        # member at sim >= tau; its sub-blocks bound the sims transient
+        # to the shared cell budget (cluster sizes are the one dimension
+        # SemDeDup does not cap per-row)
+        kept = [d is None for d in _dup_of_block(ids, nm, ids, nm, _SEMD_TAU)]
         return pd.DataFrame(
             {
                 "vec_id": ids,
                 "cluster": pdf["cluster"].iloc[0],
-                "kept": (~dropped).astype(np.int32),
+                "kept": np.array(kept, dtype=np.int32),
             }
         )
 

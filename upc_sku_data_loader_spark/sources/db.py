@@ -177,9 +177,9 @@ def jdbc_source(
     num_partitions: int = 8,
 ) -> DataFrame:
     """A5: partitioned parallel JDBC read.  Locally exercised against
-    the embedded Derby driver on Spark's own classpath (see
-    plans/sources_sinks.py:a6_jdbc_sink_append); on a cluster, point
-    the URL + driver at MySQL/Postgres."""
+    the embedded Derby driver on Spark's own classpath by a6's
+    read-back and a25's striped read (plans/sources_sinks.py); on a
+    cluster, point the URL + driver at MySQL/Postgres."""
     reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
     for k, v in properties.items():
         reader = reader.option(k, v)

@@ -257,6 +257,13 @@ _PUBLIC_ENTRY_POINTS = {
 }
 
 
+def _is_query(fn: ast.FunctionDef | ast.AsyncFunctionDef) -> bool:
+    decorators = [
+        d.func if isinstance(d, ast.Call) else d for d in fn.decorator_list
+    ]
+    return any(isinstance(d, ast.Name) and d.id == "query" for d in decorators)
+
+
 def test_engine_has_no_dead_twins():
     """Every top-level function in the engine package that is not a
     ``@query`` is referenced by engine code (a call, a name or an
@@ -274,13 +281,7 @@ def test_engine_has_no_dead_twins():
                 continue
             for n in ast.walk(fn):
                 owner[id(n)] = fn.name
-            decorators = [
-                d.func if isinstance(d, ast.Call) else d
-                for d in fn.decorator_list
-            ]
-            if not any(
-                isinstance(d, ast.Name) and d.id == "query" for d in decorators
-            ):
+            if not _is_query(fn):
                 defined[fn.name] = str(path.relative_to(REPO))
         for n in ast.walk(tree):
             if isinstance(n, ast.Name):
@@ -300,3 +301,92 @@ def test_engine_has_no_dead_twins():
         if name not in used and name not in _PUBLIC_ENTRY_POINTS
     }
     assert not dead, f"functions no engine code references: {dead}"
+
+
+#: Defaulted engine parameters that no call in the repo sets, each with
+#: the reason it stays: the place the engine is deployed sets them, and
+#: the default is what the fixtures and the registry run under.
+_DEPLOYMENT_OPTIONS = {
+    ("get_spark", "master"): "the cluster URL; None runs local on the host's cores",
+    ("http_transport", "headers"): "request headers a real endpoint may require",
+    ("http_transport", "timeout_s"): "a real endpoint's response-time budget",
+    ("load_upcs", "base_url"): "the product API's URL",
+    ("load_upcs", "auth_token"): "the product API's credential",
+    ("load_upcs", "dialect"): "the target database's SQL dialect",
+    ("load_upcs", "max_connections"): "the target database's connection budget",
+    ("fetch_products", "rate_limit_per_s"): "the product API's request budget",
+    ("fetch_products", "rate_burst"): "the product API's request budget",
+    ("rnd", "n"): "Column twin of rnd_sql, whose callers set n; the twins match",
+}
+
+
+def test_engine_options_are_set():
+    """Every defaulted parameter of a top-level, non-``@query`` engine
+    function is passed by some call in the repo's Python (engine, tools,
+    perfbench, tests): by keyword, by position, or through
+    ``functools.partial``; a ``*args``/``**kwargs`` call counts as
+    passing every parameter.  Engine function names are unique, so a
+    call matches by name.  An option nothing sets has one value, and
+    that value belongs in the code, not in the signature, unless it is
+    a listed deployment option."""
+    options: dict[tuple[str, str], tuple[str, int | None]] = {}
+    functions: list[str] = []
+    pkg = REPO / "upc_sku_data_loader_spark"
+    for path in sorted(pkg.rglob("*.py")):
+        for fn in ast.parse(path.read_text()).body:
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)) or _is_query(fn):
+                continue
+            functions.append(fn.name)
+            where = str(path.relative_to(REPO))
+            positional = fn.args.posonlyargs + fn.args.args
+            first = len(positional) - len(fn.args.defaults)
+            for i, arg in enumerate(positional[first:], first):
+                options[(fn.name, arg.arg)] = (where, i)
+            for arg, default in zip(fn.args.kwonlyargs, fn.args.kw_defaults):
+                if default is not None:
+                    options[(fn.name, arg.arg)] = (where, None)
+    assert len(functions) == len(set(functions)), "calls match by name"
+    assert set(_DEPLOYMENT_OPTIONS) <= set(options), (
+        set(_DEPLOYMENT_OPTIONS) - set(options)
+    )
+
+    def callee(node: ast.expr) -> str | None:
+        if isinstance(node, ast.Name):
+            return node.id
+        if isinstance(node, ast.Attribute):
+            return node.attr
+        return None
+
+    names = {name for name, _ in options}
+    passed: set[tuple[str, str]] = set()
+    for path in sorted(REPO.rglob("*.py")):
+        if any(part.startswith(".") for part in path.relative_to(REPO).parts):
+            continue
+        for call in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(call, ast.Call):
+                continue
+            name, args = callee(call.func), call.args
+            if name == "partial" and args:
+                name, args = callee(args[0]), args[1:]
+            if name not in names:
+                continue
+            spread = any(isinstance(a, ast.Starred) for a in args) or any(
+                k.arg is None for k in call.keywords
+            )
+            keywords = {k.arg for k in call.keywords}
+            for (fn, param), (_, index) in options.items():
+                if fn == name and (
+                    spread
+                    or param in keywords
+                    or (index is not None and index < len(args))
+                ):
+                    passed.add((fn, param))
+    unset = {
+        f"{fn}({param})": where
+        for (fn, param), (where, _) in sorted(options.items())
+        if (fn, param) not in passed and (fn, param) not in _DEPLOYMENT_OPTIONS
+    }
+    assert not unset, (
+        f"{len(unset)} of the engine's {len(options)} defaulted parameters "
+        f"are set by no call in the repo: {unset}"
+    )

@@ -9,9 +9,17 @@ import pickle
 import sqlite3
 from decimal import Decimal
 
+import pyarrow as pa
 import pytest
 
-from upc_sku_data_loader_spark.sources.db import db_sink_upsert, db_source, upsert_sql
+from upc_sku_data_loader_spark.sources.db import (
+    BATCH_SIZE,
+    _py_values,
+    _writer,
+    db_sink_upsert,
+    db_source,
+    upsert_sql,
+)
 
 
 def _table_state(path: str) -> list[tuple]:
@@ -167,3 +175,122 @@ def test_db_source_matches_the_list_path(spark, tmp_path, ddl, rows, schema):
     assert got.schema == want.schema
     key = lambda r: tuple((v is None, v) for v in r)  # noqa: E731 — NULL-safe sort
     assert sorted(got.collect(), key=key) == sorted(want.collect(), key=key)
+
+
+def test_writer_pages_into_one_transaction_per_partition(tmp_path):
+    """Many small Arrow batches per partition: every ``executemany`` gets
+    at most ``BATCH_SIZE`` rows and runs while the batches still stream
+    in (the writer holds at most ``BATCH_SIZE`` pending rows, plus the
+    batch that crossed the line), each non-empty partition commits
+    exactly once after its last ``executemany``, an empty partition
+    opens no connection, and the table equals one plain upsert of every
+    row."""
+    db, ref_db = str(tmp_path / "t.sqlite"), str(tmp_path / "ref.sqlite")
+    for path in (db, ref_db):
+        con = sqlite3.connect(path)
+        con.execute("CREATE TABLE t (k INTEGER PRIMARY KEY, v TEXT)")
+        con.commit()
+        con.close()
+    sql = upsert_sql("sqlite", "t", ["k", "v"], ["k"])
+    calls: list[tuple[int, str, int]] = []  # (connection, call, rows)
+    streamed = {"rows": 0, "written": 0}
+
+    class Cursor:
+        def __init__(self, cur, conn_id):
+            self._cur, self._id = cur, conn_id
+
+        def executemany(self, sql, rows):
+            rows = list(rows)
+            pending = streamed["rows"] - streamed["written"]
+            assert pending < BATCH_SIZE + 7, pending
+            streamed["written"] += len(rows)
+            calls.append((self._id, "executemany", len(rows)))
+            return self._cur.executemany(sql, rows)
+
+    class Conn:
+        opened = 0
+
+        def __init__(self):
+            Conn.opened += 1
+            self._id = Conn.opened
+            self._con = sqlite3.connect(db)
+
+        def cursor(self):
+            return Cursor(self._con.cursor(), self._id)
+
+        def commit(self):
+            calls.append((self._id, "commit", 0))
+            self._con.commit()
+
+        def close(self):
+            self._con.close()
+
+    def batches(keys):
+        # 7-row batches, so a BATCH_SIZE chunk spans many of them
+        for i in range(0, len(keys), 7):
+            ks = keys[i : i + 7]
+            streamed["rows"] += len(ks)
+            yield pa.RecordBatch.from_pydict(
+                {"k": ks, "v": [f"v{k}" if k % 5 else None for k in ks]}
+            )
+
+    empty = pa.RecordBatch.from_pydict(
+        {"k": pa.array([], pa.int64()), "v": pa.array([], pa.string())}
+    )
+    partitions = [
+        list(range(2 * BATCH_SIZE + 345)),
+        [],
+        list(range(BATCH_SIZE - 3, BATCH_SIZE + 40)),  # overlaps: an update
+        list(range(10_000, 10_000 + BATCH_SIZE)),
+    ]
+    write = _writer(Conn, sql)
+    for keys in partitions:
+        streamed.update(rows=0, written=0)
+        assert list(write(batches(keys))) == []
+    assert list(write(iter([empty, empty]))) == []
+    assert Conn.opened == 3  # neither empty partition opened one
+
+    assert all(n <= BATCH_SIZE for _, call, n in calls if call == "executemany")
+    for conn_id, keys in zip((1, 2, 3), [p for p in partitions if p]):
+        mine = [(call, n) for c, call, n in calls if c == conn_id]
+        assert mine[-1] == ("commit", 0)
+        assert [call for call, _ in mine].count("commit") == 1
+        assert sum(n for _, n in mine) == len(keys)
+    assert [n for c, call, n in calls if c == 1 and call == "executemany"] == [
+        BATCH_SIZE, BATCH_SIZE, 345
+    ]
+
+    ref = sqlite3.connect(ref_db)
+    for keys in partitions:
+        ref.executemany(sql, [(k, f"v{k}" if k % 5 else None) for k in keys])
+    ref.commit()
+    ref.close()
+    assert _table_state(db) == _table_state(ref_db)
+
+
+@pytest.mark.parametrize(
+    "arr",
+    [
+        pa.array(["a", None, "ü", ""]),
+        pa.array(["a", None], pa.large_string()),
+        pa.array([2**63 - 1, -(2**63), 0]),
+        pa.array([1, None, 3]),
+        pa.array([1, 2], pa.int32()),
+        pa.array([2**64 - 1], pa.uint64()),
+        pa.array([-0.0, float("nan"), float("inf"), 1e-308]),
+        pa.array([1.5, None]),
+        pa.array([0.1], pa.float32()),
+        pa.array([True, False]),
+        pa.array([True, None]),
+        pa.array([Decimal("1.25"), None], pa.decimal128(10, 2)),
+        pa.array([dt.date(1969, 12, 31), None]),
+    ],
+    ids=lambda a: f"{a.type}-{a.null_count}",
+)
+def test_py_values_match_to_pylist(arr):
+    """The writer's column conversion binds exactly what ``to_pylist``
+    gives (same values and Python types; NaN where NaN), whichever path
+    the column takes."""
+    got, want = _py_values(arr), arr.to_pylist()
+    assert [type(v) for v in got] == [type(v) for v in want]
+    assert [repr(v) for v in got] == [repr(v) for v in want]

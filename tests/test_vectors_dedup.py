@@ -189,6 +189,29 @@ def test_dedup_clusters_driver_and_distributed_paths_agree(spark, monkeypatch):
     assert fast == slow and len(fast) == 10
 
 
+def test_dedup_clusters_raises_when_labels_still_move(spark, monkeypatch):
+    """The distributed loop refuses to return labels that have not
+    converged: with the round cap at 1, a chain whose labels one round
+    cannot settle raises instead of emitting two keepers for one
+    component.  The default cap settles the same chain."""
+    from upc_sku_data_loader_spark.operators import dedup as D
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 9)], "a long, b long"
+    )  # 1-2-...-9: one round moves labels, and more are left to move
+    monkeypatch.setattr(D, "_DRIVER_MAX_EDGES", 0)
+    settled = {
+        r["doc_id"]: r["cluster_keeper"]
+        for r in D.dedup_clusters(pairs, Held()).collect()
+    }
+    assert settled == {i: 1 for i in range(1, 10)}
+    monkeypatch.setattr(D, "_CC_MAX_ITERS", 1)
+    held = Held()
+    with pytest.raises(RuntimeError, match="did not converge within 1 rounds"):
+        D.dedup_clusters(pairs, held)
+    held._free_all()  # what a @holding query does when its build raises
+
+
 _DEDUP = "upc_sku_data_loader_spark.operators.dedup"
 _SIMILARITY = "upc_sku_data_loader_spark.operators.similarity"
 

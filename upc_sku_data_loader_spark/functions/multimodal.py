@@ -38,11 +38,11 @@ def decode_image(payload: bytes) -> object:
     )
 
 
-def with_binary_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Fixture adapter: treat each document's UTF-8 bytes as an opaque
-    media payload with typed metadata (the schema a real image/audio
-    table would carry)."""
-    payload = F.encode(F.col(text_col), "UTF-8")
+def with_binary_payload(docs: DataFrame) -> DataFrame:
+    """Fixture adapter: treat each document's ``text`` as UTF-8 bytes, an
+    opaque media payload with typed metadata (the schema a real
+    image/audio table would carry)."""
+    payload = F.encode(F.col("text"), "UTF-8")
     return docs.select(
         "doc_id",
         payload.alias("payload"),

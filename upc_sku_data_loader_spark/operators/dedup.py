@@ -505,6 +505,10 @@ def _pair_intersect_counts(
 #: of int64 Arrow buffers — well inside maxResultSize); above it the
 #: distributed loop runs.
 _DRIVER_MAX_EDGES = 2_000_000
+#: Round cap of dedup_clusters' distributed loop.  Pointer doubling halves
+#: chain depth each round, so 15 rounds cover components of diameter up
+#: to 2^15; a graph still moving after that raises.
+_CC_MAX_ITERS = 15
 
 
 def _union_find_clusters(spark, edge_pairs) -> DataFrame:
@@ -517,9 +521,9 @@ def _union_find_clusters(spark, edge_pairs) -> DataFrame:
     ``edge_pairs`` is an iterable of plain (u, v) int pairs — the
     caller collects via Arrow, NOT ``collect()``: 2M pyspark Row
     objects cost hundreds of driver MB where two int64 numpy columns
-    cost 32 MB (r10 ADVICE).  The result returns through
-    ``createDataFrame(pandas)`` for the same reason (Arrow path;
-    session.py enables spark.sql.execution.arrow.pyspark.enabled)."""
+    cost 32 MB.  The result returns through ``createDataFrame(pandas)``
+    for the same reason (Arrow path; session.py enables
+    spark.sql.execution.arrow.pyspark.enabled)."""
     import pandas as pd
 
     parent: dict[int, int] = {}
@@ -559,7 +563,7 @@ def _union_find_clusters(spark, edge_pairs) -> DataFrame:
     )
 
 
-def dedup_clusters(pairs: DataFrame, held: Held, max_iters: int = 15) -> DataFrame:
+def dedup_clusters(pairs: DataFrame, held: Held) -> DataFrame:
     """Resolve near-dup pairs into connected components: every member of
     a component maps to the component's lowest doc id (the canonical
     keeper).  This is the step after LSH candidate verification — pair
@@ -574,8 +578,9 @@ def dedup_clusters(pairs: DataFrame, held: Held, max_iters: int = 15) -> DataFra
     pointer-jump label[v] ← min(label[v], label[label[v]]) — the jump
     halves chain depth, so convergence is O(log diameter) rounds, not
     O(diameter).  Early-exits when a round changes nothing and raises
-    RuntimeError if max_iters rounds still left labels moving (silent
-    non-convergence would emit two different keepers for one component).
+    RuntimeError if ``_CC_MAX_ITERS`` rounds still left labels moving
+    (silent non-convergence would emit two different keepers for one
+    component).
 
     Iterative-plan discipline: each round's labels are checkpointed
     through ``held``.  persist() alone caches data but the logical plan
@@ -585,12 +590,12 @@ def dedup_clusters(pairs: DataFrame, held: Held, max_iters: int = 15) -> DataFra
     round is freed as soon as the next one is materialized; the final
     labels stay held, because the returned plan reads them.
 
-    Small-graph fast path (r10, guide §1.2: per-round overhead is the
-    wall, not the data): near-dup pair graphs are true-dup-density
-    bound — at sf0.1 the verified pipeline emits 256 pairs / 477
-    nodes, yet the distributed loop costs 2-3 s in pure per-round
-    job-launch + planning latency (2 joins + an eager checkpoint + a
-    convergence count per round).  When the SYMMETRIZED edge count
+    Small-graph fast path (per-round overhead is the wall, not the
+    data): near-dup pair graphs are true-dup-density bound — at sf0.1
+    the verified pipeline emits 256 pairs / 477 nodes, yet the
+    distributed loop costs 2-3 s in pure per-round job-launch +
+    planning latency (2 joins + an eager checkpoint + a convergence
+    count per round).  When the SYMMETRIZED edge count
     (known for free — the eager checkpoint already materialized it) is
     within ``_DRIVER_MAX_EDGES``, resolve the components with a
     driver-side union-find instead: O(E α(E)) over ≤ a few-MB of longs
@@ -606,9 +611,8 @@ def dedup_clusters(pairs: DataFrame, held: Held, max_iters: int = 15) -> DataFra
     if edges.count() <= _DRIVER_MAX_EDGES:
         # gated: ≤ _DRIVER_MAX_EDGES (u, v) longs.  toArrow() keeps
         # the transfer columnar — 2M edges ≈ 32 MB of int64 buffers,
-        # where collect()'s Row objects cost hundreds of MB (r10
-        # ADVICE).  tolist() yields plain Python ints for the dict-
-        # based union-find.
+        # where collect()'s Row objects cost hundreds of MB.  tolist()
+        # yields plain Python ints for the dict-based union-find.
         tbl = edges.toArrow()
         held.free(edges)
         return _union_find_clusters(
@@ -624,7 +628,7 @@ def dedup_clusters(pairs: DataFrame, held: Held, max_iters: int = 15) -> DataFra
         .withColumn("label", F.col("doc_id"))
     )
     converged = False
-    for _ in range(max_iters):
+    for _ in range(_CC_MAX_ITERS):
         neigh = (
             edges.join(labels, edges.v == labels.doc_id)
             .groupBy("u")
@@ -662,21 +666,20 @@ def dedup_clusters(pairs: DataFrame, held: Held, max_iters: int = 15) -> DataFra
     held.free(edges)
     if not converged:
         raise RuntimeError(
-            f"dedup_clusters did not converge within {max_iters} rounds "
-            "(component diameter > 2^max_iters is pathological input)"
+            f"dedup_clusters did not converge within {_CC_MAX_ITERS} rounds "
+            f"(component diameter > 2^{_CC_MAX_ITERS} is pathological input)"
         )
     return labels.select("doc_id", F.col("label").alias("cluster_keeper"))
 
 
-def simhash(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n_bits: int = 63
-) -> DataFrame:
-    """63-bit SimHash from per-token xxhash64 bit votes (sign bit left
-    clear so the result fits a BIGINT).  Engine-specific hash → rows-only
-    for the oracle; Hamming-distance properties are pytest-verified."""
+def simhash(docs: DataFrame) -> DataFrame:
+    """63-bit SimHash of ``docs``' ``text`` per ``doc_id``, from per-token
+    xxhash64 bit votes (sign bit left clear so the result fits a BIGINT).
+    Engine-specific hash → rows-only for the oracle; Hamming-distance
+    properties are pytest-verified."""
+    n_bits = 63
     tok = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.col(text_col), " ")).alias("tok"),
+        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok")
     ).withColumn("h", F.xxhash64("tok"))
     votes = tok.groupBy("doc_id").agg(
         *[

@@ -69,11 +69,10 @@ def _load_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     The JVM-side HOF filter here is for paths whose downstream work runs
     JVM-side (ann_ivf's Lloyd aggregate / assignment UDFs).  The numpy
     fast paths load RAW via :func:`_raw_vecs` and drop invalid rows
-    inside the Arrow kernel (:func:`_finite_rows`) instead — the round-9
-    per-load HOF re-scan (4 predicates x d elements x n rows, three
-    times per broadcast-KNN plan) cost the vector family ~35 % at bench
-    sf0.1, while `np.isfinite(mat).all(axis=1)` is free next to the
-    matmul."""
+    inside the Arrow kernel (:func:`_finite_rows`) instead: a per-load
+    HOF re-scan (4 predicates x d elements x n rows, three times per
+    broadcast-KNN plan) cost the vector family ~35 % at bench sf0.1,
+    while `np.isfinite(mat).all(axis=1)` is free next to the matmul."""
     return (
         load(spark, sf_dir, "embeddings")
         .filter(finite_vec("embedding"))
@@ -189,8 +188,8 @@ def _topk_block(
     global lexsort orders every kept candidate by (row, -sim, id).  A row
     falls back to an exact full-row sort only when its k-th similarity
     still ties the margin boundary (so the tie group could extend past
-    the kept set).  Replaces a per-row Python loop that cost ~10 ms/row —
-    504x super-linear at the 10x replica (round-6 scale sweep)."""
+    the kept set).  Vectorized because a per-row Python loop costs
+    ~10 ms/row, 504x super-linear at the 10x replica."""
     m, n = len(chunk_ids), len(all_ids)
     empty = (
         np.empty(0, np.int64), np.empty(0, np.int64),
@@ -298,10 +297,10 @@ def _fan_out(queries: DataFrame, est_rows: int | None = None) -> DataFrame:
 
     The kernel is embarrassingly parallel in query rows, but a small
     parquet input arrives in 1-2 partitions, so 20k queries x 20k refs
-    ran on 2 of 32 cores (round-6 scale sweep: 83 s wall where ~6 s is
-    available).  One tiny shuffle of the query rows only — the reference
-    matrix travels by broadcast; per-row results are independent of the
-    chunking, so values are unchanged.  ``est_rows`` (an UPPER bound —
+    ran on 2 of 32 cores (83 s wall where ~6 s is available).  One tiny
+    shuffle of the query rows only — the reference matrix travels by
+    broadcast; per-row results are independent of the chunking, so
+    values are unchanged.  ``est_rows`` (an UPPER bound —
     callers pass the unfiltered footer count) sizes the fan-out:
     ceil(est/_FAN_OUT_MIN_ROWS) partitions, capped at defaultParallelism,
     so bench-scale inputs stop paying a 32-task floor while any input
@@ -385,16 +384,19 @@ def _global_topk(partial: DataFrame, k: int) -> DataFrame:
     )
 
 
+# Blocks per side of the blocked tier's grid: _GRID_BLOCKS² cogroup cells.
+_GRID_BLOCKS = 8
+
+
 def _grid_cogroup(
     spark: SparkSession,
     queries: DataFrame,
     ref: DataFrame,
     kernel,
     out_schema: str,
-    n_blocks: int,
-    n_query_blocks: int,
 ) -> DataFrame:
-    """Blocked cross join as a QB×RB grid of cogroup cells.
+    """Blocked cross join as a QB×RB grid of cogroup cells
+    (QB = RB = ``_GRID_BLOCKS``).
 
     BOTH sides are blocked: queries hash into QB blocks (replicated
     across the RB reference blocks), references into RB blocks
@@ -403,13 +405,13 @@ def _grid_cogroup(
     (RB·|Q| + QB·|R| rows shuffled once, keyed).
     """
     r_rep = ref.withColumn(
-        "rb", F.pmod(F.hash("vec_id"), F.lit(n_blocks)).cast("int")
+        "rb", F.pmod(F.hash("vec_id"), F.lit(_GRID_BLOCKS)).cast("int")
     ).crossJoin(
-        spark.range(n_query_blocks).select(F.col("id").cast("int").alias("qb"))
+        spark.range(_GRID_BLOCKS).select(F.col("id").cast("int").alias("qb"))
     )
     q_rep = queries.withColumn(
-        "qb", F.pmod(F.hash("vec_id"), F.lit(n_query_blocks)).cast("int")
-    ).crossJoin(spark.range(n_blocks).select(F.col("id").cast("int").alias("rb")))
+        "qb", F.pmod(F.hash("vec_id"), F.lit(_GRID_BLOCKS)).cast("int")
+    ).crossJoin(spark.range(_GRID_BLOCKS).select(F.col("id").cast("int").alias("rb")))
     return (
         q_rep.groupby("qb", "rb")
         .cogroup(r_rep.groupby("qb", "rb"))
@@ -418,12 +420,7 @@ def _grid_cogroup(
 
 
 def _knn_blocked(
-    spark: SparkSession,
-    sf_dir: str,
-    queries: DataFrame,
-    k: int,
-    n_blocks: int = 8,
-    n_query_blocks: int = 8,
+    spark: SparkSession, sf_dir: str, queries: DataFrame, k: int
 ) -> DataFrame:
     """Exact KNN without any driver-side collect: grid-blocked cogroup
     matmul top-k, then a global window re-rank."""
@@ -438,8 +435,6 @@ def _knn_blocked(
         ref,
         per_cell,
         "q_vec_id bigint, neighbor_id bigint, sim double",
-        n_blocks,
-        n_query_blocks,
     )
     # disjoint reference blocks → partials never overlap; RB·k rows per
     # query reduce to the global top-k with the same deterministic key
@@ -452,7 +447,6 @@ def knn_join(
     k: int = 3,
     query_filter: str | None = None,
     strategy: str = "auto",
-    n_blocks: int = 8,
 ) -> DataFrame:
     """K nearest neighbors for each (optionally filtered) query vector.
     Non-finite/NULL vectors drop inside the Arrow kernels (query AND
@@ -467,7 +461,7 @@ def knn_join(
     queries = _raw_vecs(spark, sf_dir)
     if query_filter:
         queries = queries.filter(query_filter)
-    return _knn_blocked(spark, sf_dir, queries, k, n_blocks)
+    return _knn_blocked(spark, sf_dir, queries, k)
 
 
 def topk_pairs(
@@ -486,10 +480,10 @@ def topk_pairs(
     only the copy emitted by the smaller id (q < neighbor) therefore
     retains a superset of the global top-k with zero duplicates, and
     the final TakeOrdered under the same total order returns identical
-    rows.  This replaces the previous least/greatest + dropDuplicates,
-    whose first()-aggregate forced an extra Exchange + HashAggregate
-    stage between the kernel and the top-k (r10 plan diff: 2 Exchanges
-    → 1 on the broadcast path)."""
+    rows.  A least/greatest + dropDuplicates would instead force an
+    extra Exchange + HashAggregate stage (its first()-aggregate) between
+    the kernel and the top-k: 2 Exchanges where the broadcast path needs
+    1."""
     per_row = knn_join(spark, sf_dir, k=k, strategy=strategy)
     pairs = per_row.filter(F.col("q_vec_id") < F.col("neighbor_id")).select(
         F.col("q_vec_id").alias("a"),
@@ -536,7 +530,6 @@ def dedup_embedding(
     sf_dir: str,
     tau: float = 0.8,
     strategy: str = "auto",
-    n_blocks: int = 8,
 ) -> DataFrame:
     """Embedding-cosine near-dup dedup: each vector is a duplicate of the
     LOWEST-id vector whose cosine similarity (rounded to 6 dp) ≥ tau;
@@ -576,8 +569,7 @@ def dedup_embedding(
         )
 
     partial = _grid_cogroup(
-        spark, vecs, ref, per_cell, "vec_id bigint, dup_of bigint",
-        n_blocks, n_blocks,
+        spark, vecs, ref, per_cell, "vec_id bigint, dup_of bigint"
     )
     # every query appears once per reference block (possibly with NULL
     # dup_of), so min() over blocks preserves "no earlier near-neighbor

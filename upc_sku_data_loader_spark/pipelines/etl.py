@@ -28,12 +28,16 @@ task cannot count twice.
 
 Scale: the only shuffle is keys-only; the upsert fan-in is capped by
 ``max_connections`` and a partition with no delta opens no connection;
-each partition upserts in one transaction, so a single-writer target
-(sqlite) hands its write lock over once per partition, not once per
-``BATCH_SIZE`` rows, and a retried task rewrites its whole partition;
-the fetch makes at most ``ceil(delta / page_size) + n_parts - 1``
-requests.  A kernel holds its partition's keys and fetched rows in
-memory.  Nothing collects to the driver except ``n_parts`` count rows.
+each partition upserts in one transaction (``sources.db._writer``), so
+a single-writer target (sqlite) hands its write lock over once per
+partition and a retried task rewrites its whole partition; the fetch
+makes at most ``ceil(delta / page_size) + n_parts - 1`` requests.  A
+kernel holds its partition's keys and fetched pages (Arrow) in memory.
+It fetches every page before its first write, because that target holds
+its lock from the first write to the commit: writing while fetching put
+each partition's fetch behind the others' (``upc_load_cold`` on a
+4-core host: ``etl.load_s`` 1.34 → 1.76 s).  Nothing collects to the
+driver except ``n_parts`` count rows.
 """
 
 from __future__ import annotations
@@ -57,7 +61,6 @@ def load_upcs(
     existing_keys: DataFrame,
     conn_factory: ConnFactory,
     table: str = "products",
-    upc_col: str = "upc_raw",
     page_size: int = 100,
     transport: Transport = fake_transport,
     base_url: str = "https://api.example.com/products",
@@ -65,9 +68,9 @@ def load_upcs(
     dialect: str = "sqlite",
     max_connections: int = 4,
 ) -> dict[str, int]:
-    """Run the full load; returns audit counts (the reference's load
-    accounting — SURVEY §3.2 step 5)."""
-    upc = upc_normalize(F.col(upc_col), width=13)
+    """Run the full load of ``worklist``'s ``upc_raw`` column; returns
+    audit counts (the reference's load accounting — SURVEY §3.2 step 5)."""
+    upc = upc_normalize(F.col("upc_raw"), width=13)
     raw = worklist.select(
         upc.alias("upc"),
         F.coalesce(F.length(upc) == 13, F.lit(False)).alias("valid"),
@@ -78,7 +81,7 @@ def load_upcs(
     keyed = raw.unionByName(target).repartition(n_parts, "upc")
     fetch = _fetcher(base_url, transport, auth_token)
     cols = DataType.fromDDL(PRODUCT_SCHEMA).fieldNames()
-    write = _writer(conn_factory, upsert_sql(dialect, table, cols, ["upc"]), batch_size=None)
+    write = _writer(conn_factory, upsert_sql(dialect, table, cols, ["upc"]))
 
     def load(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         rows = 0
@@ -91,7 +94,9 @@ def load_upcs(
         keys = pc.unique(pa.chunked_array(valid, pa.string()))
         seen = pc.is_in(keys, value_set=pa.chunked_array(held, pa.string()).combine_chunks())
         delta = keys.filter(pc.invert(seen))
-        write(fetch(_sorted_pages([delta], page_size)))  # eager: upserts every page
+        # every page before the first write (see the module's scale note)
+        pages = list(fetch(_sorted_pages([delta], page_size)))
+        write(pages)  # eager: upserts every page
         yield pa.RecordBatch.from_pydict(
             {"rows": [rows], "keys": [len(keys)], "seen": [seen.true_count]}
         )

@@ -27,7 +27,7 @@ from ..catalog import load, read_schema
 from ..functions.exprs import fsum, fsum_sql
 from ..functions.upc import gtin_check_digit_sql
 from ..registry import query
-from ..sources.db import db_sink_upsert, db_source, jdbc_sink_append, jdbc_source
+from ..sources.db import db_sink_upsert, db_source, jdbc_sink, jdbc_source
 from ..sources.files import csv_source, json_source, parquet_sink
 from ..sources.rest_api import fetch_products
 from ..streaming.sources import read_events_stream, run_available_now
@@ -253,10 +253,11 @@ def a5_a7_db_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def a6_jdbc_sink_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6 `df.write.jdbc` exercised for real: Spark ships Apache Derby
     on its classpath (the Hive-metastore default), so the embedded
-    Derby driver gives a genuine JDBC URL with zero extra jars.  First
-    write is mode("overwrite") (drops + recreates the table — makes the
-    query idempotent per run), second is mode("append") — the sink
-    under test — so the read-back table holds exactly 2× the source and
+    Derby driver gives a genuine JDBC URL with zero extra jars.  Both
+    writes go through ``sources.db.jdbc_sink``: the first in mode
+    "overwrite" (drops + recreates the table — makes the query
+    idempotent per run), the second in mode "append" — the mode under
+    test — so the read-back table holds exactly 2× the source and
     proves the append accumulated rather than replaced.  Read-back goes
     through ``sources.db.jdbc_source`` (A5's Spark-native path).  On a
     real cluster the same code targets MySQL/Postgres by swapping URL +
@@ -270,10 +271,8 @@ def a6_jdbc_sink_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Derby embedded = single JVM writer; coalesce keeps connection
     # fan-in tiny here (cluster targets raise it for parallel load).
     src = src.coalesce(2)
-    src.write.mode("overwrite").format("jdbc").option("url", url).option(
-        "dbtable", "SUPP_LOAD"
-    ).options(**props).save()
-    jdbc_sink_append(src, url, "SUPP_LOAD", props)
+    jdbc_sink(src, url, "SUPP_LOAD", props, "overwrite")
+    jdbc_sink(src, url, "SUPP_LOAD", props, "append")
     back = jdbc_source(spark, url, "SUPP_LOAD", props)
     return back.select(
         F.col("s_suppkey").cast("long").alias("s_suppkey"),
@@ -2207,9 +2206,7 @@ def a25_jdbc_partitioned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         # rows: 8 conns 4.7 s vs 2 conns 2.1 s) — so one writer per
         # ~200k rows, clamped to [2, 8].
         n_writers = max(2, min(8, n_src // 200_000 + 1))
-        src.coalesce(n_writers).write.mode("overwrite").format("jdbc").option(
-            "url", url
-        ).option("dbtable", "ORDERS_LOAD").options(**props).save()
+        jdbc_sink(src.coalesce(n_writers), url, "ORDERS_LOAD", props, "overwrite")
     bounds = src.agg(
         F.min("o_orderkey").alias("lo"), F.max("o_orderkey").alias("hi")
     ).first()

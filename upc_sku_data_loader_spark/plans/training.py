@@ -1017,7 +1017,7 @@ def k43_graph_pagerank(spark: SparkSession, sf_dir: str, held: Held) -> DataFram
     out-degree ≥ 1 by construction.  Per-iteration arithmetic is
     integer, so any reduction order is bit-identical.
 
-    r11 (guide §1.2, the dedup_clusters driver-kernel class): the
+    Driver kernel (the same size gate as dedup_clusters): the
     (c, s) pair table is localCheckpoint-ed once — it is read 7+ times
     across the count and the 3 unrolled iterations, and checkpointing
     truncates the deeply nested iteration plan (§3.3: planning time on

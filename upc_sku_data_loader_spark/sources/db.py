@@ -12,11 +12,13 @@ risk), so:
 
 - the **upsert writer** is dialect-pluggable and fully exercised against
   sqlite (stdlib) — same code path a mysql-connector would take;
-- the **jdbc_* wrappers** ship the ``spark.read/write.jdbc`` call
-  shape for real clusters but cannot run here (flagged, not hidden).
+- the **jdbc_* wrappers** (:func:`jdbc_source`, :func:`jdbc_sink`) run
+  Spark's own JDBC reader and writer against the embedded Derby driver
+  on Spark's classpath; on a cluster they point at MySQL/Postgres.
 
-Scale notes: one connection per partition (NOT per row); batches of
-``batch_size`` via ``executemany``; idempotent by primary key so Spark
+Scale notes: one connection and one transaction per partition (NOT per
+row), ``BATCH_SIZE`` rows per ``executemany``, so the writer holds at
+most ``BATCH_SIZE`` pending rows; idempotent by primary key so Spark
 task retries are safe (at-least-once execution → exactly-once state).
 Partition count bounds DB connection fan-in — ``coalesce`` before
 writing to stay under the server's connection budget.
@@ -24,7 +26,7 @@ writing to stay under the server's connection budget.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 from typing import Any
 
 import pyarrow as pa
@@ -36,7 +38,7 @@ from pyspark.sql.types import DataType
 #: connection_factory() -> DB-API connection (e.g. functools.partial(sqlite3.connect, path))
 ConnFactory = Callable[[], Any]
 
-#: rows per ``executemany`` + commit
+#: rows per ``executemany`` (a partition commits once, after its last one)
 BATCH_SIZE = 1000
 
 
@@ -70,51 +72,59 @@ def upsert_sql(dialect: str, table: str, cols: list[str], key_cols: list[str]) -
     raise ValueError(f"unknown dialect {dialect!r}")
 
 
+def _py_values(col: pa.Array) -> list:
+    """The column's values as a collected ``Row`` holds them: None for
+    NULL, and zone-aware timestamps as naive local wall time."""
+    t = col.type
+    if pa.types.is_string(t) or pa.types.is_large_string(t) or (
+        col.null_count == 0
+        and (pa.types.is_integer(t) or pa.types.is_floating(t) or pa.types.is_boolean(t))
+    ):
+        # the same values (a string column's NULLs stay None) ~10x faster
+        # than to_pylist; it runs inside the writer's open transaction
+        return col.to_numpy(zero_copy_only=False).tolist()
+    values = col.to_pylist()
+    if pa.types.is_timestamp(t) and t.tz is not None:
+        values = [v if v is None else v.astimezone().replace(tzinfo=None) for v in values]
+    return values
+
+
 def _py_rows(batch: pa.RecordBatch) -> list[tuple]:
-    """The batch's rows as the Python values a collected ``Row`` holds:
-    None for NULL, and zone-aware timestamps as naive local wall time."""
-    cols = []
-    for col in batch.columns:
-        values = col.to_pylist()
-        if pa.types.is_timestamp(col.type) and col.type.tz is not None:
-            values = [v if v is None else v.astimezone().replace(tzinfo=None) for v in values]
-        cols.append(values)
-    return list(zip(*cols))
+    """The batch's rows as the Python values a collected ``Row`` holds."""
+    return list(zip(*map(_py_values, batch.columns)))
 
 
-def _row_chunks(
-    batches: Iterator[pa.RecordBatch], size: int | None
-) -> Iterator[list[tuple]]:
-    """The batches' rows (as :func:`_py_rows`) in lists of ``size`` (all
-    in one list when ``size`` is None); the last may be shorter, and no
-    list is empty."""
+def _row_chunks(batches: Iterable[pa.RecordBatch]) -> Iterator[list[tuple]]:
+    """The batches' rows (as :func:`_py_rows`) in lists of ``BATCH_SIZE``;
+    the last may be shorter, and no list is empty."""
     pending: list[tuple] = []
     for batch in batches:
         pending.extend(_py_rows(batch))
-        while size is not None and len(pending) >= size:
-            yield pending[:size]
-            del pending[:size]
+        while len(pending) >= BATCH_SIZE:
+            yield pending[:BATCH_SIZE]
+            del pending[:BATCH_SIZE]
     if pending:
         yield pending
 
 
 def _writer(
-    conn_factory: ConnFactory, sql: str, batch_size: int | None = BATCH_SIZE
-) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
+    conn_factory: ConnFactory, sql: str
+) -> Callable[[Iterable[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
     """Per-partition upsert kernel: executes ``sql`` over all the Arrow
-    batches, ``batch_size`` rows per ``executemany`` + commit (the whole
-    partition in one when ``batch_size`` is None), on one
-    connection opened at the first row to write, so a partition with
+    batches as they arrive, ``BATCH_SIZE`` rows per ``executemany``, in
+    one transaction committed after the partition's last row.  The one
+    connection opens at the first row to write, so a partition with
     nothing to upsert opens none; it emits no rows."""
 
-    def write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def write(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         conn = None
         try:
-            for rows in _row_chunks(batches, batch_size):
+            for rows in _row_chunks(batches):
                 if conn is None:
                     conn = conn_factory()
                     cur = conn.cursor()
                 cur.executemany(sql, rows)
+            if conn is not None:
                 conn.commit()
         finally:
             if conn is not None:
@@ -130,7 +140,6 @@ def db_sink_upsert(
     table: str,
     key_cols: list[str],
     dialect: str = "sqlite",
-    batch_size: int = BATCH_SIZE,
     max_connections: int = 8,
 ) -> None:
     """A7: idempotent upsert of ``df`` keyed by ``key_cols``.
@@ -138,7 +147,7 @@ def db_sink_upsert(
     Safe under Spark task retries (re-running a partition rewrites the
     same final state).  ``max_connections`` caps DB fan-in.
     """
-    write = _writer(conn_factory, upsert_sql(dialect, table, df.columns, key_cols), batch_size)
+    write = _writer(conn_factory, upsert_sql(dialect, table, df.columns, key_cols))
     df.coalesce(max_connections).mapInArrow(write, "rows long").collect()
 
 
@@ -193,13 +202,13 @@ def jdbc_source(
     return reader.load()
 
 
-def jdbc_sink_append(
-    df: DataFrame, url: str, table: str, properties: dict[str, str]
+def jdbc_sink(
+    df: DataFrame, url: str, table: str, properties: dict[str, str], mode: str
 ) -> None:
-    """A6: bulk append via Spark's JDBC writer.  Exercised for real
-    against embedded Derby (driver ships on Spark's classpath) by the
-    a6_jdbc_sink_append registry entry; one connection per DataFrame
-    partition, batched inserts."""
-    df.write.mode("append").format("jdbc").option("url", url).option(
+    """A6: bulk write via Spark's JDBC writer in save ``mode`` ("append"
+    or "overwrite").  Exercised for real against embedded Derby (driver
+    ships on Spark's classpath) by a6's overwrite + append and a25's
+    rebuild; one connection per DataFrame partition, batched inserts."""
+    df.write.mode(mode).format("jdbc").option("url", url).option(
         "dbtable", table
     ).options(**properties).save()

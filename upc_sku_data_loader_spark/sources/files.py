@@ -12,11 +12,10 @@ from pyspark.sql import DataFrame, SparkSession
 from ..session import ensure_runtime_configs
 
 
-def csv_source(
-    spark: SparkSession, path: str, schema: str, header: bool = True, sep: str = ","
-) -> DataFrame:
+def csv_source(spark: SparkSession, path: str, schema: str) -> DataFrame:
+    """Comma-separated file with a header line and a pinned schema."""
     ensure_runtime_configs(spark)
-    return spark.read.schema(schema).option("header", header).option("sep", sep).csv(path)
+    return spark.read.schema(schema).option("header", True).csv(path)
 
 
 def json_source(spark: SparkSession, path: str, schema: str) -> DataFrame:
@@ -26,11 +25,12 @@ def json_source(spark: SparkSession, path: str, schema: str) -> DataFrame:
 
 
 def parquet_sink(
-    df: DataFrame, path: str, partition_by: list[str] | None = None, mode: str = "overwrite"
+    df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
-    """Partitioned parquet writer — partition columns become directory
-    keys, enabling static + dynamic partition pruning on re-read."""
-    writer = df.write.mode(mode)
+    """Partitioned parquet writer (replaces ``path``) — partition columns
+    become directory keys, enabling static + dynamic partition pruning
+    on re-read."""
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)

@@ -188,7 +188,6 @@ def _fetcher(
 
 def fetch_products(
     worklist: DataFrame,
-    upc_col: str = "upc",
     page_size: int = 100,
     base_url: str = "https://api.example.com/products",
     transport: Transport = fake_transport,
@@ -196,7 +195,8 @@ def fetch_products(
     rate_limit_per_s: float | None = None,
     rate_burst: int = 4,
 ) -> DataFrame:
-    """worklist[upc] → typed product DataFrame via paginated fetch.
+    """worklist's ``upc`` column → typed product DataFrame via paginated
+    fetch.
 
     Returns columns: upc, sku, brand, price, in_stock (PRODUCT_SCHEMA).
     Lazy: no job starts until the result is used.  The worklist is
@@ -209,7 +209,7 @@ def fetch_products(
     fetch = _fetcher(base_url, transport, auth_token, rate_limit_per_s, rate_burst)
     n_parts = worklist.sparkSession.sparkContext.defaultParallelism
     return (
-        worklist.select(F.col(upc_col).alias("upc"))
+        worklist.select("upc")
         .repartition(n_parts, "upc")
         .mapInArrow(
             lambda batches: fetch(_sorted_pages([b.column(0) for b in batches], page_size)),

@@ -17,8 +17,10 @@ width matters, its ``sf_dir``.  The foreachBatch and parquet sinks
 (i9, i12, i19) hold no memory-sink state and start their own writers.
 
 Scale note: at production scale the same code points at an object-store
-prefix; ``maxFilesPerTrigger`` bounds micro-batch size, and the
-checkpoint directory gives exactly-once with idempotent sinks.
+prefix, and the checkpoint directory gives exactly-once with idempotent
+sinks.  Each fixture table is one file, so :func:`read_events_stream`
+sets no ``maxFilesPerTrigger``; a stream over a multi-file source that
+needs bounded micro-batches sets it on its own reader, as i10 does.
 """
 
 from __future__ import annotations
@@ -70,22 +72,18 @@ def _stream_state_partitions(spark: SparkSession, sf_dir: str) -> Iterator[None]
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def read_events_stream(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
+def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_runtime_configs(spark)
     reader = spark.readStream.schema(read_schema(f"{sf_dir}/events.parquet"))
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     # Stream a glob that matches exactly the fixture file.  Listing the
     # whole sf_dir with a pathGlobFilter still runs partition DISCOVERY
     # over every sibling directory — which breaks with
     # CONFLICTING_DIRECTORY_STRUCTURES when sf_dir is a writable replica
-    # dir that also holds partitioned fixture outputs (round-6 scale
-    # sweep), and costs a full recursive listing at scale.  The trailing
-    # '*' keeps the path a glob so the source's implicit basePath stays
-    # the parent DIRECTORY (a bare file path fails "basePath must be a
-    # directory"); nothing else under an sf dir starts with this name.
+    # dir that also holds partitioned fixture outputs, and costs a full
+    # recursive listing at scale.  The trailing '*' keeps the path a
+    # glob so the source's implicit basePath stays the parent DIRECTORY
+    # (a bare file path fails "basePath must be a directory"); nothing
+    # else under an sf dir starts with this name.
     df = reader.parquet(f"{sf_dir.rstrip('/')}/events.parquet*")
     return normalize_events_ts(df)
 

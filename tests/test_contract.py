@@ -316,7 +316,6 @@ _DEPLOYMENT_OPTIONS = {
     ("load_upcs", "max_connections"): "the target database's connection budget",
     ("fetch_products", "rate_limit_per_s"): "the product API's request budget",
     ("fetch_products", "rate_burst"): "the product API's request budget",
-    ("rnd", "n"): "Column twin of rnd_sql, whose callers set n; the twins match",
 }
 
 

@@ -14,7 +14,6 @@ import pytest
 
 from upc_sku_data_loader_spark.sources.db import (
     BATCH_SIZE,
-    _py_values,
     _writer,
     db_sink_upsert,
     db_source,
@@ -179,12 +178,11 @@ def test_db_source_matches_the_list_path(spark, tmp_path, ddl, rows, schema):
 
 def test_writer_pages_into_one_transaction_per_partition(tmp_path):
     """Many small Arrow batches per partition: every ``executemany`` gets
-    at most ``BATCH_SIZE`` rows and runs while the batches still stream
-    in (the writer holds at most ``BATCH_SIZE`` pending rows, plus the
-    batch that crossed the line), each non-empty partition commits
-    exactly once after its last ``executemany``, an empty partition
-    opens no connection, and the table equals one plain upsert of every
-    row."""
+    at most ``BATCH_SIZE`` rows and runs only after the last batch is
+    read (a single-writer target's lock is never held while upstream
+    work produces batches), each non-empty partition commits exactly
+    once after its last ``executemany``, an empty partition opens no
+    connection, and the table equals one plain upsert of every row."""
     db, ref_db = str(tmp_path / "t.sqlite"), str(tmp_path / "ref.sqlite")
     for path in (db, ref_db):
         con = sqlite3.connect(path)
@@ -193,7 +191,7 @@ def test_writer_pages_into_one_transaction_per_partition(tmp_path):
         con.close()
     sql = upsert_sql("sqlite", "t", ["k", "v"], ["k"])
     calls: list[tuple[int, str, int]] = []  # (connection, call, rows)
-    streamed = {"rows": 0, "written": 0}
+    streamed = {"done": False}
 
     class Cursor:
         def __init__(self, cur, conn_id):
@@ -201,9 +199,7 @@ def test_writer_pages_into_one_transaction_per_partition(tmp_path):
 
         def executemany(self, sql, rows):
             rows = list(rows)
-            pending = streamed["rows"] - streamed["written"]
-            assert pending < BATCH_SIZE + 7, pending
-            streamed["written"] += len(rows)
+            assert streamed["done"]  # every batch read first
             calls.append((self._id, "executemany", len(rows)))
             return self._cur.executemany(sql, rows)
 
@@ -229,10 +225,10 @@ def test_writer_pages_into_one_transaction_per_partition(tmp_path):
         # 7-row batches, so a BATCH_SIZE chunk spans many of them
         for i in range(0, len(keys), 7):
             ks = keys[i : i + 7]
-            streamed["rows"] += len(ks)
             yield pa.RecordBatch.from_pydict(
                 {"k": ks, "v": [f"v{k}" if k % 5 else None for k in ks]}
             )
+        streamed["done"] = True
 
     empty = pa.RecordBatch.from_pydict(
         {"k": pa.array([], pa.int64()), "v": pa.array([], pa.string())}
@@ -245,7 +241,7 @@ def test_writer_pages_into_one_transaction_per_partition(tmp_path):
     ]
     write = _writer(Conn, sql)
     for keys in partitions:
-        streamed.update(rows=0, written=0)
+        streamed["done"] = False
         assert list(write(batches(keys))) == []
     assert list(write(iter([empty, empty]))) == []
     assert Conn.opened == 3  # neither empty partition opened one
@@ -266,31 +262,3 @@ def test_writer_pages_into_one_transaction_per_partition(tmp_path):
     ref.commit()
     ref.close()
     assert _table_state(db) == _table_state(ref_db)
-
-
-@pytest.mark.parametrize(
-    "arr",
-    [
-        pa.array(["a", None, "ü", ""]),
-        pa.array(["a", None], pa.large_string()),
-        pa.array([2**63 - 1, -(2**63), 0]),
-        pa.array([1, None, 3]),
-        pa.array([1, 2], pa.int32()),
-        pa.array([2**64 - 1], pa.uint64()),
-        pa.array([-0.0, float("nan"), float("inf"), 1e-308]),
-        pa.array([1.5, None]),
-        pa.array([0.1], pa.float32()),
-        pa.array([True, False]),
-        pa.array([True, None]),
-        pa.array([Decimal("1.25"), None], pa.decimal128(10, 2)),
-        pa.array([dt.date(1969, 12, 31), None]),
-    ],
-    ids=lambda a: f"{a.type}-{a.null_count}",
-)
-def test_py_values_match_to_pylist(arr):
-    """The writer's column conversion binds exactly what ``to_pylist``
-    gives (same values and Python types; NaN where NaN), whichever path
-    the column takes."""
-    got, want = _py_values(arr), arr.to_pylist()
-    assert [type(v) for v in got] == [type(v) for v in want]
-    assert [repr(v) for v in got] == [repr(v) for v in want]

@@ -127,9 +127,10 @@ def fsum_over_sparksql(expr: str, over: str) -> str:
     END"""
 
 
-def rnd(col: Column | str, alias: str, n: int = 4) -> Column:
+def rnd(col: Column | str, alias: str) -> Column:
+    """ROUND(col, 4): the Column twin of ``rnd_sql``'s default."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.round(c, n).alias(alias)
+    return F.round(c, 4).alias(alias)
 
 
 def rnd_sql(expr: str, alias: str, n: int = 4) -> str:

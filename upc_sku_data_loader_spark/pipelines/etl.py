@@ -32,12 +32,10 @@ each partition upserts in one transaction (``sources.db._writer``), so
 a single-writer target (sqlite) hands its write lock over once per
 partition and a retried task rewrites its whole partition; the fetch
 makes at most ``ceil(delta / page_size) + n_parts - 1`` requests.  A
-kernel holds its partition's keys and fetched pages (Arrow) in memory.
-It fetches every page before its first write, because that target holds
-its lock from the first write to the commit: writing while fetching put
-each partition's fetch behind the others' (``upc_load_cold`` on a
-4-core host: ``etl.load_s`` 1.34 → 1.76 s).  Nothing collects to the
-driver except ``n_parts`` count rows.
+kernel holds its partition's keys and fetched rows in memory: the
+writer reads every page before its first write, so no partition's fetch
+waits behind another's write lock.  Nothing collects to the driver
+except ``n_parts`` count rows.
 """
 
 from __future__ import annotations
@@ -94,9 +92,7 @@ def load_upcs(
         keys = pc.unique(pa.chunked_array(valid, pa.string()))
         seen = pc.is_in(keys, value_set=pa.chunked_array(held, pa.string()).combine_chunks())
         delta = keys.filter(pc.invert(seen))
-        # every page before the first write (see the module's scale note)
-        pages = list(fetch(_sorted_pages([delta], page_size)))
-        write(pages)  # eager: upserts every page
+        write(fetch(_sorted_pages([delta], page_size)))  # eager: upserts every page
         yield pa.RecordBatch.from_pydict(
             {"rows": [rows], "keys": [len(keys)], "seen": [seen.true_count]}
         )

@@ -17,16 +17,18 @@ risk), so:
   on Spark's classpath; on a cluster they point at MySQL/Postgres.
 
 Scale notes: one connection and one transaction per partition (NOT per
-row), ``BATCH_SIZE`` rows per ``executemany``, so the writer holds at
-most ``BATCH_SIZE`` pending rows; idempotent by primary key so Spark
-task retries are safe (at-least-once execution → exactly-once state).
+row), ``BATCH_SIZE`` rows per ``executemany``; the writer holds its
+partition's rows in memory, converted before the transaction opens, so
+the target's write lock is held only while rows are written; idempotent
+by primary key so Spark task retries are safe (at-least-once execution
+→ exactly-once state).
 Partition count bounds DB connection fan-in — ``coalesce`` before
 writing to stay under the server's connection budget.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable, Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import pyarrow as pa
@@ -72,62 +74,40 @@ def upsert_sql(dialect: str, table: str, cols: list[str], key_cols: list[str]) -
     raise ValueError(f"unknown dialect {dialect!r}")
 
 
-def _py_values(col: pa.Array) -> list:
-    """The column's values as a collected ``Row`` holds them: None for
-    NULL, and zone-aware timestamps as naive local wall time."""
-    t = col.type
-    if pa.types.is_string(t) or pa.types.is_large_string(t) or (
-        col.null_count == 0
-        and (pa.types.is_integer(t) or pa.types.is_floating(t) or pa.types.is_boolean(t))
-    ):
-        # the same values (a string column's NULLs stay None) ~10x faster
-        # than to_pylist; it runs inside the writer's open transaction
-        return col.to_numpy(zero_copy_only=False).tolist()
-    values = col.to_pylist()
-    if pa.types.is_timestamp(t) and t.tz is not None:
-        values = [v if v is None else v.astimezone().replace(tzinfo=None) for v in values]
-    return values
-
-
 def _py_rows(batch: pa.RecordBatch) -> list[tuple]:
-    """The batch's rows as the Python values a collected ``Row`` holds."""
-    return list(zip(*map(_py_values, batch.columns)))
-
-
-def _row_chunks(batches: Iterable[pa.RecordBatch]) -> Iterator[list[tuple]]:
-    """The batches' rows (as :func:`_py_rows`) in lists of ``BATCH_SIZE``;
-    the last may be shorter, and no list is empty."""
-    pending: list[tuple] = []
-    for batch in batches:
-        pending.extend(_py_rows(batch))
-        while len(pending) >= BATCH_SIZE:
-            yield pending[:BATCH_SIZE]
-            del pending[:BATCH_SIZE]
-    if pending:
-        yield pending
+    """The batch's rows as the Python values a collected ``Row`` holds:
+    None for NULL, and zone-aware timestamps as naive local wall time."""
+    cols = []
+    for col in batch.columns:
+        values = col.to_pylist()
+        if pa.types.is_timestamp(col.type) and col.type.tz is not None:
+            values = [v if v is None else v.astimezone().replace(tzinfo=None) for v in values]
+        cols.append(values)
+    return list(zip(*cols))
 
 
 def _writer(
     conn_factory: ConnFactory, sql: str
-) -> Callable[[Iterable[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
-    """Per-partition upsert kernel: executes ``sql`` over all the Arrow
-    batches as they arrive, ``BATCH_SIZE`` rows per ``executemany``, in
-    one transaction committed after the partition's last row.  The one
-    connection opens at the first row to write, so a partition with
-    nothing to upsert opens none; it emits no rows."""
+) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
+    """Per-partition upsert kernel: reads and converts all the Arrow
+    batches first, then executes ``sql`` over the rows, ``BATCH_SIZE``
+    per ``executemany``, in one transaction committed after the last.
+    A single-writer target (sqlite) holds its write lock from the first
+    ``executemany`` to the commit, so nothing upstream (a fetch, a scan,
+    a micro-batch) runs while the lock is held.  The one connection
+    opens only when there are rows, so a partition with nothing to
+    upsert opens none; it emits no rows."""
 
-    def write(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        conn = None
-        try:
-            for rows in _row_chunks(batches):
-                if conn is None:
-                    conn = conn_factory()
-                    cur = conn.cursor()
-                cur.executemany(sql, rows)
-            if conn is not None:
+    def write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        rows = [row for batch in batches for row in _py_rows(batch)]
+        if rows:
+            conn = conn_factory()
+            try:
+                cur = conn.cursor()
+                for i in range(0, len(rows), BATCH_SIZE):
+                    cur.executemany(sql, rows[i : i + BATCH_SIZE])
                 conn.commit()
-        finally:
-            if conn is not None:
+            finally:
                 conn.close()
         return iter(())
 
